@@ -1,0 +1,11 @@
+package org.apache.spark.perfbench
+
+import org.apache.spark.SparkContext
+
+/** Access to the listener bus's drain, which Spark keeps package-private:
+  * span rollups read listener state only after every event posted so far
+  * has been delivered.
+  */
+object Bus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
