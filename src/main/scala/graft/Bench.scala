@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.harness.QueryCatalog
 
 /** Benchmark main: times the headline queries on SPARK_GRAFT_SF_DIR and
@@ -14,16 +12,8 @@ import graft.harness.QueryCatalog
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.sources.Tables
-      .configure(
-        SparkSession.builder()
-          .master(s"local[$cpus]")
-          .config("spark.sql.shuffle.partitions", cpus)
-          .config("spark.ui.enabled", "false")
-          .config("spark.sql.adaptive.enabled", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Sessions.envCpus(32)
+    val spark = Sessions.local(cpus)
 
     val names = QueryCatalog.benchNames
     val fns = QueryCatalog.queries

@@ -20,6 +20,13 @@ object Query {
     * with a full scan (query.py:110-115); loaders built with
     * `PredicateFrames.collapse` guarantee it by construction, so the scan
     * is opt-in here (`validateUnique`).
+    *
+    * Under `spark.graft.checkpoint=local|reliable` (the default is local)
+    * the result is materialized before this returns, and the canonical
+    * frame's cache is released on every path, failures included. Under
+    * `off` the result is a lazy plan over the uncached input: nothing is
+    * persisted, so nothing needs releasing, and every action re-runs the
+    * whole query — cache it yourself if you act on it more than once.
     */
   def apply(cfg: TaskConfig, predicatesDf: DataFrame, validateUnique: Boolean = false): DataFrame = {
     if (validateUnique) {
@@ -35,7 +42,9 @@ object Query {
       else predicatesDf.na.drop(Seq("subject_id", "timestamp"))
 
     // The filtered frame is scanned once per tree edge (every window agg
-    // reads it) plus once for trigger anchors — persist it for the run.
+    // reads it) plus once for trigger anchors — persist it for the run
+    // (unless checkpointing is off: the result then stays lazy, and a
+    // cache would outlive this call with no one to release it).
     // MEMORY_AND_DISK: spills rather than OOMs at scale; the frame is the
     // narrow post-collapse predicate matrix, far smaller than raw input.
     // Pre-materialize the epoch-micros ordering key and sort within
@@ -61,9 +70,24 @@ object Query {
           keyed.columns.map(col).toSeq ++
             predCols.map(c => sum(col(c)).over(wCum).as(s"__cum_$c")): _*)
       } else keyed
-    val filtered = enriched
-      .sortWithinPartitions(col("subject_id"), col(tsUs))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sorted = enriched.sortWithinPartitions(col("subject_id"), col(tsUs))
+    if (graft.plans.Materialize.mode(sorted) == "off") extract(cfg, sorted)
+    else {
+      val filtered = sorted.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // Materialize the (cohort-sized, small) result eagerly, then release
+      // the canonical-frame cache whether or not that succeeded: a leaked
+      // entry per call is BENCH_r01's "Asked to cache already cached data"
+      // tail and masks timing. Mirrors the reference's eager execution
+      // (query() returns a computed frame, query.py:142-151).
+      try graft.plans.Materialize(extract(cfg, filtered), eager = true)
+      finally filtered.unpersist(blocking = false)
+    }
+  }
+
+  /** Anchors, window tree and label/index projection over the canonical
+    * frame `filtered`.
+    */
+  private def extract(cfg: TaskConfig, filtered: DataFrame): DataFrame = {
 
     // Trigger anchors (reference: query.py:133-140).
     val anchors = Constraints
@@ -105,18 +129,7 @@ object Query {
     }
 
     val ordered = headCols ++ Seq("trigger") ++ cfg.preorderWindowNames.map(_ + "_summary")
-    val projected = out.select(ordered.map(c => col(s"`$c`")): _*)
-
-    // Materialize the (cohort-sized, small) result eagerly and release the
-    // canonical-frame cache: per-call persist without unpersist leaks a
-    // cache entry per query run — BENCH_r01's "Asked to cache already
-    // cached data" tail — and masks timing. Mirrors the reference's eager
-    // execution (query() returns a computed frame, query.py:142-151).
-    if (graft.plans.Materialize.mode(projected) != "off") {
-      val result = graft.plans.Materialize(projected, eager = true)
-      filtered.unpersist(blocking = false)
-      result
-    } else projected
+    out.select(ordered.map(c => col(s"`$c`")): _*)
   }
 
   /** Coerce a query result to the fixed MEDS label output schema

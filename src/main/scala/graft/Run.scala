@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 
 import graft.config.TaskConfig
-import graft.sources.{PredicateFrames, Tables}
+import graft.sources.PredicateFrames
 
 /** End-to-end task runner — the `aces-cli` equivalent
   * (reference: src/aces/run.py:121-180).
@@ -148,14 +148,7 @@ object Run {
     // One session for the whole (multi)run; runWithOpts leaves
     // caller-owned sessions running (and so does this, for tests).
     val preexisting = SparkSession.getDefaultSession.isDefined
-    val spark = Tables
-      .configure(
-        SparkSession.builder()
-          .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-          .config("spark.sql.shuffle.partitions",
-            sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-          .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = session()
     if (shards.size > 1 && kv.contains("output_filepath"))
       // Hydra parity: an explicit literal output_filepath has no
       // ${data._prefix} interpolation, so every shard writes the same
@@ -176,6 +169,13 @@ object Run {
     } finally if (!preexisting) spark.stop()
   }
 
+  /** `SPARK_MASTER` (default `local[*]`) with `SPARK_GRAFT_CPUS` (default
+    * 32) shuffle partitions.
+    */
+  private def session(): SparkSession =
+    Sessions.local(Sessions.envCpus(32),
+      "spark.master" -> sys.env.getOrElse("SPARK_MASTER", "local[*]"))
+
   def runWithOpts(opts: Map[String, String]): Unit = {
     val configPath = opts.getOrElse("config", sys.error("--config is required"))
     val dataPath = opts.getOrElse("data", sys.error("--data is required"))
@@ -183,15 +183,7 @@ object Run {
     val outPath = opts.getOrElse("output", "/tmp/graft_result.parquet")
 
     val preexisting = SparkSession.getDefaultSession.isDefined
-    val spark = Tables
-      .configure(
-        SparkSession.builder()
-          .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-          .config("spark.sql.shuffle.partitions",
-            sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-          .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
 
     val cfg = TaskConfig.fromYaml(
       Files.readString(Paths.get(configPath)),

@@ -1,21 +1,23 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, the inputs of the DuckDB oracle compare.
+  *
+  * Usage: `runMain graft.Verify <sfDir> <outDir> [name...]`. Naming
+  * entries restricts the dump, and oracle_sql.json, to them — the inner
+  * loop for one operator and its oracle; `scripts/check_correctness.py
+  * <outDir>` gates either layout unchanged.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    require(args.length >= 2, "usage: Verify <sfDir> <outDir> [name...]")
+    val (sfDir, outDir, names) = (args(0), args(1), args.drop(2).toSeq)
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown catalog entries: ${unknown.mkString(", ")}")
+    val keep: String => Boolean = if (names.isEmpty) _ => true else names.toSet
+    val spark = Sessions.local(Sessions.envCpus(4))
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
+    SparkEntry.queries.filter { case (name, _) => keep(name) }.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -34,7 +36,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter { case (k, _) => keep(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -69,9 +69,6 @@ final case class TaskConfig(
   def plainPredicates: Map[String, PlainPredicateDef] =
     predicates.collect { case (n, p: PlainPredicateDef) => n -> p }
 
-  def staticPredicateNames: Seq[String] =
-    windows.flatMap(_ => Nil) ++ predicates.collect { case (n, p) if p.static => n }
-
   // --- label / index-timestamp windows (reference: config.py:1533-1562) ----
   val labelWindow: Option[String] = {
     val ls = windows.collect { case (n, w) if w.label.nonEmpty => n }

@@ -14,9 +14,11 @@ package graft.functions
   */
 private[functions] object VocabGuard {
 
-  def check(vocabLimit: Int, caller: String): Unit = {
-    val max = org.apache.spark.sql.SparkSession.getActiveSession
-      .flatMap(_.conf.getOption("spark.graft.vocab.maxDriverRows"))
+  /** @param spark the session of the frame being learned from — its conf,
+    *              not the thread's active session's, sets the ceiling.
+    */
+  def check(spark: org.apache.spark.sql.SparkSession, vocabLimit: Int, caller: String): Unit = {
+    val max = spark.conf.getOption("spark.graft.vocab.maxDriverRows")
       .map(_.toLong).getOrElse(10000000L)
     require(vocabLimit > 0, s"$caller: vocabLimit must be positive, got $vocabLimit")
     require(vocabLimit <= max,

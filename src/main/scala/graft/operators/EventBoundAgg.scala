@@ -97,21 +97,11 @@ object EventBoundAgg {
       .orderBy(TsUs)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     // Offset-correction sums as window columns (see `offsetFrame`): the
-    // [[TemporalWindowAgg]] difference-of-prefix-sums formulation,
-    // `S(t+hi) − S(t+lo−1µs)` over growing range frames — both frames
-    // share this select's (partitionBy, orderBy) and evaluate in the
-    // same WindowExec pass group, no extra shuffle or sort.
+    // [[TemporalWindowAgg.frameSums]] difference of prefix sums — its
+    // frames share this select's (partitionBy, orderBy) and evaluate in
+    // the same WindowExec pass group, no extra shuffle or sort.
     val offCols: Seq[Column] = offsetFrame.toSeq.flatMap { case (lo, hi) =>
-      if (lo > hi) predCols.map(c => lit(0L).as(s"__off_$c"))
-      else {
-        val wHi = Window.partitionBy("subject_id").orderBy(TsUs)
-          .rangeBetween(Window.unboundedPreceding, hi)
-        val wBelowLo = Window.partitionBy("subject_id").orderBy(TsUs)
-          .rangeBetween(Window.unboundedPreceding, lo - 1)
-        predCols.map(c =>
-          (coalesce(sum(col(c)).over(wHi), lit(0L)) -
-            coalesce(sum(col(c)).over(wBelowLo), lit(0L))).cast("long").as(s"__off_$c"))
-      }
+      TemporalWindowAgg.frameSums(predCols, lo, hi, c => s"__off_$c")
     }
     val withCum = withTs
       .withColumn("__is_boundary", boundaryExpr)

@@ -63,7 +63,6 @@ object Multimodal {
     * AQE for no reason.)
     */
   def nBytes(payload: Column): Column = coalesce(octet_length(payload), lit(0)).cast(LongType)
-  def payloadChecksum(payload: Column): Column = xxhash64(payload)
 
   private val featureSchema: StructType = StructType(Seq(
     StructField("media_id", LongType, nullable = false),

@@ -238,8 +238,8 @@ object ProductQuant {
     // groups the per-mi fits aggregated, with the same per-partition
     // accumulation order (explode preserves row order), so results are
     // bit-identical modulo the aggregate merge-order ulp the fits
-    // already carry run-to-run (parity asserted in PqFitProbe and the
-    // golden suite).
+    // already carry run-to-run (parity checked against the per-mi fits,
+    // OPTIMIZATION_r16, and asserted by the golden suite).
     val sbAll = fitBase.select(
       col("id"),
       posexplode(array((0 until m).map(mi =>

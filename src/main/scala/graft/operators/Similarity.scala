@@ -187,8 +187,8 @@ object Similarity {
     // interpreted transform + full comparator sort — the assignment
     // needs only the winner, and at nlist=√N candidates per corpus row
     // the per-element lambda interpretation and struct allocation were
-    // the Lloyd pass's measured CPU (480 s task-time on the 50×
-    // CoreScaleProbe corpus, core-ratio-flattening allocator pressure).
+    // the Lloyd pass's measured CPU (480 s task-time on a 50×-replicated
+    // corpus, core-ratio-flattening allocator pressure; OPTIMIZATION_r17).
     // Same winner by construction: cosine arithmetic is the identical
     // expression, selection is the byScoreDesc total order (csim desc,
     // cid asc). scoredCentroids remains for the probe paths, which need

@@ -37,14 +37,4 @@ object SnapshotDiff {
           .when(col("h_before") =!= col("h_after"), "changed")
           .otherwise("unchanged").as("status"))
   }
-
-  /** The one-row-per-class rollup of [[diff]]: `(status, n)`. */
-  def diffSummary(
-      before: DataFrame,
-      after: DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text"
-  ): DataFrame =
-    diff(before, after, idCol, textCol)
-      .groupBy("status").agg(count(lit(1)).as("n"))
 }

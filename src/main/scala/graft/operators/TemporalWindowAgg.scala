@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -56,30 +56,9 @@ object TemporalWindowAgg {
       if (df.columns.contains(TsUs)) df
       else df.withColumn(TsUs, unix_micros(col("timestamp")))
 
-    val out =
-      if (lo > hi) {
-        // Degenerate frame (e.g. zero-length window with an open endpoint):
-        // empty aggregation set for every row.
-        withTs.select(
-          Seq(col("subject_id"), col("timestamp"), col(TsUs)) ++
-            predCols.map(c => lit(0L).as(c)): _*
-        )
-      } else {
-        val wHi = Window
-          .partitionBy("subject_id")
-          .orderBy(TsUs)
-          .rangeBetween(Window.unboundedPreceding, hi)
-        val wBelowLo = Window
-          .partitionBy("subject_id")
-          .orderBy(TsUs)
-          .rangeBetween(Window.unboundedPreceding, lo - 1)
-        withTs.select(
-          Seq(col("subject_id"), col("timestamp"), col(TsUs)) ++
-            predCols.map(c =>
-              (coalesce(sum(col(c)).over(wHi), lit(0L)) -
-                coalesce(sum(col(c)).over(wBelowLo), lit(0L))).cast("long").as(c)): _*
-        )
-      }
+    val out = withTs.select(
+      Seq(col("subject_id"), col("timestamp"), col(TsUs)) ++
+        frameSums(predCols.toSeq, lo, hi, identity): _*)
 
     out.select(
       Seq(
@@ -91,4 +70,28 @@ object TemporalWindowAgg {
       ) ++ predCols.map(col): _*
     )
   }
+
+  /** Each predicate column's sum over the inclusive µs frame `[t+lo,
+    * t+hi]` around every row, as `S(t+hi) − S(t+lo−1µs)` over growing
+    * frames (see the object doc), each named `name(c)`. A degenerate
+    * frame (`lo > hi`, e.g. a zero-length window with an open endpoint)
+    * sums to 0. Every frame here shares (partitionBy subject_id, orderBy
+    * [[TsUs]]), so the sums of any number of calls in one select
+    * evaluate in one WindowExec pass.
+    */
+  def frameSums(predCols: Seq[String], lo: Long, hi: Long, name: String => String): Seq[Column] =
+    if (lo > hi) predCols.map(c => lit(0L).as(name(c)))
+    else {
+      val wHi = Window
+        .partitionBy("subject_id")
+        .orderBy(TsUs)
+        .rangeBetween(Window.unboundedPreceding, hi)
+      val wBelowLo = Window
+        .partitionBy("subject_id")
+        .orderBy(TsUs)
+        .rangeBetween(Window.unboundedPreceding, lo - 1)
+      predCols.map(c =>
+        (coalesce(sum(col(c)).over(wHi), lit(0L)) -
+          coalesce(sum(col(c)).over(wBelowLo), lit(0L))).cast("long").as(name(c)))
+    }
 }

@@ -83,19 +83,7 @@ object ExtractSubtree {
           else predicatesDf.withColumn(TsUs, unix_micros(col("timestamp")))
         val fusedCols = fusableTemporal.zipWithIndex.flatMap { case ((_, tb), i) =>
           val (lo, hi) = tb.inclusiveFrame
-          val sums =
-            if (lo > hi) predCols.map(c => lit(0L).as(s"__f${i}_$c"))
-            else {
-              val wHi = org.apache.spark.sql.expressions.Window
-                .partitionBy("subject_id").orderBy(TsUs)
-                .rangeBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, hi)
-              val wLo = org.apache.spark.sql.expressions.Window
-                .partitionBy("subject_id").orderBy(TsUs)
-                .rangeBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, lo - 1)
-              predCols.map(c =>
-                (coalesce(sum(col(c)).over(wHi), lit(0L)) -
-                  coalesce(sum(col(c)).over(wLo), lit(0L))).cast("long").as(s"__f${i}_$c"))
-            }
+          val sums = TemporalWindowAgg.frameSums(predCols, lo, hi, c => s"__f${i}_$c")
           sums ++ Seq(
             timestamp_micros(col(TsUs) + lit(tb.offsetMicros)).as(s"__f${i}_ts_start"),
             timestamp_micros(col(TsUs) + lit(tb.offsetMicros + tb.windowMicros)).as(s"__f${i}_ts_end"))

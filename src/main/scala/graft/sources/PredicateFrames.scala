@@ -98,9 +98,6 @@ object PredicateFrames {
     collapse(withPreds, plain.map(_._1))
   }
 
-  def fromMedsPath(spark: SparkSession, path: String, plain: Seq[(String, PlainPredicateDef)]): DataFrame =
-    fromMeds(spark.read.parquet(path), plain)
-
   /** ESGPT standard: subjects + events + dynamic measurements, joined on
     * `event_id`; static predicates become null-timestamp rows.
     * (reference: predicates.py:291-418 `process_esgpt_data`)

@@ -49,20 +49,21 @@ object Tables {
     * langid probe); scheduling overhead per extra task (~5–10 ms) is two
     * orders below the serialized-stage cost it prevents.
     */
+  private val sessionConfs = Seq(
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.requireAllClusterKeysForCoPartition" -> "false",
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "16k")
+
+  /** The settings above on a session builder (see [[graft.Sessions]]). */
   def configure(b: SparkSession.Builder): SparkSession.Builder =
-    b.config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
+    sessionConfs.foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }
 
   /** Same settings for an externally-created session (driver harness):
     * every conf here is runtime-settable SQLConf.
     */
   def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
+    sessionConfs.foreach { case (k, v) => spark.conf.set(k, v) }
     spark
   }
 

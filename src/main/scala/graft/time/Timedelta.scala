@@ -67,16 +67,4 @@ object Timedelta {
         sign * math.round(total)
     }
   }
-
-  /** Render microseconds as a Spark-friendly day-time interval string (debugging). */
-  def toHuman(us: Long): String = {
-    val sign = if (us < 0) "-" else ""
-    var rest = math.abs(us)
-    val d = rest / 86400000000L; rest %= 86400000000L
-    val h = rest / 3600000000L; rest %= 3600000000L
-    val m = rest / 60000000L; rest %= 60000000L
-    val s = rest / 1000000L
-    val micro = rest % 1000000L
-    s"$sign${d}d ${h}h ${m}m ${s}s ${micro}us"
-  }
 }

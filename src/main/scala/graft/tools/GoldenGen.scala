@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.harness.{GoldenFormat, QueryCatalog}
 
 /** Regenerates the committed golden fixtures for the catalog entries in
@@ -19,14 +17,7 @@ object GoldenGen {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outDir = args.lift(1).getOrElse("/root/repo/src/test/resources/goldens")
-    val spark = graft.sources.Tables
-      .configure(
-        SparkSession.builder()
-          .master("local[8]")
-          .config("spark.sql.shuffle.partitions", "8")
-          .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(8)
 
     Files.createDirectories(Paths.get(outDir))
     GoldenFormat.goldenNames.foreach { name =>

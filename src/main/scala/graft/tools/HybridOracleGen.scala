@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{IvfPqIndex, ProductQuant}
@@ -26,12 +25,7 @@ import graft.operators.{IvfPqIndex, ProductQuant}
 object HybridOracleGen {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local(8)
     spark.sparkContext.setLogLevel("ERROR")
     val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val fp = e.agg(bit_xor(xxhash64(col("vec_id"), col("embedding").cast("string"))))

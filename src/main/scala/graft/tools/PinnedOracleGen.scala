@@ -34,12 +34,7 @@ object PinnedOracleGen {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outFile = args.lift(1)
       .getOrElse("src/main/scala/graft/harness/PinnedOracles.scala")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local(8)
     spark.sparkContext.setLogLevel("ERROR")
     val rendered = render(spark, sfDir)
     java.nio.file.Files.write(

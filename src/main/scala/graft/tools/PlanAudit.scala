@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.model.{EventBounds, TemporalBounds}
@@ -27,16 +27,9 @@ object PlanAudit {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = Tables
-      .configure(
-        SparkSession.builder()
-          .master("local[8]")
-          .config("spark.sql.shuffle.partitions", "8")
-          .config("spark.ui.enabled", "false")
-          // plan-shape audit: AQE rewrites plans at runtime, disable for
-          // a stable static view
-          .config("spark.sql.adaptive.enabled", "false"))
-      .getOrCreate()
+    // plan-shape audit: AQE rewrites plans at runtime, disable for a
+    // stable static view
+    val spark = graft.Sessions.local(8, "spark.sql.adaptive.enabled" -> "false")
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.001"
 

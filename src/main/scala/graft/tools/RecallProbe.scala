@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, ProductQuant, Similarity}
@@ -26,13 +26,7 @@ object RecallProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outFile = args.drop(1).headOption.getOrElse("RECALL.json")
-    val spark = Tables
-      .configure(
-        SparkSession.builder()
-          .master("local[8]")
-          .config("spark.sql.shuffle.partitions", "8")
-          .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = graft.Sessions.local(8)
     spark.sparkContext.setLogLevel("ERROR")
 
     val emb = Tables.table(spark, sfDir, "embeddings")

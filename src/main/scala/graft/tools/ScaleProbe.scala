@@ -1,9 +1,8 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Sessions
 import graft.config.TaskConfig
 import graft.sources.{PredicateFrames, Tables}
 
@@ -17,7 +16,7 @@ import graft.sources.{PredicateFrames, Tables}
   * Args: [replication] [--no-checkpoint] [--stages] [--skew] [--runs N]
   *       [--bucketed]
   *   --no-checkpoint  disable per-level lineage cuts (ExtractSubtree)
-  *   --stages         print per-stage wall times of the timed run
+  *   --stages         per-stage breakdown of the timed runs (Probe.StageLog)
   *   --skew           inject a pathological subject owning ~10% of events
   *   --runs N         timed end-to-end runs (default 3); reports median
   *   --bucketed       ingest-once mode: collapse once into a bucketed,
@@ -35,19 +34,13 @@ object ScaleProbe {
       case Array("--runs", n) => n.toInt
     }.getOrElse(3)
     val bucketed = args.contains("--bucketed")
-    val spark = Tables
-      .configure(
-        SparkSession.builder()
-          .master("local[32]")
-          .config("spark.sql.shuffle.partitions", "64")
-          // The ~130 MB single-file probe input would scan as 4 tasks at
-          // the 128 MB default — probe-local parallelism knob only (a real
-          // cluster's many files parallelize naturally and a lower global
-          // value would explode task counts at 100 TB).
-          .config("spark.sql.files.maxPartitionBytes", "16m")
-          .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(32,
+      "spark.sql.shuffle.partitions" -> "64",
+      // The ~130 MB single-file probe input would scan as 4 tasks at
+      // the 128 MB default — probe-local parallelism knob only (a real
+      // cluster's many files parallelize naturally and a lower global
+      // value would explode task counts at 100 TB).
+      "spark.sql.files.maxPartitionBytes" -> "16m")
 
     // v2: written as 64 files — a 100 TB corpus arrives as many files; a
     // 4-file input caps the initial scan at 4 tasks and measures the
@@ -77,16 +70,8 @@ object ScaleProbe {
     val cfg = TaskConfig.fromYaml(flagshipYaml)
     spark.conf.set("spark.graft.checkpoint", if (noCheckpoint) "off" else "local")
 
-    val stageTimes = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Long, Int)]()
-    @volatile var record = false
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = if (record) {
-        val i = sc.stageInfo
-        val ms = (for { s <- i.submissionTime; c <- i.completionTime } yield c - s).getOrElse(-1L)
-        val ops = i.rddInfos.flatMap(_.scope).map(_.name).distinct.mkString(">")
-        stageTimes.add((i.stageId, ops, ms, i.numTasks))
-      }
-    })
+    val stageLog = new Probe.StageLog
+    if (printStages) spark.sparkContext.addSparkListener(stageLog)
 
     // --bucketed: pay the collapse ONCE into a bucketed, sorted table;
     // timed runs then read it with zero ingest shuffle — the repeated-
@@ -126,11 +111,10 @@ object ScaleProbe {
     val heapPools = ManagementFactory.getMemoryPoolMXBeans.asScala
       .filter(_.getType == MemoryType.HEAP)
     heapPools.foreach(_.resetPeakUsage())
-    record = true
+    stageLog.recording = printStages
     // Median of N: this box is shared and same-config runs vary ±50%; every
     // run is a full end-to-end execution (Query releases its own caches).
     val timed = (1 to nRuns).map(_ => run())
-    record = false
     val rows = timed.head._1
     val sorted = timed.map(_._2).sorted
     val secs = sorted(sorted.length / 2)
@@ -139,14 +123,7 @@ object ScaleProbe {
       f"bucketed=$bucketed " +
       f"rows=$rows wall=${secs}%.1f s (median of $nRuns: ${sorted.map(s => f"$s%.1f").mkString("/")}) " +
       f"throughput=${rows / secs / 1e6}%.3f M rows/s peakHeap=${peakHeapMb} MB")
-    if (printStages) {
-      import scala.jdk.CollectionConverters._
-      val ts = stageTimes.asScala.toSeq.sortBy(-_._3)
-      println(f"[scale-probe] ${ts.size} stages, sum-of-stage-wall=${ts.map(_._3).sum / 1e3}%.1f s")
-      ts.take(20).foreach { case (id, name, ms, n) =>
-        println(f"  stage $id%4d $ms%6d ms $n%4d tasks  $name")
-      }
-    }
+    if (printStages) stageLog.report("[scale-probe]")
     spark.stop()
   }
 

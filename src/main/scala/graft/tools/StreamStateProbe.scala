@@ -2,7 +2,7 @@ package graft.tools
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -70,18 +70,10 @@ object StreamStateProbe {
     // production cluster runs when state outgrows executor heaps (same
     // rows/key-population checks; the size metric becomes SST bytes).
     val rocksdb = args.contains("--rocksdb")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    val spark = Tables
-      .configure(
-        if (rocksdb)
-          b0.config("spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        else b0)
-      .getOrCreate()
+    val spark = graft.Sessions.local(graft.Sessions.envCpus(8),
+      (if (rocksdb) Seq("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      else Nil): _*)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Vocabulary}
@@ -27,14 +27,7 @@ object TextScaleProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val midCopies = args.lift(1).map(_.toInt).getOrElse(10)
     val bigCopies = args.lift(2).map(_.toInt).getOrElse(50)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Tables
-      .configure(
-        SparkSession.builder()
-          .master(s"local[$cpus]")
-          .config("spark.sql.shuffle.partitions", cpus)
-          .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = graft.Sessions.local(graft.Sessions.envCpus(32))
     spark.sparkContext.setLogLevel("ERROR")
 
     val base = Tables.table(spark, sfDir, "documents").select("doc_id", "text")

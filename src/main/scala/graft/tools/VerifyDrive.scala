@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.model.{EventBounds, TemporalBounds}
@@ -12,14 +11,7 @@ import graft.time.Timedelta
   */
 object VerifyDrive {
   def main(args: Array[String]): Unit = {
-    val spark = graft.sources.Tables
-      .configure(
-        SparkSession.builder()
-          .master("local[4]")
-          .config("spark.sql.shuffle.partitions", "4")
-          .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(4)
 
     val preds = graft.sources.Tables.eventsAsPredicates(
       spark, "/root/testdata/sf0.001", Seq("click", "purchase", "error"))

@@ -162,43 +162,6 @@ case class FloatVectorDot(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Pack an `array<int>` of small codes into a `binary` column, one byte
-  * per element (values taken mod 256) — the production PQ code layout
-  * (ks ≤ 256 codewords → 1 byte/subspace → m bytes/vector, vs ~4·m + 16
-  * for the `array<int>` form). Same design notes as [[FloatVectorCosine]].
-  */
-case class IntArrayToBytes(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(IntegerType))
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "int_array_to_bytes"
-
-  override protected def nullSafeEval(a: Any): Any = {
-    val arr = a.asInstanceOf[ArrayData]
-    val out = new Array[Byte](arr.numElements())
-    var i = 0
-    while (i < out.length) { out(i) = (arr.getInt(i) & 0xff).toByte; i += 1 }
-    out
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val out = ctx.freshName("out")
-      s"""
-      |int $n = $a.numElements();
-      |byte[] $out = new byte[$n];
-      |for (int $i = 0; $i < $n; $i++) { $out[$i] = (byte)($a.getInt($i) & 0xff); }
-      |${ev.value} = $out;
-      |""".stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): IntArrayToBytes =
-    copy(child = newChild)
-}
-
 /** The PQ ADC hot-path in ONE codegen'd loop: score = Σᵢ
   * tab[offsets(i) + codes(i)] over the packed byte codes — `m` array
   * lookups per candidate pair with zero per-subspace expression
@@ -549,10 +512,6 @@ object VectorExpressions {
   def dot(a: Column, b: Column): Column =
     ExpressionUtils.column(
       FloatVectorDot(ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
-
-  /** Pack an `array<int>` of codes (each < 256) into one byte each. */
-  def packBytes(codes: Column): Column =
-    ExpressionUtils.column(IntArrayToBytes(ExpressionUtils.expression(codes)))
 
   /** Codegen'd PQ ADC score over packed byte codes and a flattened
     * per-query lookup table, with constant per-subspace offsets.
