@@ -290,51 +290,50 @@ object PredicateFrames {
         .repartition(col("subject_id"))
   }
 
+  private val SkewFactor = 0.5
+  private val DupFactor = 0.6
+
   /** Pick the collapse strategy from cheap input statistics.
     *
-    * 1. Catalyst size estimate below `spark.graft.collapse.smallInputBytes`
-    *    (default 32 MB): `direct` — at that size a straggler task cannot
-    *    matter and a sampling job would cost more than it saves.
+    * 1. Catalyst size estimate at or below `smallInputBytes` (default
+    *    32 MB): `direct` — at that size a straggler task cannot matter
+    *    and a sampling job would cost more than it saves.
     * 2. Otherwise, one scalar-aggregate job over a column-pruned sample
-    *    (`spark.graft.collapse.sampleFraction`, default 0.002, of just
-    *    (subject_id, timestamp)) measures:
+    *    of just (subject_id, timestamp) — `sampleFraction`, default
+    *    0.002; 1.0 with `smallInputBytes = 0` decides a tiny frame
+    *    deterministically — measures:
     *      - subject skew: the largest subject's estimated row share ×
-    *        shuffle partitions — if it exceeds
-    *        `spark.graft.collapse.skewFactor` (default 0.5, i.e. one
+    *        shuffle partitions — if it exceeds `SkewFactor` (0.5: one
     *        subject owning >50% of an average partition), the direct
     *        path's hash(subject) exchange would straggle → `skew-safe`.
     *      - duplication: sampled distinct-(subject,ts) share below
-    *        `spark.graft.collapse.dupFactor` (default 0.6) means the
-    *        full-key first phase's map-side combine shrinks the shuffle
-    *        below what direct moves → `skew-safe`. (Fraction sampling
-    *        only surfaces heavy duplication — exactly the case where the
-    *        combine pays.)
+    *        `DupFactor` (0.6) means the full-key first phase's map-side
+    *        combine shrinks the shuffle below what direct moves →
+    *        `skew-safe`. (Fraction sampling only surfaces heavy
+    *        duplication — exactly the case where the combine pays.)
     *
     * This is a planning-time statistics job (one scalar row to the
     * driver), not per-row driver processing — the same class of
     * decision AQE makes from runtime shuffle stats, taken one stage
     * earlier than AQE can (the choice changes the plan's first exchange).
     */
-  def chooseCollapseMode(typed: DataFrame): String = {
-    val conf = typed.sparkSession.conf
-    val smallBytes =
-      conf.get("spark.graft.collapse.smallInputBytes", (32L << 20).toString).toLong
-    if (typed.queryExecution.optimizedPlan.stats.sizeInBytes <= smallBytes) return "direct"
-    val fraction = conf.get("spark.graft.collapse.sampleFraction", "0.002").toDouble
-    val skewFactor = conf.get("spark.graft.collapse.skewFactor", "0.5").toDouble
-    val dupFactor = conf.get("spark.graft.collapse.dupFactor", "0.6").toDouble
-    val parts = conf.get("spark.sql.shuffle.partitions", "200").toInt
+  def chooseCollapseMode(
+      typed: DataFrame,
+      smallInputBytes: Long = 32L << 20,
+      sampleFraction: Double = 0.002): String = {
+    if (typed.queryExecution.optimizedPlan.stats.sizeInBytes <= smallInputBytes) return "direct"
+    val parts = typed.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt
     val stats = typed
       .select("subject_id", "timestamp")
-      .sample(withReplacement = false, fraction, seed = 41)
+      .sample(withReplacement = false, sampleFraction, seed = 41)
       .groupBy("subject_id")
       .agg(count(lit(1)).as("n"), count_distinct(col("timestamp")).as("d"))
       .agg(sum("n"), max("n"), sum("d"))
       .head()
     if (stats.isNullAt(0) || stats.getLong(0) == 0L) return "direct"
     val (total, maxN, dist) = (stats.getLong(0), stats.getLong(1), stats.getLong(2))
-    val skewed = maxN.toDouble * parts / total > skewFactor
-    val dupHeavy = dist.toDouble / total < dupFactor
+    val skewed = maxN.toDouble * parts / total > SkewFactor
+    val dupHeavy = dist.toDouble / total < DupFactor
     if (skewed || dupHeavy) "skew-safe" else "direct"
   }
 

@@ -1,26 +1,30 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
+import scala.collection.mutable.ArrayBuffer
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, KeyValueGroupedDataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Structured Streaming ingestion for event-stream predicate processing —
-  * the incremental path the reference lacks (its "streaming" is
-  * stream-shaped data, batch execution; SURVEY.md §2.10 marks this as the
-  * post-parity extension).
+/** Structured Streaming faces of the batch operators — the incremental
+  * path the reference lacks (its "streaming" is stream-shaped data, batch
+  * execution; SURVEY.md §2.10 marks this as the post-parity extension).
   *
-  * Two building blocks:
-  *   - [[windowedCounts]]: watermarked tumbling-window predicate counts —
-  *     the streaming analogue of the same-instant collapse + temporal
-  *     bucketing. Late events beyond the watermark are dropped; state is
-  *     bounded by (watermark horizon × subjects-per-window).
-  *   - [[cumulativeCounts]]: per-subject running predicate totals via
-  *     `flatMapGroupsWithState` — the streaming analogue of
-  *     `cumsum_over_subject`, with explicit state eviction on inactivity.
-  *
-  * For a full streaming cohort extractor, the watermark must cover the
-  * task's maximum lookback/lookahead (max window span in the tree), after
-  * which each arriving trigger can be evaluated against closed windows.
+  * Operator families:
+  *   - Cohort predicates: [[windowedCounts]] (tumbling windows),
+  *     [[sessionizeStream]], [[cumulativeCounts]] (running totals), and
+  *     the trigger-anchored window tree [[cohortWindows]] (+
+  *     [[labelRows]]); [[triggerWindowCounts]] is its one-window view.
+  *   - Exact and url dedup ([[dedupExactStream]], [[urlDedupStream]]):
+  *     Spark's own `dropDuplicatesWithinWatermark` on a 16-byte key.
+  *   - Near-dup pairs: minhash / embedding / phash / afp / video. Each
+  *     routes arrivals to bucket groups and supplies its pair rule; the
+  *     shared [[bandedPairStream]] core owns the bucket state, the TTL
+  *     clock and the saturation latch.
+  *   - [[substringDupStream]] (duplicated k-token windows) and the
+  *     stateless text scorers ([[decontaminateStream]],
+  *     [[qualityScoreStream]], [[perplexityStream]]).
   *
   * State-size claims in this file quote the LOGICAL payload per key (the
   * bytes the operator design puts in state). The default HDFS-backed
@@ -35,51 +39,26 @@ object StreamingPredicates {
   /** Saturating micros add — uncapped horizons/TTLs use Long.MaxValue as
     * +infinity, so `t + ttl` must clamp instead of wrapping. Shared by
     * every TTL-bounded state operator in this file (one definition: the
-    * eviction-clock math must never diverge between the dedup streams).
+    * eviction-clock math must never diverge between the stateful streams).
     */
   private def satAdd(a: Long, b: Long): Long =
     if (b >= Long.MaxValue - math.max(a, 0L)) Long.MaxValue else a + b
 
-  /** TTL/latch entry decisions shared by the near-dup stream operators
-    * (minhash / embedding / phash) so the eviction clock can never
-    * diverge between them: returns (stillSaturated, live entry indexes).
-    * A saturated latch holds `ts = [lastArrival]` and clears — fresh
-    * bucket — once the watermark passes lastArrival + TTL; otherwise an
-    * entry is live while its arrival + TTL is ahead of the watermark.
+  /** Arm a TTL state's timeout at `fromMicros + ttlMicros`, never behind
+    * the watermark (an infinite TTL arms nothing) — the one eviction
+    * clock of [[bandedPairStream]] and [[substringDupStream]].
     */
-  private def ttlSurvivors(
-      prevTs: Array[Long],
-      prevSaturated: Boolean,
-      n: Int,
-      ttlMicros: Long,
-      wmMicros: Long): (Boolean, Seq[Int]) = {
-    val saturated = prevSaturated &&
-      !(prevTs.nonEmpty && satAdd(prevTs(0), ttlMicros) <= wmMicros)
-    val liveIdx =
-      if (saturated) Seq.empty
-      else (0 until n).filter(j => satAdd(prevTs(j), ttlMicros) > wmMicros)
-    (saturated, liveIdx)
-  }
+  private def armEviction(
+      state: GroupState[_], fromMicros: Long, ttlMicros: Long, wmMicros: Long): Unit =
+    if (ttlMicros < Long.MaxValue)
+      state.setTimeoutTimestamp(
+        math.max(satAdd(fromMicros, ttlMicros) / 1000L + 1L, wmMicros / 1000L + 1L))
 
-  /** State-finalize tail shared by the near-dup stream operators: drop
-    * empty unlatched state, otherwise persist `build` and (for finite
-    * TTLs) arm the event-time timeout at the earliest possible eviction
-    * instant (never behind the current watermark).
-    */
-  private def finishTtlState[S](
-      state: GroupState[S],
-      empty: Boolean,
-      saturated: Boolean,
-      ts: scala.collection.Seq[Long],
-      ttlMicros: Long,
-      wmMicros: Long)(build: => S): Unit = {
-    if (empty && !saturated) state.remove()
-    else {
-      state.update(build)
-      if (ttlMicros < Long.MaxValue && ts.nonEmpty)
-        state.setTimeoutTimestamp(
-          math.max(satAdd(ts.min, ttlMicros) / 1000L + 1L, wmMicros / 1000L + 1L))
-    }
+  /** A stream row stamped with its (watermarked) event time. */
+  trait Timed {
+    def timestamp: java.sql.Timestamp
+    final def tsMicros: Long =
+      (timestamp.getTime / 1000L) * 1000000L + timestamp.getNanos / 1000L
   }
 
   /** Tumbling-window per-subject predicate counts.
@@ -155,16 +134,14 @@ object StreamingPredicates {
   final case class SubjectEvent(subject_id: Long, tsMicros: Long, counts: Array[Long])
   final case class SubjectTotals(subject_id: Long, lastTsMicros: Long, totals: Array[Long])
 
-  /** Input row for [[triggerWindowCounts]] — keeps the watermarked
+  /** Input row for [[cohortWindows]] — keeps the watermarked
     * `timestamp` column (event-time timeout requires it to survive into
     * the stateful operator's input).
     */
   final case class TimedEvent(
       subject_id: Long,
       timestamp: java.sql.Timestamp,
-      counts: Array[Long]) {
-    def tsMicros: Long = (timestamp.getTime / 1000L) * 1000000L + timestamp.getNanos / 1000L
-  }
+      counts: Array[Long]) extends Timed
 
   final case class TriggerWindow(
       subject_id: Long,
@@ -187,11 +164,10 @@ object StreamingPredicates {
     * its predicate sums are emitted exactly once, when the event-time
     * watermark passes the window end (so the window is provably closed).
     *
-    * State per subject = pending triggers + events still inside some
-    * pending-or-future window; both are pruned on every watermark advance,
-    * so state is bounded by (horizon + allowed lateness) × event rate.
-    * Rows older than the watermark are dropped at entry (the same
-    * discipline `withWatermark` applies to windowed aggregates).
+    * A typed view of [[cohortWindows]] with one unconstrained temporal
+    * window. Its state is that operator's [[TriggerState]] — the layout
+    * and contents the former standalone machine stored, so its
+    * checkpoints resume.
     */
   def triggerWindowCounts(
       events: Dataset[TimedEvent],
@@ -199,65 +175,11 @@ object StreamingPredicates {
       triggerIdx: Int,
       horizonMicros: Long
   ): Dataset[TriggerWindow] = {
-    implicit val outEnc = Encoders.product[TriggerWindow]
-    implicit val stateEnc = Encoders.product[TriggerState]
-    events
-      .groupByKey(_.subject_id)(Encoders.scalaLong)
-      .flatMapGroupsWithState[TriggerState, TriggerWindow](
-        OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout()) {
-        (subject: Long, rows: Iterator[TimedEvent], state: GroupState[TriggerState]) =>
-          val wmMicros = state.getCurrentWatermarkMs() * 1000L
-          val prev = state.getOption.getOrElse(
-            TriggerState(Array.empty, Array.empty, Array.empty))
-
-          // Ingest on-time rows; events double as triggers when flagged.
-          val triggers = scala.collection.mutable.ArrayBuffer(prev.pendingTriggers: _*)
-          val bufTs = scala.collection.mutable.ArrayBuffer(prev.bufferedTs: _*)
-          val bufCounts = scala.collection.mutable.ArrayBuffer(prev.bufferedCounts: _*)
-          rows.foreach { e =>
-            if (e.tsMicros > wmMicros) {
-              bufTs += e.tsMicros
-              bufCounts ++= e.counts
-              if (e.counts(triggerIdx) > 0) triggers += e.tsMicros
-            }
-          }
-
-          // Close every window whose end the watermark has passed.
-          val (due, stillPending) = triggers.partition(t => t + horizonMicros <= wmMicros)
-          val emissions = due.sorted.map { t =>
-            val sums = Array.fill(nPreds)(0L)
-            var r = 0
-            while (r < bufTs.length) {
-              val ts = bufTs(r)
-              if (ts > t && ts <= t + horizonMicros) {
-                var i = 0
-                while (i < nPreds) { sums(i) += bufCounts(r * nPreds + i); i += 1 }
-              }
-              r += 1
-            }
-            TriggerWindow(subject, t, t + horizonMicros, sums)
-          }
-
-          // Prune events no pending or future trigger can reach: windows
-          // are (t, t+h], pending triggers all have t >= min(pending), and
-          // future triggers have t > wm — so an event is dead once
-          // ts_e <= min(wm, earliest pending trigger).
-          val pruneBelow = stillPending.foldLeft(wmMicros)(math.min)
-          val keepIdx = (0 until bufTs.length).filter(r => bufTs(r) > pruneBelow)
-          val keepTs = keepIdx.map(bufTs).toArray
-          val keepCounts = keepIdx.flatMap(r =>
-            (0 until nPreds).map(i => bufCounts(r * nPreds + i))).toArray
-
-          if (stillPending.isEmpty && keepTs.isEmpty) state.remove()
-          else {
-            state.update(TriggerState(stillPending.toArray, keepTs, keepCounts))
-            val nextDeadline =
-              (stillPending.map(_ + horizonMicros) ++ keepTs.map(_ + horizonMicros)).min
-            state.setTimeoutTimestamp(nextDeadline / 1000L + 1L)
-          }
-          emissions.iterator
-      }
+    val window = StreamWindowSpec("window", 0L, horizonMicros, endPredIdx = -1, 0L,
+      Array.fill(nPreds)(Long.MinValue), Array.fill(nPreds)(Long.MaxValue))
+    cohortWindows(events, nPreds, triggerIdx, Seq(window))
+      .map(r => TriggerWindow(r.subject_id, r.triggerTsMicros, r.windowEndsMicros(0), r.counts))(
+        Encoders.product[TriggerWindow])
   }
 
   /** One window of a streaming cohort task, anchored at the trigger.
@@ -355,9 +277,9 @@ object StreamingPredicates {
           val prev = state.getOption.getOrElse(
             TriggerState(Array.empty, Array.empty, Array.empty))
 
-          val triggers = scala.collection.mutable.ArrayBuffer(prev.pendingTriggers: _*)
-          val bufTs = scala.collection.mutable.ArrayBuffer(prev.bufferedTs: _*)
-          val bufCounts = scala.collection.mutable.ArrayBuffer(prev.bufferedCounts: _*)
+          val triggers = ArrayBuffer(prev.pendingTriggers: _*)
+          val bufTs = ArrayBuffer(prev.bufferedTs: _*)
+          val bufCounts = ArrayBuffer(prev.bufferedCounts: _*)
           rows.foreach { e =>
             if (e.tsMicros > wmMicros) {
               bufTs += e.tsMicros
@@ -366,8 +288,8 @@ object StreamingPredicates {
             }
           }
 
-          val emissions = scala.collection.mutable.ArrayBuffer.empty[CohortRow]
-          val stillPending = scala.collection.mutable.ArrayBuffer.empty[Long]
+          val emissions = ArrayBuffer.empty[CohortRow]
+          val stillPending = ArrayBuffer.empty[Long]
           // Earliest event-time at which some pending window could newly
           // close — the next wake-up. Waking at the worst-case deadline
           // (trigger + maxDeadlineOffset) instead would delay emission of
@@ -575,6 +497,115 @@ object StreamingPredicates {
     }
   }
 
+  /** A document copy routed to one bucket group of [[bandedPairStream]]. */
+  private[streaming] trait BucketArrival extends Timed { def doc_id: Long }
+
+  /** The per-bucket state fields [[bandedPairStream]] owns (parallel flat
+    * arrays, one entry per live doc, plus the saturation latch); each
+    * operator's state class adds payload columns and reads entry `j`.
+    */
+  private[streaming] trait BucketState[P] {
+    def ids: Array[Long]
+    def ts: Array[Long]
+    def saturated: Boolean
+    def entry(j: Int): P
+  }
+
+  /** The banded pair stream: the one bucket-state machine behind every
+    * streaming near-dup operator (minhash, embedding, phash, afp, video).
+    * An operator routes its arrivals to bucket groups and supplies only
+    * what differs; the core owns the rest:
+    *   - rows at or behind the watermark are dropped, the rest taken in
+    *     `(ts, doc_id)` order;
+    *   - an entry is live while its arrival + `ttlMicros` is ahead of the
+    *     watermark, and the timeout is armed at the earliest eviction;
+    *   - the saturation latch (the streaming face of the batch skew
+    *     guard): an arrival that would push the live population past
+    *     `maxBucketSize` drops the bucket's entries and darkens it. Later
+    *     arrivals emit nothing and only move the latch clock to their own
+    *     time; once the watermark passes the last arrival + `ttlMicros`
+    *     the bucket starts fresh.
+    *
+    * `entry` is the payload an arrival stores; `store` writes the live
+    * entries back into the operator's own state class (so each keeps its
+    * layout). `pair(key, arrival)` verifies the arrival against one live
+    * entry — the operator's exactly-once rule (only the group of the
+    * lowest shared band, chunk or signature emits) plus its exact check —
+    * and a `Some(score)` emits `emit(lowerId, higherId, score)`. `fits`
+    * drops an arrival that cannot share the bucket with its first entry.
+    */
+  private def bandedPairStream[K, D <: BucketArrival, P,
+      S <: BucketState[P] with Product: TypeTag, V, O <: Product: TypeTag](
+      buckets: KeyValueGroupedDataset[K, D],
+      maxBucketSize: Int,
+      ttlMicros: Long)(
+      entry: D => P)(
+      store: (Array[Long], Array[Long], Seq[P], Boolean) => S,
+      emit: (Long, Long, V) => O,
+      fits: (P, P) => Boolean = (_: P, _: P) => true)(
+      pair: (K, P) => P => Option[V]): Dataset[O] = {
+    implicit val stateEnc = Encoders.product[S]
+    implicit val outEnc = Encoders.product[O]
+    buckets.flatMapGroupsWithState[S, O](
+      OutputMode.Append(),
+      GroupStateTimeout.EventTimeTimeout()) {
+      (key: K, rows: Iterator[D], state: GroupState[S]) =>
+        val wmMicros = state.getCurrentWatermarkMs() * 1000L
+        val ids = ArrayBuffer.empty[Long]
+        val ts = ArrayBuffer.empty[Long]
+        val live = ArrayBuffer.empty[P]
+        var saturated = false
+        state.getOption.foreach { s =>
+          // A latch holds `ts = [lastArrival]` until its TTL runs out.
+          saturated = s.saturated && s.ts.headOption.forall(satAdd(_, ttlMicros) > wmMicros)
+          if (saturated) ts ++= s.ts
+          else for (j <- s.ids.indices if satAdd(s.ts(j), ttlMicros) > wmMicros) {
+            ids += s.ids(j); ts += s.ts(j); live += s.entry(j)
+          }
+        }
+
+        val out = ArrayBuffer.empty[O]
+        rows.filter(_.tsMicros > wmMicros).toSeq.sortBy(d => (d.tsMicros, d.doc_id)).foreach { d =>
+          if (saturated) ts(0) = math.max(ts(0), d.tsMicros)
+          else if (ids.length + 1 > maxBucketSize) {
+            saturated = true
+            ids.clear(); live.clear(); ts.clear(); ts += d.tsMicros
+          } else {
+            val e = entry(d)
+            if (live.isEmpty || fits(live(0), e)) {
+              val verify = pair(key, e)
+              for (j <- ids.indices if ids(j) != d.doc_id; v <- verify(live(j)))
+                out += emit(math.min(ids(j), d.doc_id), math.max(ids(j), d.doc_id), v)
+              ids += d.doc_id; ts += d.tsMicros; live += e
+            }
+          }
+        }
+
+        if (ids.isEmpty && !saturated) state.remove()
+        else {
+          state.update(store(ids.toArray, ts.toArray, live.toSeq, saturated))
+          if (ts.nonEmpty) armEviction(state, ts.min, ttlMicros, wmMicros)
+        }
+        out.iterator
+    }
+  }
+
+  /** Row `j` of a row-major flat array holding `rows` equal-width rows. */
+  private def rowOf[T](flat: Array[T], j: Int, rows: Int): Array[T] = {
+    val width = flat.length / rows
+    flat.slice(j * width, (j + 1) * width)
+  }
+
+  /** Encoder of the `(band, bucket)` group key. */
+  private def bandKey = Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong)
+
+  /** The first band at which two full bucket vectors agree (-1: none) —
+    * the exactly-once rule of the banded streams: only that band's group
+    * emits the pair.
+    */
+  private def lowestSharedBand(a: Array[Long], b: Array[Long]): Int =
+    a.indices.indexWhere(i => a(i) == b(i))
+
   /** One (band, bucket)-routed copy of an incoming document for
     * [[minhashNearDupStream]]: carries the FULL bucket vector (all bands)
     * so any two colliding docs can agree on the lowest band they share —
@@ -587,23 +618,21 @@ object StreamingPredicates {
       doc_id: Long,
       timestamp: java.sql.Timestamp,
       buckets: Array[Long],
-      packed: String) {
-    def tsMicros: Long = (timestamp.getTime / 1000L) * 1000000L + timestamp.getNanos / 1000L
-  }
+      packed: String) extends BucketArrival
 
   /** Per-bucket state for [[minhashNearDupStream]]: parallel flat arrays,
     * one entry per live doc (`buckets` row-major with stride = bands —
     * nested collections break state encoders, see [[TriggerState]]).
-    * `saturated` latches once the live population exceeds the bucket cap:
-    * the stored docs are dropped and the bucket emits nothing more until
-    * its state expires (the streaming face of the batch skew guard).
+    * `saturated` is the [[bandedPairStream]] latch.
     */
   final case class BucketDocsState(
       ids: Array[Long],
       ts: Array[Long],
       packed: Array[String],
       buckets: Array[Long],
-      saturated: Boolean)
+      saturated: Boolean) extends BucketState[(String, Array[Long])] {
+    def entry(j: Int): (String, Array[Long]) = (packed(j), rowOf(buckets, j, ids.length))
+  }
 
   /** One verified near-duplicate pair (doc_a < doc_b, exact Jaccard). */
   final case class NearDupPair(doc_a: Long, doc_b: Long, jaccard: Double)
@@ -636,7 +665,10 @@ object StreamingPredicates {
     * expired is NOT paired (finite-state trade, same as
     * [[dedupExactStream]]; the persisted-corpus batch pass catches it).
     * `ttlMicros = Long.MaxValue` keeps state forever (tests/backfills
-    * only). Doc ids must be unique across the stream.
+    * only). Doc ids must be unique across the stream. The bucket machine
+    * is [[bandedPairStream]]; the stored state keeps the
+    * [[BucketDocsState]] layout field for field, so a checkpoint written
+    * before that core existed resumes.
     *
     * @param docs streaming frame with a `timestamp` column (watermarked
     *             by the caller — required for eviction), `textCol`,
@@ -684,80 +716,23 @@ object StreamingPredicates {
       .select(
         col("doc_id"), col("timestamp"), col("packed"), col("buckets"),
         posexplode(col("buckets")).as(Seq("band", "bucket")))
-      .select("band", "bucket", "doc_id", "timestamp", "buckets", "packed")
       .as[BandedDoc]
 
-    implicit val pairEnc = Encoders.product[NearDupPair]
-    implicit val stateEnc = Encoders.product[BucketDocsState]
-    banded
-      .groupByKey(d => (d.band, d.bucket))(
-        Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong))
-      .flatMapGroupsWithState[BucketDocsState, NearDupPair](
-        OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout()) {
-        (key: (Int, Long), rows: Iterator[BandedDoc], state: GroupState[BucketDocsState]) =>
-          val wmMicros = state.getCurrentWatermarkMs() * 1000L
-          val band = key._1
-          val prev = state.getOption.getOrElse(
-            BucketDocsState(Array.empty, Array.empty, Array.empty, Array.empty, saturated = false))
-
-          val (saturated0, liveIdx) =
-            ttlSurvivors(prev.ts, prev.saturated, prev.ids.length, ttlMicros, wmMicros)
-          var saturated = saturated0
-          val ids = scala.collection.mutable.ArrayBuffer(liveIdx.map(prev.ids): _*)
-          val ts = scala.collection.mutable.ArrayBuffer(
-            (if (saturated) prev.ts.toSeq else liveIdx.map(prev.ts)): _*)
-          val packed = scala.collection.mutable.ArrayBuffer(liveIdx.map(prev.packed): _*)
-          val bkts = scala.collection.mutable.ArrayBuffer(
-            liveIdx.flatMap(j => (0 until bands).map(i => prev.buckets(j * bands + i))): _*)
-
-          val out = scala.collection.mutable.ArrayBuffer.empty[NearDupPair]
-          rows.toSeq.sortBy(d => (d.tsMicros, d.doc_id)).foreach { d =>
-            if (d.tsMicros > wmMicros) {
-              if (saturated) {
-                // Dark bucket: arrivals only refresh the latch's clock.
-                ts(0) = math.max(ts(0), d.tsMicros)
-              } else if (ids.length + 1 > maxBucketSize) {
-                // Skew guard: this bucket's live population blew the cap —
-                // drop its docs and go dark until the latch expires.
-                saturated = true
-                ids.clear(); packed.clear(); bkts.clear()
-                ts.clear(); ts += d.tsMicros
-              } else {
-                val dSet = d.packed.split(sep).toSet
-                var j = 0
-                while (j < ids.length) {
-                  if (ids(j) != d.doc_id) {
-                    // Lowest shared band: the one group allowed to emit.
-                    var mb = -1
-                    var i = 0
-                    while (mb < 0 && i < bands) {
-                      if (bkts(j * bands + i) == d.buckets(i)) mb = i
-                      i += 1
-                    }
-                    if (mb == band) {
-                      val eSet = packed(j).split(sep).toSet
-                      val inter = dSet.intersect(eSet).size
-                      val uni = dSet.size + eSet.size - inter
-                      val jac = if (uni == 0) 0.0 else inter.toDouble / uni
-                      if (jac >= threshold)
-                        out += NearDupPair(
-                          math.min(ids(j), d.doc_id), math.max(ids(j), d.doc_id), jac)
-                    }
-                  }
-                  j += 1
-                }
-                ids += d.doc_id; ts += d.tsMicros; packed += d.packed
-                bkts ++= d.buckets
-              }
-            }
-          }
-
-          finishTtlState(state, ids.isEmpty, saturated, ts, ttlMicros, wmMicros)(
-            BucketDocsState(
-              ids.toArray, ts.toArray, packed.toArray, bkts.toArray, saturated))
-          out.iterator
-      }
+    val buckets = banded.groupByKey(d => (d.band, d.bucket))(bandKey)
+    bandedPairStream(buckets, maxBucketSize, ttlMicros)(d => (d.packed, d.buckets))(
+      (ids, ts, es, sat) =>
+        BucketDocsState(ids, ts, es.map(_._1).toArray, es.flatMap(_._2).toArray, sat),
+      NearDupPair) { case ((band, _), (packed, bkts)) =>
+      val dSet = packed.split(sep).toSet
+      e =>
+        if (lowestSharedBand(e._2, bkts) != band) None
+        else {
+          val eSet = e._1.split(sep).toSet
+          val inter = dSet.intersect(eSet).size
+          val uni = dSet.size + eSet.size - inter
+          Some(if (uni == 0) 0.0 else inter.toDouble / uni).filter(_ >= threshold)
+        }
+    }
   }
 
   /** One (band, bucket)-routed copy of an incoming vector for
@@ -771,9 +746,7 @@ object StreamingPredicates {
       doc_id: Long,
       timestamp: java.sql.Timestamp,
       buckets: Array[Long],
-      vec: Array[Float]) {
-    def tsMicros: Long = (timestamp.getTime / 1000L) * 1000000L + timestamp.getNanos / 1000L
-  }
+      vec: Array[Float]) extends BucketArrival
 
   /** Per-bucket state for [[embeddingNearDupStream]]: parallel flat
     * arrays, one entry per live vector (`vecs` row-major with stride =
@@ -786,7 +759,10 @@ object StreamingPredicates {
       ts: Array[Long],
       vecs: Array[Float],
       buckets: Array[Long],
-      saturated: Boolean)
+      saturated: Boolean) extends BucketState[(Array[Float], Array[Long])] {
+    def entry(j: Int): (Array[Float], Array[Long]) =
+      (rowOf(vecs, j, ids.length), rowOf(buckets, j, ids.length))
+  }
 
   /** One verified embedding near-duplicate pair (doc_a < doc_b). */
   final case class EmbNearDupPair(doc_a: Long, doc_b: Long, cos: Double)
@@ -808,11 +784,15 @@ object StreamingPredicates {
     * element order — the same arithmetic as the batch codegen cosine, so
     * emitted `cos` values are bit-identical to batch).
     *
-    * Exactly-once pairs, TTL-bounded state, and the `maxBucketSize`
-    * saturation latch all work as in [[minhashNearDupStream]] (lowest
-    * shared band emits; watermark-driven eviction; a blown bucket goes
-    * dark until its latch expires). Parity with the batch shard-ingest
-    * loop is asserted in StreamingSpec.
+    * Exactly-once pairs (lowest shared band), TTL eviction and the
+    * saturation latch work as in [[minhashNearDupStream]]. A bucket's
+    * vectors share one dim: an
+    * arrival whose length differs from the stored vectors' is dropped
+    * (comparing or storing it would read across the flat state's
+    * stride). Parity with the batch shard-ingest loop is asserted in
+    * StreamingSpec. The stored state keeps the [[BucketVecsState]]
+    * layout field for field, so a checkpoint written before the shared
+    * [[bandedPairStream]] core existed resumes.
     *
     * State sizing: each live doc is held once per band group (band-local
     * state needs no cross-group lookups — the same trade as
@@ -861,104 +841,30 @@ object StreamingPredicates {
       .select(
         col("doc_id"), col("timestamp"), col("vec"), col("buckets"),
         posexplode(col("buckets")).as(Seq("band", "bucket")))
-      .select("band", "bucket", "doc_id", "timestamp", "buckets", "vec")
       .as[HplaneDoc]
 
-    // Exact cosine over flat state arrays — double accumulation in
-    // element order, matching FloatVectorCosine (VectorExpressions) so
-    // streamed `cos` values equal the batch expression's bit for bit.
-    def cosineAt(vecs: Array[Float], off: Int, dim: Int, q: Array[Float]): Double = {
+    // Exact cosine — double accumulation in element order, matching
+    // FloatVectorCosine (VectorExpressions) so streamed `cos` values
+    // equal the batch expression's bit for bit.
+    def cosine(a: Array[Float], b: Array[Float]): Double = {
       var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      val n = math.min(dim, q.length)
-      while (i < n) {
-        val xv = vecs(off + i).toDouble
-        val yv = q(i).toDouble
+      while (i < a.length) {
+        val xv = a(i).toDouble; val yv = b(i).toDouble
         dot += xv * yv; na += xv * xv; nb += yv * yv; i += 1
       }
       dot / (math.sqrt(na) * math.sqrt(nb))
     }
 
-    implicit val pairEnc = Encoders.product[EmbNearDupPair]
-    implicit val stateEnc = Encoders.product[BucketVecsState]
-    banded
-      .groupByKey(d => (d.band, d.bucket))(
-        Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong))
-      .flatMapGroupsWithState[BucketVecsState, EmbNearDupPair](
-        OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout()) {
-        (key: (Int, Long), rows: Iterator[HplaneDoc], state: GroupState[BucketVecsState]) =>
-          val wmMicros = state.getCurrentWatermarkMs() * 1000L
-          val band = key._1
-          val prev = state.getOption.getOrElse(
-            BucketVecsState(Array.empty, Array.empty, Array.empty, Array.empty, saturated = false))
-          // The state stride: every stored vector's length. Established by
-          // the first append; a later arrival with a DIFFERENT length is a
-          // contract violation (embeddings must share one dim) and is
-          // skipped below — indexing state with the arrival's length would
-          // read across vector boundaries or out of bounds.
-          var dim = if (prev.ids.isEmpty) 0 else prev.vecs.length / prev.ids.length
-
-          val (saturated0, liveIdx) =
-            ttlSurvivors(prev.ts, prev.saturated, prev.ids.length, ttlMicros, wmMicros)
-          var saturated = saturated0
-          val ids = scala.collection.mutable.ArrayBuffer(liveIdx.map(prev.ids): _*)
-          val ts = scala.collection.mutable.ArrayBuffer(
-            (if (saturated) prev.ts.toSeq else liveIdx.map(prev.ts)): _*)
-          val vecs = scala.collection.mutable.ArrayBuffer(
-            liveIdx.flatMap(j => (0 until dim).map(i => prev.vecs(j * dim + i))): _*)
-          val bkts = scala.collection.mutable.ArrayBuffer(
-            liveIdx.flatMap(j => (0 until bands).map(i => prev.buckets(j * bands + i))): _*)
-          if (ids.isEmpty) dim = 0 // fully evicted: next arrival re-establishes
-
-          val out = scala.collection.mutable.ArrayBuffer.empty[EmbNearDupPair]
-          rows.toSeq.sortBy(d => (d.tsMicros, d.doc_id)).foreach { d =>
-            if (d.tsMicros > wmMicros) {
-              if (saturated) {
-                ts(0) = math.max(ts(0), d.tsMicros)
-              } else if (ids.length + 1 > maxBucketSize) {
-                saturated = true
-                ids.clear(); vecs.clear(); bkts.clear()
-                ts.clear(); ts += d.tsMicros
-              } else if (dim != 0 && d.vec.length != dim) {
-                // Mixed-dim arrival: cannot be compared against (or stored
-                // beside) the bucket's vectors — drop it.
-                ()
-              } else {
-                if (dim == 0) dim = d.vec.length
-                // One flat snapshot per arrival (not per pair) for the
-                // unboxed cosine loop; offsets use the STATE stride `dim`
-                // (== d.vec.length here, enforced above).
-                val vecsArr = vecs.toArray
-                var j = 0
-                while (j < ids.length) {
-                  if (ids(j) != d.doc_id) {
-                    // Lowest shared band: the one group allowed to emit.
-                    var mb = -1
-                    var i = 0
-                    while (mb < 0 && i < bands) {
-                      if (bkts(j * bands + i) == d.buckets(i)) mb = i
-                      i += 1
-                    }
-                    if (mb == band) {
-                      val c = cosineAt(vecsArr, j * dim, dim, d.vec)
-                      if (c >= threshold)
-                        out += EmbNearDupPair(
-                          math.min(ids(j), d.doc_id), math.max(ids(j), d.doc_id), c)
-                    }
-                  }
-                  j += 1
-                }
-                ids += d.doc_id; ts += d.tsMicros
-                vecs ++= d.vec; bkts ++= d.buckets
-              }
-            }
-          }
-
-          finishTtlState(state, ids.isEmpty, saturated, ts, ttlMicros, wmMicros)(
-            BucketVecsState(
-              ids.toArray, ts.toArray, vecs.toArray, bkts.toArray, saturated))
-          out.iterator
-      }
+    val buckets = banded.groupByKey(d => (d.band, d.bucket))(bandKey)
+    bandedPairStream(buckets, maxBucketSize, ttlMicros)(d => (d.vec, d.buckets))(
+      (ids, ts, es, sat) =>
+        BucketVecsState(ids, ts, es.flatMap(_._1).toArray, es.flatMap(_._2).toArray, sat),
+      EmbNearDupPair,
+      fits = (live, arrival) => live._1.length == arrival._1.length) {
+      case ((band, _), (vec, bkts)) => e =>
+        if (lowestSharedBand(e._2, bkts) != band) None
+        else Some(cosine(e._1, vec)).filter(_ >= threshold)
+    }
   }
 
   /** One (chunk, key)-routed copy of an incoming image signature for
@@ -972,9 +878,7 @@ object StreamingPredicates {
       key: Long,
       doc_id: Long,
       timestamp: java.sql.Timestamp,
-      sig: Long) {
-    def tsMicros: Long = (timestamp.getTime / 1000L) * 1000000L + timestamp.getNanos / 1000L
-  }
+      sig: Long) extends BucketArrival
 
   /** Per-bucket state for [[phashNearDupStream]]: 24 bytes per live doc
     * (id, arrival, signature) — parallel flat arrays as in
@@ -984,7 +888,9 @@ object StreamingPredicates {
       ids: Array[Long],
       ts: Array[Long],
       sigs: Array[Long],
-      saturated: Boolean)
+      saturated: Boolean) extends BucketState[Long] {
+    def entry(j: Int): Long = sigs(j)
+  }
 
   /** One verified image near-duplicate pair (doc_a < doc_b). */
   final case class ImageNearDupPair(doc_a: Long, doc_b: Long, hamming: Int)
@@ -1003,7 +909,10 @@ object StreamingPredicates {
     * recomputable from the sigs alone, and only that chunk's group emits.
     * Banding guarantees full recall for `maxHamming < 4` (pigeonhole over
     * 4 chunks), as in batch. TTL eviction and the `maxBucketSize`
-    * saturation latch work as in [[minhashNearDupStream]]. Divergence
+    * saturation latch are [[bandedPairStream]]'s, as in
+    * [[minhashNearDupStream]]; the stored state keeps the
+    * [[BucketSigsState]] layout field for field, so a checkpoint written
+    * before that core existed resumes. Divergence
     * from batch on IDENTICAL-hash clusters: batch collapses them to
     * min-id star pairs, the stream emits all live pairwise pairs — the
     * same transitive closure, more edges; parity is exact whenever
@@ -1026,18 +935,16 @@ object StreamingPredicates {
       watermarkDelay: String = "1 hour",
       idCol: String = "media_id",
       payloadCol: String = "payload"
-  ): Dataset[ImageNearDupPair] = {
-    requireIntegralId(media, idCol, "phashNearDupStream")
-    sigNearDupStream(media, graft.operators.PerceptualHash.dhash(_),
+  ): Dataset[ImageNearDupPair] =
+    sigNearDupStream("phashNearDupStream", media, graft.operators.PerceptualHash.dhash(_),
       maxHamming, maxBucketSize, ttlMicros, watermarkDelay, idCol, payloadCol)
-  }
 
   /** Streaming AUDIO near-dup — [[phashNearDupStream]] with the decode
     * step swapped for [[graft.operators.AudioFingerprint.fingerprint]]
     * (Haitsma–Kalker spectral fingerprints over PCM-WAV): the banding,
     * bucket state, TTL and saturation semantics are the SAME shared
-    * 64-bit signature core, so every contract documented there holds
-    * here verbatim.
+    * 64-bit signature core, so every contract documented there (state
+    * layout and checkpoint resume included) holds here verbatim.
     */
   def afpNearDupStream(
       media: DataFrame,
@@ -1047,19 +954,37 @@ object StreamingPredicates {
       watermarkDelay: String = "1 hour",
       idCol: String = "media_id",
       payloadCol: String = "payload"
-  ): Dataset[ImageNearDupPair] = {
-    requireIntegralId(media, idCol, "afpNearDupStream")
-    sigNearDupStream(media, graft.operators.AudioFingerprint.fingerprint(_),
+  ): Dataset[ImageNearDupPair] =
+    sigNearDupStream("afpNearDupStream", media, graft.operators.AudioFingerprint.fingerprint(_),
       maxHamming, maxBucketSize, ttlMicros, watermarkDelay, idCol, payloadCol)
+
+  /** Route the media stream of operator `op`: `route` turns each (id,
+    * timestamp, payload) row into bucket copies. The typed flatMap drops
+    * any caller watermark, so the copies are watermarked here with
+    * `watermarkDelay`.
+    */
+  private def routeMedia[R <: Product: TypeTag](
+      op: String, media: DataFrame, idCol: String, payloadCol: String, watermarkDelay: String)(
+      route: (Long, java.sql.Timestamp, Array[Byte]) => Seq[R]): Dataset[R] = {
+    requireIntegralId(media, idCol, op)
+    implicit val rowEnc = Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP, Encoders.BINARY)
+    implicit val outEnc = Encoders.product[R]
+    media
+      .select(col(idCol).cast("long"), col("timestamp"), col(payloadCol))
+      .as[(Long, java.sql.Timestamp, Array[Byte])]
+      .flatMap(route.tupled)
+      .withWatermark("timestamp", watermarkDelay)
+      .as[R]
   }
 
   /** The shared 64-bit-signature streaming near-dup core: decode each
     * arriving payload to a signature (`decode` — dHash for images, HK
     * fingerprint for audio; None = never paired), band into 4×16-bit
-    * chunk buckets, and pair inside `flatMapGroupsWithState` bucket
-    * state with the lowest-shared-chunk dedup rule.
+    * chunk buckets, and pair in [[bandedPairStream]] with the
+    * lowest-shared-chunk rule and exact Hamming verification.
     */
   private def sigNearDupStream(
+      op: String,
       media: DataFrame,
       decode: Array[Byte] => Option[Long],
       maxHamming: Int,
@@ -1069,80 +994,22 @@ object StreamingPredicates {
       idCol: String,
       payloadCol: String
   ): Dataset[ImageNearDupPair] = {
-    implicit val rowEnc =
-      Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP, Encoders.BINARY)
-    implicit val phashEnc = Encoders.product[PhashDoc]
-    val banded = media
-      .select(col(idCol).cast("long"), col("timestamp"), col(payloadCol))
-      .as[(Long, java.sql.Timestamp, Array[Byte])]
-      .flatMap { case (id, ts, payload) =>
-        decode(payload).toSeq.flatMap { sig =>
-          (0 until 4).map(c => PhashDoc(c, (sig >>> (c * 16)) & 0xffffL, id, ts, sig))
-        }
+    val banded = routeMedia(op, media, idCol, payloadCol, watermarkDelay) { (id, ts, payload) =>
+      decode(payload).toSeq.flatMap { sig =>
+        (0 until 4).map(c => PhashDoc(c, (sig >>> (c * 16)) & 0xffffL, id, ts, sig))
       }
-      .withWatermark("timestamp", watermarkDelay)
-      .as[PhashDoc]
-
-    def lowestSharedChunk(a: Long, b: Long): Int = {
-      var c = 0
-      while (c < 4) {
-        if (((a >>> (c * 16)) & 0xffffL) == ((b >>> (c * 16)) & 0xffffL)) return c
-        c += 1
-      }
-      -1
     }
 
-    implicit val pairEnc = Encoders.product[ImageNearDupPair]
-    implicit val stateEnc = Encoders.product[BucketSigsState]
-    banded
-      .groupByKey(d => (d.chunk, d.key))(
-        Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong))
-      .flatMapGroupsWithState[BucketSigsState, ImageNearDupPair](
-        OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout()) {
-        (key: (Int, Long), rows: Iterator[PhashDoc], state: GroupState[BucketSigsState]) =>
-          val wmMicros = state.getCurrentWatermarkMs() * 1000L
-          val chunk = key._1
-          val prev = state.getOption.getOrElse(
-            BucketSigsState(Array.empty, Array.empty, Array.empty, saturated = false))
+    def lowestSharedChunk(a: Long, b: Long): Int =
+      (0 until 4).indexWhere(c => (((a ^ b) >>> (c * 16)) & 0xffffL) == 0L)
 
-          val (saturated0, liveIdx) =
-            ttlSurvivors(prev.ts, prev.saturated, prev.ids.length, ttlMicros, wmMicros)
-          var saturated = saturated0
-          val ids = scala.collection.mutable.ArrayBuffer(liveIdx.map(prev.ids): _*)
-          val ts = scala.collection.mutable.ArrayBuffer(
-            (if (saturated) prev.ts.toSeq else liveIdx.map(prev.ts)): _*)
-          val sigs = scala.collection.mutable.ArrayBuffer(liveIdx.map(prev.sigs): _*)
-
-          val out = scala.collection.mutable.ArrayBuffer.empty[ImageNearDupPair]
-          rows.toSeq.sortBy(d => (d.tsMicros, d.doc_id)).foreach { d =>
-            if (d.tsMicros > wmMicros) {
-              if (saturated) {
-                ts(0) = math.max(ts(0), d.tsMicros)
-              } else if (ids.length + 1 > maxBucketSize) {
-                saturated = true
-                ids.clear(); sigs.clear()
-                ts.clear(); ts += d.tsMicros
-              } else {
-                var j = 0
-                while (j < ids.length) {
-                  if (ids(j) != d.doc_id && lowestSharedChunk(sigs(j), d.sig) == chunk) {
-                    val hamming = java.lang.Long.bitCount(sigs(j) ^ d.sig)
-                    if (hamming <= maxHamming)
-                      out += ImageNearDupPair(
-                        math.min(ids(j), d.doc_id), math.max(ids(j), d.doc_id), hamming)
-                  }
-                  j += 1
-                }
-                ids += d.doc_id; ts += d.tsMicros; sigs += d.sig
-              }
-            }
-          }
-
-          finishTtlState(state, ids.isEmpty, saturated, ts, ttlMicros, wmMicros)(
-            BucketSigsState(ids.toArray, ts.toArray, sigs.toArray, saturated))
-          out.iterator
-      }
+    val buckets = banded.groupByKey(d => (d.chunk, d.key))(bandKey)
+    bandedPairStream(buckets, maxBucketSize, ttlMicros)(_.sig)(
+      (ids, ts, sigs, sat) => BucketSigsState(ids, ts, sigs.toArray, sat),
+      ImageNearDupPair) { case ((chunk, _), sig) => e =>
+        if (lowestSharedChunk(e, sig) != chunk) None
+        else Some(java.lang.Long.bitCount(e ^ sig)).filter(_ <= maxHamming)
+    }
   }
 
   /** One (frame-signature)-routed copy of an arriving clip for
@@ -1156,9 +1023,7 @@ object StreamingPredicates {
       fp: Long,
       doc_id: Long,
       timestamp: java.sql.Timestamp,
-      fps: Array[Long]) {
-    def tsMicros: Long = (timestamp.getTime / 1000L) * 1000000L + timestamp.getNanos / 1000L
-  }
+      fps: Array[Long]) extends BucketArrival
 
   /** Per-frame-signature bucket state for [[videoNearDupStream]]: the
     * live clips holding this signature, each with its full sorted
@@ -1169,7 +1034,9 @@ object StreamingPredicates {
       ids: Array[Long],
       ts: Array[Long],
       fps: Array[Array[Long]],
-      saturated: Boolean)
+      saturated: Boolean) extends BucketState[Array[Long]] {
+    def entry(j: Int): Array[Long] = fps(j)
+  }
 
   /** One clip near-dup pair (doc_a < doc_b) with its exact distinct
     * shared-frame-signature count. */
@@ -1197,9 +1064,10 @@ object StreamingPredicates {
     * still counts its full set intersection. On a corpus with no
     * capped signatures (the fixture, and any corpus where title cards /
     * black frames stay under the cap) the two agree exactly; parity is
-    * asserted in StreamingSpec. TTL eviction, the saturation latch, and
-    * the decode-drops-watermark caveat are [[phashNearDupStream]]'s,
-    * verbatim.
+    * asserted in StreamingSpec. TTL eviction, the saturation latch, the
+    * decode-drops-watermark caveat, and checkpoint resume (the
+    * [[VfpBucketState]] layout is kept field for field) are
+    * [[phashNearDupStream]]'s, verbatim.
     *
     * Cost bound to size for: each routed copy carries the clip's FULL
     * set, so per-clip shuffle volume is ~8·F² bytes for F distinct
@@ -1221,22 +1089,13 @@ object StreamingPredicates {
       idCol: String = "media_id",
       payloadCol: String = "payload"
   ): Dataset[ClipNearDupPair] = {
-    requireIntegralId(media, idCol, "videoNearDupStream")
     require(frameBytes > 0, s"frameBytes must be positive, got $frameBytes")
     require(minShared >= 1, s"minShared must be >= 1, got $minShared")
-    implicit val rowEnc =
-      Encoders.tuple(Encoders.scalaLong, Encoders.TIMESTAMP, Encoders.BINARY)
-    implicit val vfpEnc = Encoders.product[VfpDoc]
-    val routed = media
-      .select(col(idCol).cast("long"), col("timestamp"), col(payloadCol))
-      .as[(Long, java.sql.Timestamp, Array[Byte])]
-      .flatMap { case (id, ts, payload) =>
-        val fps = graft.operators.VideoFingerprint
-          .clipSignatures(payload, frameBytes, stride)
+    val routed = routeMedia("videoNearDupStream", media, idCol, payloadCol, watermarkDelay) {
+      (id, ts, payload) =>
+        val fps = graft.operators.VideoFingerprint.clipSignatures(payload, frameBytes, stride)
         fps.toSeq.map(f => VfpDoc(f, id, ts, fps))
-      }
-      .withWatermark("timestamp", watermarkDelay)
-      .as[VfpDoc]
+    }
 
     // (count, lowest) of the intersection of two sorted distinct sets.
     def shared(a: Array[Long], b: Array[Long]): (Long, Long) = {
@@ -1249,55 +1108,13 @@ object StreamingPredicates {
       (n, lowest)
     }
 
-    implicit val pairEnc = Encoders.product[ClipNearDupPair]
-    implicit val stateEnc = Encoders.product[VfpBucketState]
-    routed
-      .groupByKey(_.fp)(Encoders.scalaLong)
-      .flatMapGroupsWithState[VfpBucketState, ClipNearDupPair](
-        OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout()) {
-        (fp: Long, rows: Iterator[VfpDoc], state: GroupState[VfpBucketState]) =>
-          val wmMicros = state.getCurrentWatermarkMs() * 1000L
-          val prev = state.getOption.getOrElse(
-            VfpBucketState(Array.empty, Array.empty, Array.empty, saturated = false))
-
-          val (saturated0, liveIdx) =
-            ttlSurvivors(prev.ts, prev.saturated, prev.ids.length, ttlMicros, wmMicros)
-          var saturated = saturated0
-          val ids = scala.collection.mutable.ArrayBuffer(liveIdx.map(prev.ids): _*)
-          val ts = scala.collection.mutable.ArrayBuffer(
-            (if (saturated) prev.ts.toSeq else liveIdx.map(prev.ts)): _*)
-          val sets = scala.collection.mutable.ArrayBuffer(liveIdx.map(prev.fps): _*)
-
-          val out = scala.collection.mutable.ArrayBuffer.empty[ClipNearDupPair]
-          rows.toSeq.sortBy(d => (d.tsMicros, d.doc_id)).foreach { d =>
-            if (d.tsMicros > wmMicros) {
-              if (saturated) {
-                ts(0) = math.max(ts(0), d.tsMicros)
-              } else if (ids.length + 1 > maxBucketSize) {
-                saturated = true
-                ids.clear(); sets.clear()
-                ts.clear(); ts += d.tsMicros
-              } else {
-                var j = 0
-                while (j < ids.length) {
-                  if (ids(j) != d.doc_id) {
-                    val (n, lowest) = shared(sets(j), d.fps)
-                    if (n >= minShared && lowest == fp)
-                      out += ClipNearDupPair(
-                        math.min(ids(j), d.doc_id), math.max(ids(j), d.doc_id), n)
-                  }
-                  j += 1
-                }
-                ids += d.doc_id; ts += d.tsMicros; sets += d.fps
-              }
-            }
-          }
-
-          finishTtlState(state, ids.isEmpty, saturated, ts, ttlMicros, wmMicros)(
-            VfpBucketState(ids.toArray, ts.toArray, sets.toArray, saturated))
-          out.iterator
-      }
+    val buckets = routed.groupByKey(_.fp)(Encoders.scalaLong)
+    bandedPairStream(buckets, maxBucketSize, ttlMicros)(_.fps)(
+      (ids, ts, sets, sat) => VfpBucketState(ids, ts, sets.toArray, sat),
+      ClipNearDupPair) { (fp, fps) => e =>
+        val (n, lowest) = shared(e, fps)
+        if (n >= minShared && lowest == fp) Some(n) else None
+    }
   }
 
   /** One occurrence of a k-token window on the stream: routed to its
@@ -1310,9 +1127,7 @@ object StreamingPredicates {
       wl: Int,
       doc_id: Long,
       timestamp: java.sql.Timestamp,
-      pos: Int) {
-    def tsMicros: Long = (timestamp.getTime / 1000L) * 1000000L + timestamp.getNanos / 1000L
-  }
+      pos: Int) extends Timed
 
   /** Per-window-key state for [[substringDupStream]]: occurrences seen so
     * far and the last arrival (the TTL clock) — 16 bytes per distinct
@@ -1380,30 +1195,18 @@ object StreamingPredicates {
         (_: (Long, Int), rows: Iterator[WindowOcc], state: GroupState[WinKeyState]) =>
           val wmMicros = state.getCurrentWatermarkMs() * 1000L
           val live = state.getOption.filter(s => satAdd(s.lastTs, ttlMicros) > wmMicros)
-          val fresh = rows.toSeq.filter(_.tsMicros > wmMicros)
-          if (fresh.isEmpty) {
-            // Timeout tick (or an all-late batch): evict or keep as-is.
-            live match {
-              case None => if (state.exists) state.remove()
-              case Some(s) =>
-                state.update(s)
-                if (ttlMicros < Long.MaxValue)
-                  state.setTimeoutTimestamp(
-                    math.max(satAdd(s.lastTs, ttlMicros) / 1000L + 1L, wmMicros / 1000L + 1L))
-            }
+          val fresh = rows.filter(_.tsMicros > wmMicros).toSeq
+          if (live.isEmpty && fresh.isEmpty) {
+            if (state.exists) state.remove()
             Iterator.empty
           } else {
+            // A timeout tick (or an all-late batch) keeps live state as-is.
             val total = live.map(_.count).getOrElse(0L) + fresh.length
-            val lastTs = math.max(
-              live.map(_.lastTs).getOrElse(Long.MinValue), fresh.map(_.tsMicros).max)
+            val lastTs = (live.map(_.lastTs) ++ fresh.map(_.tsMicros)).max
             state.update(WinKeyState(total, lastTs))
-            if (ttlMicros < Long.MaxValue)
-              state.setTimeoutTimestamp(
-                math.max(satAdd(lastTs, ttlMicros) / 1000L + 1L, wmMicros / 1000L + 1L))
-            if (total >= 2)
-              fresh.sortBy(o => (o.doc_id, o.pos))
-                .map(o => SubstringHit(o.doc_id, o.pos)).iterator
-            else Iterator.empty
+            armEviction(state, lastTs, ttlMicros, wmMicros)
+            if (total < 2) Iterator.empty
+            else fresh.sortBy(o => (o.doc_id, o.pos)).map(o => SubstringHit(o.doc_id, o.pos)).iterator
           }
       }
   }
@@ -1432,29 +1235,6 @@ object StreamingPredicates {
           .cast("long").as("covered_tokens"))
   }
 
-  /** Streaming model-based quality scoring — σ(w·x) under a FITTED
-    * [[graft.operators.QualityClassifier.train]] model frame for every
-    * arriving doc, STATELESS (the batch scorer's explode + distinct +
-    * window normalization are all stateful plan shapes a stream can't
-    * run; here the hashed feature set is built IN-ROW — array_distinct
-    * over the hashed grams — and the margin is one codegen'd `aggregate`
-    * fold over it against the broadcast weight map, divided by √n_d for
-    * the same unit-L2 normalization). The ingest-path face of the
-    * GPT-3-style quality filter: train offline on a labeled reference
-    * corpus, tag every arriving doc with its quality score, threshold
-    * downstream.
-    *
-    * Scores equal the batch [[graft.operators.QualityClassifier.score]]
-    * up to summation order (the batch path sums w·x per feature row, this
-    * one folds Σw then scales — asserted ≤5e-5 in StreamingSpec, well
-    * inside the batch scorer's own 1e-4 rounding grain). Docs with no
-    * tokens get a NULL quality (the batch scorer omits them entirely).
-    *
-    * @param model a [[graft.operators.QualityClassifier.train]] frame
-    *              (or its parquet round-trip): (feat, w) with bias at −1.
-    * @return the input rows plus `quality` — unrounded; callers
-    *         threshold, they don't hash-compare.
-    */
   /** Streaming benchmark decontamination — exact matched-n-gram counts
     * for every arriving doc against a static probe frame (the eval set),
     * the ingest-time face of [[graft.operators.Decontaminate.matches]]:
@@ -1491,6 +1271,29 @@ object StreamingPredicates {
       .select(col(idCol), col(tsCol), col("matched_ngrams"))
   }
 
+  /** Streaming model-based quality scoring — σ(w·x) under a FITTED
+    * [[graft.operators.QualityClassifier.train]] model frame for every
+    * arriving doc, STATELESS (the batch scorer's explode + distinct +
+    * window normalization are all stateful plan shapes a stream can't
+    * run; here the hashed feature set is built IN-ROW — array_distinct
+    * over the hashed grams — and the margin is one codegen'd `aggregate`
+    * fold over it against the broadcast weight map, divided by √n_d for
+    * the same unit-L2 normalization). The ingest-path face of the
+    * GPT-3-style quality filter: train offline on a labeled reference
+    * corpus, tag every arriving doc with its quality score, threshold
+    * downstream.
+    *
+    * Scores equal the batch [[graft.operators.QualityClassifier.score]]
+    * up to summation order (the batch path sums w·x per feature row, this
+    * one folds Σw then scales — asserted ≤5e-5 in StreamingSpec, well
+    * inside the batch scorer's own 1e-4 rounding grain). Docs with no
+    * tokens get a NULL quality (the batch scorer omits them entirely).
+    *
+    * @param model a [[graft.operators.QualityClassifier.train]] frame
+    *              (or its parquet round-trip): (feat, w) with bias at −1.
+    * @return the input rows plus `quality` — unrounded; callers
+    *         threshold, they don't hash-compare.
+    */
   def qualityScoreStream(
       docs: DataFrame,
       model: DataFrame,

@@ -51,17 +51,14 @@ object PlanAudit {
     // Adaptive decision quality: sampled statistics must route a skewed /
     // duplicate-heavy corpus to skew-safe and a uniform one to direct
     // (forced full sample + no size shortcut for determinism).
-    spark.conf.set("spark.graft.collapse.smallInputBytes", "0")
-    spark.conf.set("spark.graft.collapse.sampleFraction", "1.0")
     import spark.implicits._
     def synth(f: Int => Long) = (1 to 4000)
       .map(i => (f(i), java.sql.Timestamp.valueOf(f"1989-01-01 ${i % 24}%02d:00:00")))
       .toDF("subject_id", "timestamp")
-    val modeUniform = graft.sources.PredicateFrames.chooseCollapseMode(synth(_.toLong))
-    val modeSkewed =
-      graft.sources.PredicateFrames.chooseCollapseMode(synth(i => if (i % 2 == 0) 42L else i.toLong))
-    spark.conf.unset("spark.graft.collapse.smallInputBytes")
-    spark.conf.unset("spark.graft.collapse.sampleFraction")
+    def decide(df: org.apache.spark.sql.DataFrame) =
+      graft.sources.PredicateFrames.chooseCollapseMode(df, smallInputBytes = 0L, sampleFraction = 1.0)
+    val modeUniform = decide(synth(_.toLong))
+    val modeSkewed = decide(synth(i => if (i % 2 == 0) 42L else i.toLong))
     val adaptOk = modeUniform == "direct" && modeSkewed == "skew-safe"
     println(s"${if (adaptOk) "OK " else "HOT"} adaptive collapse decision     uniform=$modeUniform skewed=$modeSkewed")
 

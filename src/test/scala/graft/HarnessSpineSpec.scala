@@ -9,6 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Keeps the dev harness on one spine: every main builds its session with
   * [[Sessions.local]], and stage metrics come from the one listener,
   * [[graft.tools.Probe.StageLog]], so a new probe cannot grow its own.
+  * Streaming state machines stay on one core each: a new near-dup stream
+  * goes through `StreamingPredicates.bandedPairStream`.
   */
 class HarnessSpineSpec extends AnyFunSuite {
 
@@ -29,5 +31,11 @@ class HarnessSpineSpec extends AnyFunSuite {
 
   test("onStageCompleted is overridden at most once") {
     assert(count("""def\s+onStageCompleted\b""").values.sum <= 1)
+  }
+
+  test("flatMapGroupsWithState is called at most 4 times") {
+    // The banded near-dup core, cohortWindows, substringDupStream and
+    // cumulativeCounts.
+    assert(count("""\.flatMapGroupsWithState\b""").values.sum <= 4)
   }
 }

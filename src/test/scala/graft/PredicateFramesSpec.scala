@@ -71,24 +71,19 @@ class PredicateFramesSpec extends SparkSpec {
         .withColumn("a", lit(1L))
     // Deterministic decisions on tiny frames: disable the size shortcut
     // and sample everything.
-    spark.conf.set("spark.graft.collapse.smallInputBytes", "0")
-    spark.conf.set("spark.graft.collapse.sampleFraction", "1.0")
-    try {
-      val uniform = frame((1 to 2000).map(i => (i.toLong, f"1989-01-01 ${i % 24}%02d:00")))
-      assert(PredicateFrames.chooseCollapseMode(uniform) == "direct")
+    def decide(df: org.apache.spark.sql.DataFrame) =
+      PredicateFrames.chooseCollapseMode(df, smallInputBytes = 0L, sampleFraction = 1.0)
+    val uniform = frame((1 to 2000).map(i => (i.toLong, f"1989-01-01 ${i % 24}%02d:00")))
+    assert(decide(uniform) == "direct")
 
-      // One subject owns ~half the rows → hash(subject) exchange straggles.
-      val skewed = frame((1 to 2000).map(i =>
-        (if (i % 2 == 0) 42L else i.toLong, f"1989-01-01 ${i % 24}%02d:00")))
-      assert(PredicateFrames.chooseCollapseMode(skewed) == "skew-safe")
+    // One subject owns ~half the rows → hash(subject) exchange straggles.
+    val skewed = frame((1 to 2000).map(i =>
+      (if (i % 2 == 0) 42L else i.toLong, f"1989-01-01 ${i % 24}%02d:00")))
+    assert(decide(skewed) == "skew-safe")
 
-      // Heavy same-instant duplication → full-key map-side combine pays.
-      val dupes = frame((1 to 2000).map(i => ((i % 100).toLong, "1989-01-01 00:00")))
-      assert(PredicateFrames.chooseCollapseMode(dupes) == "skew-safe")
-    } finally {
-      spark.conf.unset("spark.graft.collapse.smallInputBytes")
-      spark.conf.unset("spark.graft.collapse.sampleFraction")
-    }
+    // Heavy same-instant duplication → full-key map-side combine pays.
+    val dupes = frame((1 to 2000).map(i => ((i % 100).toLong, "1989-01-01 00:00")))
+    assert(decide(dupes) == "skew-safe")
   }
 
   test("ESGPT loader: 3-table join + static rows (predicates.py:312-365)") {

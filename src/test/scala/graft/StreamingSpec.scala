@@ -990,6 +990,45 @@ class StreamingSpec extends SparkSpec {
     } finally query.stop()
   }
 
+  test("phashNearDupStream saturation latch: a capped bucket is dark until its last arrival's TTL") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import graft.harness.MediaFixtures
+
+    // Every doc carries the SAME image, so all of them share one set of
+    // chunk buckets; a cap of 2 saturates them on the third arrival.
+    val img = MediaFixtures.bmpPayload(0L)
+    val input = MemoryStream[(Long, Timestamp, Array[Byte])]
+    val media = input.toDF().toDF("media_id", "timestamp", "payload")
+    val out = StreamingPredicates.phashNearDupStream(
+      media, maxHamming = 2, maxBucketSize = 2, ttlMicros = 3600L * 1000000L,
+      watermarkDelay = "0 seconds")
+    val query = out.writeStream
+      .format("memory").queryName("phash_latch").outputMode("append").start()
+    def feed(rows: (Long, String, Array[Byte])*): Unit = {
+      input.addData(rows.map { case (id, t, p) => (id, ts(t), p) }: _*)
+      query.processAllAvailable()
+    }
+    try {
+      feed((0L, "2024-01-01 10:00:00", img), (1L, "2024-01-01 10:05:00", img))
+      // 2 passes the cap and darkens the bucket; 3 only moves the latch
+      // clock to 10:20.
+      feed((2L, "2024-01-01 10:10:00", img), (3L, "2024-01-01 10:20:00", img))
+      // Watermark to 11:15: past the saturating arrival + TTL, short of
+      // the last arrival + TTL — the bucket stays dark.
+      feed((100L, "2024-01-01 11:15:00", MediaFixtures.bmpPayload(500L)))
+      feed((4L, "2024-01-01 11:16:00", img), (5L, "2024-01-01 11:17:00", img))
+      // Watermark past 11:17 + TTL: the latch clears and the bucket pairs.
+      feed((101L, "2024-01-01 20:00:00", MediaFixtures.bmpPayload(1000L)))
+      feed((6L, "2024-01-01 20:10:00", img), (7L, "2024-01-01 20:15:00", img))
+
+      val pairs = spark.table("phash_latch").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(pairs == Set((0L, 1L), (6L, 7L)),
+        s"expected only the pre-cap pair and the post-latch pair; got $pairs")
+    } finally query.stop()
+  }
+
   test("minhashNearDupStream evicts bucket state after the TTL") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
