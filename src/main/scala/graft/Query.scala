@@ -6,10 +6,10 @@ import org.apache.spark.sql.types._
 
 import graft.config.TaskConfig
 import graft.operators.Constraints
-import graft.plans.ExtractSubtree
+import graft.plans.{Materialize, WindowTree}
 
-/** Task-query orchestration: trigger anchors → recursive window-tree
-  * extraction → label / index-timestamp projection.
+/** Task-query orchestration: static / null-key filter → window tree
+  * ([[WindowTree]]) → label / index-timestamp projection.
   * (reference: src/aces/query.py:19-197 `query`)
   */
 object Query {
@@ -22,95 +22,42 @@ object Query {
     * is opt-in here (`validateUnique`).
     *
     * Under `spark.graft.checkpoint=local|reliable` (the default is local)
-    * the result is materialized before this returns, and the canonical
-    * frame's cache is released on every path, failures included. Under
-    * `off` the result is a lazy plan over the uncached input: nothing is
-    * persisted, so nothing needs releasing, and every action re-runs the
-    * whole query — cache it yourself if you act on it more than once.
+    * the result is materialized before this returns; nothing else is
+    * persisted, and a failing query leaves nothing persisted. Under `off`
+    * the result is a lazy plan: every action re-runs the whole query —
+    * cache it yourself if you act on it more than once. Either way the
+    * window tree is one sorted pass per subject ([[WindowTree]]), so the
+    * input is read once.
     */
   def apply(cfg: TaskConfig, predicatesDf: DataFrame, validateUnique: Boolean = false): DataFrame = {
     if (validateUnique) {
       val dupes = predicatesDf.groupBy("subject_id", "timestamp").count().filter(col("count") > 1)
       require(dupes.isEmpty, "The (subject_id, timestamp) columns must be unique.")
     }
-
-    // Static-demographics filter, else drop null-timestamp rows
-    // (reference: query.py:121-127).
-    val staticVariables = cfg.predicates.collect { case (n, p) if p.static => n }.toSeq
-    val filtered0 =
-      if (staticVariables.nonEmpty) Constraints.checkStaticVariables(staticVariables, predicatesDf)
-      else predicatesDf.na.drop(Seq("subject_id", "timestamp"))
-
-    // The filtered frame is scanned once per tree edge (every window agg
-    // reads it) plus once for trigger anchors — persist it for the run
-    // (unless checkpointing is off: the result then stays lazy, and a
-    // cache would outlive this call with no one to release it).
-    // MEMORY_AND_DISK: spills rather than OOMs at scale; the frame is the
-    // narrow post-collapse predicate matrix, far smaller than raw input.
-    // Pre-materialize the epoch-micros ordering key and sort within
-    // partitions on it: the cached relation then *reports* that ordering,
-    // so every downstream window operator skips its own per-operator sort
-    // of the full frame. When the window tree has event-bound edges, also
-    // pre-materialize the per-subject cumsums (`__cum_<pred>`) they all
-    // share — one window pass at cache build instead of one per edge
-    // (EventBoundAgg detects and reuses them).
-    def hasEventBound(n: graft.plans.WindowNode): Boolean =
-      n.endpointExpr.exists(_.isInstanceOf[graft.model.EventBounds]) || n.children.exists(hasEventBound)
-    val tsUs = graft.operators.TemporalWindowAgg.TsUs
-    val keyed = filtered0.withColumn(tsUs, unix_micros(col("timestamp")))
-    val enriched =
-      if (cfg.windowTree.children.exists(hasEventBound)) {
-        val predCols = keyed.columns
-          .filterNot(c => c == "subject_id" || c == "timestamp" || c.startsWith("__"))
-        val wCum = org.apache.spark.sql.expressions.Window
-          .partitionBy("subject_id").orderBy(tsUs)
-          .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-            org.apache.spark.sql.expressions.Window.currentRow)
-        keyed.select(
-          keyed.columns.map(col).toSeq ++
-            predCols.map(c => sum(col(c)).over(wCum).as(s"__cum_$c")): _*)
-      } else keyed
-    val sorted = enriched.sortWithinPartitions(col("subject_id"), col(tsUs))
-    if (graft.plans.Materialize.mode(sorted) == "off") extract(cfg, sorted)
-    else {
-      val filtered = sorted.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // Materialize the (cohort-sized, small) result eagerly, then release
-      // the canonical-frame cache whether or not that succeeded: a leaked
-      // entry per call is BENCH_r01's "Asked to cache already cached data"
-      // tail and masks timing. Mirrors the reference's eager execution
-      // (query() returns a computed frame, query.py:142-151).
-      try graft.plans.Materialize(extract(cfg, filtered), eager = true)
-      finally filtered.unpersist(blocking = false)
-    }
+    val realized = WindowTree(cfg.windowTree, cfg.trigger.predicate, canonicalRows(cfg, predicatesDf))
+    // Mirrors the reference's eager execution (query() returns a computed
+    // frame, query.py:142-151).
+    Materialize(project(cfg, realized), eager = true)
   }
 
-  /** Anchors, window tree and label/index projection over the canonical
-    * frame `filtered`.
+  /** Static-demographics filter, then rows with a subject and a timestamp
+    * (reference: query.py:121-127).
     */
-  private def extract(cfg: TaskConfig, filtered: DataFrame): DataFrame = {
+  private[graft] def canonicalRows(cfg: TaskConfig, predicatesDf: DataFrame): DataFrame = {
+    val staticVariables = cfg.predicates.collect { case (n, p) if p.static => n }.toSeq
+    val rows =
+      if (staticVariables.nonEmpty) Constraints.checkStaticVariables(staticVariables, predicatesDf)
+      else predicatesDf
+    rows.na.drop(Seq("subject_id", "timestamp"))
+  }
 
-    // Trigger anchors (reference: query.py:133-140).
-    val anchors = Constraints
-      .checkConstraints(Map(cfg.trigger.predicate -> (Some(1L), None)), filtered)
-      .select(col("subject_id"), col("timestamp").as("subtree_anchor_timestamp"))
-
-    // Subjects with no trigger event can never contribute a cohort row
-    // (every window is anchored per subject), so prune them from the frame
-    // every window pass reads. The semi-join is co-partitioned with the
-    // cache (no shuffle) and costs a hash probe per row; for a selective
-    // trigger (e.g. one diagnosis code) it drops most of a 100 TB corpus
-    // before any window work. The reference has no such pruning — it
-    // aggregates the full frame per edge.
-    val anchorSubjects = anchors.select("subject_id").distinct()
-    val pruned = filtered.join(anchorSubjects, Seq("subject_id"), "left_semi")
-
-    val extracted = ExtractSubtree(cfg.windowTree, anchors, pruned)
-
-    val result = extracted.withColumnRenamed("subtree_anchor_timestamp", "trigger")
-
+  /** Label and index-timestamp columns over the realized trigger rows
+    * (`subject_id`, `trigger`, `<node>_summary`…).
+    */
+  private[graft] def project(cfg: TaskConfig, realized: DataFrame): DataFrame = {
     // Column order: subject_id, [index_timestamp], [label], trigger,
     // then summaries in pre-order tree walk (reference: query.py:153-197).
-    var out = result
+    var out = realized
     var headCols = Seq("subject_id")
 
     cfg.labelWindow.foreach { lw =>

@@ -21,16 +21,23 @@ object Constraints {
     */
   def checkConstraints(constraints: Map[String, Range], df: DataFrame): DataFrame = {
     if (constraints.isEmpty) return df
-    val dropExprs = constraints.toSeq.map { case (name0, (minInc, maxInc)) =>
-      if ((minInc.isEmpty && maxInc.isEmpty) || minInc.exists(mn => maxInc.exists(_ < mn)))
-        throw new IllegalArgumentException(
-          s"Invalid constraint for '$name0': ${minInc.orNull} - ${maxInc.orNull}")
-      val name = if (name0 == "*") EventBounds.AnyEvent else name0
+    val dropExprs = resolve(constraints).map { case (name, (minInc, maxInc)) =>
       val drops = minInc.map(mn => col(name) < mn).toSeq ++ maxInc.map(mx => col(name) > mx)
       drops.reduce(_ || _)
     }
     df.filter(!dropExprs.reduce(_ || _))
   }
+
+  /** The constraints keyed by the column they read (`"*"` → `_ANY_EVENT`),
+    * after rejecting empty or inverted ranges.
+    */
+  def resolve(constraints: Map[String, Range]): Seq[(String, Range)] =
+    constraints.toSeq.map { case (name, range @ (minInc, maxInc)) =>
+      if ((minInc.isEmpty && maxInc.isEmpty) || minInc.exists(mn => maxInc.exists(_ < mn)))
+        throw new IllegalArgumentException(
+          s"Invalid constraint for '$name': ${minInc.orNull} - ${maxInc.orNull}")
+      (if (name == "*") EventBounds.AnyEvent else name) -> range
+    }
 
   /** Keep only subjects having a null-timestamp (static) row with a positive
     * count for every listed demographic predicate; then drop static rows and

@@ -27,8 +27,8 @@ import graft.model.{Closed, EventBounds, TemporalBounds}
   *   3. fetch the bound row's (adjusted) cumsums with a co-partitioned
   *      equi-join on (subject_id, bound_ts) against the boundary rows;
   *   4. per-row result = cumsum difference ± own-row counts per `closed`;
-  *   5. non-zero offset: correct with a `TemporalWindowAgg` over the offset
-  *      span, joined back on (subject_id, timestamp).
+  *   5. non-zero offset: correct with the frame sums over the offset span,
+  *      computed as extra window columns of step 1's pass.
   *
   * Everything — both windows, both joins — reuses the single hash
   * partitioning on `subject_id`; the operator adds NO shuffle beyond the
@@ -43,6 +43,36 @@ object EventBoundAgg {
   def apply(df: DataFrame, bounds: EventBounds): DataFrame =
     boolExprBoundSum(df, bounds.boundaryExpr, bounds.mode, bounds.closed, bounds.offsetMicros)
 
+  /** The closed-endpoint and offset rules of one event-bound window
+    * (reference: aggregate.py:969-1050), shared with the window-tree
+    * kernel [[graft.plans.WindowTree]].
+    */
+  final case class Rules(boundToRow: Boolean, closed: Closed.Value, offsetUs: Long) {
+    private val left = closed == Closed.Left || closed == Closed.Both
+    private val right = closed == Closed.Right || closed == Closed.Both
+
+    /** A boundary row exactly at row + offset may be the bound. */
+    val includeEq: Boolean = if (boundToRow) left else right
+
+    /** The bound row's own counts are left out of the window. */
+    val subtractOwnAtBoundary: Boolean = if (boundToRow) left else !right
+
+    /** The row's own counts are left out of the cumsum difference. */
+    val adjustOwn: Boolean =
+      (offsetUs <= 0 && (if (boundToRow) !right else left)) || offsetUs < 0
+
+    /** Inclusive µs frame around the row whose counts correct a non-zero
+      * offset, added when [[addOffsetPeriod]], else subtracted.
+      */
+    val offsetFrame: Option[(Long, Long)] =
+      if (offsetUs == 0L) None
+      else if (offsetUs > 0)
+        Some(TemporalBounds(false, offsetUs, if (boundToRow) right else !left).inclusiveFrame)
+      else Some(TemporalBounds(if (boundToRow) !right else left, offsetUs, false).inclusiveFrame)
+
+    val addOffsetPeriod: Boolean = boundToRow == (offsetUs > 0)
+  }
+
   /** @param mode `"bound_to_row"` (bound precedes row) or `"row_to_bound"`. */
   def boolExprBoundSum(
       df: DataFrame,
@@ -55,51 +85,23 @@ object EventBoundAgg {
     // `__`-prefixed columns are engine internals, never predicates.
     val predCols =
       df.columns.filterNot(c => c == "subject_id" || c == "timestamp" || c.startsWith("__")).toSeq
-    val boundToRow = mode == "bound_to_row"
-
-    // Offset-correction window bounds (reference: aggregate.py:969-995).
-    // FUSED into the main frame instead of a separate
-    // [[TemporalWindowAgg]] pass + (subject_id, timestamp) join: the
-    // correction is the same difference-of-two-prefix-sums arithmetic
-    // over the same hash(subject_id)/ts ordering the cumsum window
-    // already establishes, so computing it as extra window columns on
-    // `withCum` drops one join and one full frame pass from the offset
-    // path (a left join on unique keys against a same-row-set frame is
-    // the identity attach — inlining is exact).
-    val offsetFrame: Option[(Long, Long)] =
-      if (offsetUs == 0L) None
-      else {
-        val (li, ri) =
-          if (offsetUs > 0) {
-            val r =
-              if (!boundToRow) !(closed == Closed.Left || closed == Closed.Both)
-              else closed == Closed.Right || closed == Closed.Both
-            (false, r)
-          } else {
-            val l =
-              if (!boundToRow) closed == Closed.Left || closed == Closed.Both
-              else !(closed == Closed.Right || closed == Closed.Both)
-            (l, false)
-          }
-        Some(TemporalBounds(li, offsetUs, ri, 0L).inclusiveFrame)
-      }
+    val rules = Rules(mode == "bound_to_row", closed, offsetUs)
+    import rules.{addOffsetPeriod, adjustOwn, boundToRow, includeEq, offsetFrame, subtractOwnAtBoundary}
 
     // 1. Per-subject cumulative sums (reference: aggregate.py:997-1000).
-    // When the caller pre-computed `__cum_<pred>` columns (Query does,
-    // once, in the cached canonical frame — they are identical for every
-    // event-bound edge of a window tree), reuse them and skip the pass.
     val withTs =
       if (df.columns.contains(TsUs)) df
       else df.withColumn(TsUs, unix_micros(col("timestamp")))
-    val haveCums = predCols.forall(c => df.columns.contains(s"__cum_$c"))
     val wCum = Window
       .partitionBy("subject_id")
       .orderBy(TsUs)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // Offset-correction sums as window columns (see `offsetFrame`): the
-    // [[TemporalWindowAgg.frameSums]] difference of prefix sums — its
-    // frames share this select's (partitionBy, orderBy) and evaluate in
-    // the same WindowExec pass group, no extra shuffle or sort.
+    // Offset-correction sums (reference: aggregate.py:969-995), FUSED into
+    // this pass as window columns instead of a separate
+    // [[TemporalWindowAgg]] pass + (subject_id, timestamp) join: the
+    // [[TemporalWindowAgg.frameSums]] difference of prefix sums shares this
+    // select's (partitionBy, orderBy), so it evaluates in the same
+    // WindowExec pass group, with no extra shuffle, sort or join.
     val offCols: Seq[Column] = offsetFrame.toSeq.flatMap { case (lo, hi) =>
       TemporalWindowAgg.frameSums(predCols, lo, hi, c => s"__off_$c")
     }
@@ -108,8 +110,7 @@ object EventBoundAgg {
       .select(
         Seq(col("subject_id"), col("timestamp"), col(TsUs), col("__is_boundary")) ++
           predCols.map(col) ++
-          predCols.map(c =>
-            (if (haveCums) col(s"__cum_$c") else sum(col(c)).over(wCum)).as(s"__cum_$c")) ++
+          predCols.map(c => sum(col(c)).over(wCum).as(s"__cum_$c")) ++
           offCols: _*
       )
 
@@ -117,9 +118,6 @@ object EventBoundAgg {
     // bound_to_row left/both, +1 µs for right/none; mirrored for
     // row_to_bound, aggregate.py:1012-1036) is exactly the frame-endpoint
     // inclusivity below.
-    val includeEq =
-      if (boundToRow) closed == Closed.Left || closed == Closed.Both
-      else closed == Closed.Right || closed == Closed.Both
     val boundMarker = when(col("__is_boundary"), col(TsUs))
     // Both directions use GROWING (unboundedPreceding → moving bound)
     // frames, which Spark evaluates incrementally in O(n) per partition.
@@ -142,9 +140,6 @@ object EventBoundAgg {
 
     // 3. Boundary rows' cumsums, adjusted to include/exclude the boundary
     // event per closed (reference: aggregate.py:1002-1010).
-    val subtractOwnAtBoundary =
-      (boundToRow && (closed == Closed.Left || closed == Closed.Both)) ||
-        (!boundToRow && !(closed == Closed.Right || closed == Closed.Both))
     val boundaries = withCum
       .filter(col("__is_boundary"))
       .select(
@@ -158,12 +153,6 @@ object EventBoundAgg {
     val joined = withBound.join(boundaries, Seq("subject_id", "__bound_ts_us"), "left")
 
     // 4. Cumsum differences ± own-row counts (reference: :1020-1050).
-    val adjustOwn =
-      if (boundToRow)
-        ((closed == Closed.Left || closed == Closed.None) && offsetUs <= 0) || offsetUs < 0
-      else
-        ((closed == Closed.Left || closed == Closed.Both) && offsetUs <= 0) || offsetUs < 0
-
     val sumCols = predCols.map { c =>
       val diff =
         if (boundToRow) col(s"__cum_$c") - col(s"__bcum_$c")
@@ -203,7 +192,6 @@ object EventBoundAgg {
         // `__off_*` window columns computed up in `withCum` rode the
         // boundary join here, so the former correction join (and its
         // whole separate TemporalWindowAgg frame pass) is gone.
-        val addOffsetPeriod = boundToRow == (offsetUs > 0)
         resolved.select(
           Seq(col("subject_id"), col("timestamp"), col("timestamp_at_start"),
             col("timestamp_at_end")) ++

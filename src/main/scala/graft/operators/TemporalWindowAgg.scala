@@ -39,15 +39,14 @@ import graft.model.TemporalBounds
   */
 object TemporalWindowAgg {
 
-  /** Epoch-micros ordering key. Callers that pre-materialize it (sorted
-    * within partitions) let every window op here skip its per-operator
-    * sort — see Query's persist-and-sort of the canonical frame.
+  /** Epoch-micros ordering key. A caller that pre-materializes it (sorted
+    * within partitions) lets every window op here skip its own sort.
     */
   val TsUs = "__ts_us"
 
   def apply(df: DataFrame, bounds: TemporalBounds): DataFrame = {
-    // `__`-prefixed columns are engine internals (ordering key, shared
-    // cumsums), never predicates.
+    // `__`-prefixed columns are engine internals (the ordering key), never
+    // predicates.
     val predCols =
       df.columns.filterNot(c => c == "subject_id" || c == "timestamp" || c.startsWith("__"))
     val (lo, hi) = bounds.inclusiveFrame

@@ -1,13 +1,12 @@
 package graft.plans
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Lineage-cut points for the recursive plan composition.
-  *
-  * The window-tree recursion builds plans on plans (one window stack + join
-  * per tree edge); left unchecked, Catalyst re-analysis cost grows
-  * multiplicatively with tree depth (the Spark analogue of the reference's
-  * eager materialization at every step, src/aces/extract_subtree.py).
+/** Lineage-cut points: a frame that several later plans read (an
+  * iterative dedup round, a fitted index, a query result) is computed once
+  * and read back from storage, instead of every consumer re-running and
+  * re-analysing its whole lineage.
   *
   * Mode is read from the session conf `spark.graft.checkpoint`:
   *
@@ -26,6 +25,10 @@ object Materialize {
   def mode(df: DataFrame): String =
     df.sparkSession.conf.get("spark.graft.checkpoint", "local")
 
+  /** A lineage cut of `df`; with `eager`, computed before this returns. A
+    * failing eager `local` cut unpersists the RDD it marked before
+    * rethrowing, so a failed query leaves no blocks behind.
+    */
   def apply(df: DataFrame, eager: Boolean = false): DataFrame = mode(df) match {
     case "off" => df
     case "reliable" =>
@@ -36,6 +39,15 @@ object Materialize {
         sc.setCheckpointDir(dir)
       }
       df.checkpoint(eager)
-    case _ => df.localCheckpoint(eager)
+    case _ =>
+      // The lazy cut persists its RDD when planned; computing it here (the
+      // eager path's one job) keeps the handle needed to release it.
+      val cut = df.localCheckpoint(eager = false)
+      if (eager) {
+        val rdd = cut.queryExecution.logical.asInstanceOf[LogicalRDD].rdd
+        try rdd.count()
+        catch { case e: Throwable => rdd.unpersist(blocking = false); throw e }
+      }
+      cut
   }
 }

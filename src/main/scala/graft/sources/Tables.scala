@@ -25,7 +25,7 @@ object Tables {
     * refuses subset-key co-partitioning and re-shuffles BOTH sides of every
     * such join to hash(subject_id, timestamp) — at 100 TB that is the
     * difference between one ingest shuffle and 2 extra full-data shuffles
-    * per window-tree level. Subset co-partitioning is semantically exact
+    * per such join. Subset co-partitioning is semantically exact
     * here: both sides always descend from the same hash(subject_id)
     * exchange, so equal keys are co-located by construction.
     *
@@ -48,12 +48,18 @@ object Tables {
     * before. 16k is the measured saturation point (4k ≈ 16k ≪ 64k on the
     * langid probe); scheduling overhead per extra task (~5–10 ms) is two
     * orders below the serialized-stage cost it prevents.
+    *
+    * `legacy.bucketedTableScan.outputOrdering=true`: a scan of a bucketed
+    * table sorted on (subject_id, timestamp) — `PredicateFrames.writeBucketed`
+    * — reports that ordering when every bucket is one file (Spark checks),
+    * so the window-tree kernel's per-subject sort is skipped at scan time.
     */
   private val sessionConfs = Seq(
     "spark.sql.session.timeZone" -> "UTC",
     "spark.sql.legacy.parquet.nanosAsLong" -> "true",
     "spark.sql.requireAllClusterKeysForCoPartition" -> "false",
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "16k")
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "16k",
+    "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true")
 
   /** The settings above on a session builder (see [[graft.Sessions]]). */
   def configure(b: SparkSession.Builder): SparkSession.Builder =

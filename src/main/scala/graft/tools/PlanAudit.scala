@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.model.{EventBounds, TemporalBounds}
 import graft.operators.{EventBoundAgg, TemporalWindowAgg}
-import graft.sources.Tables
+import graft.plans.{WindowNode, WindowTree}
+import graft.sources.{PredicateFrames, Tables}
 
 /** Physical-plan audit: prints exchange counts and pushdown evidence for
   * the core operators, the artifacts backing the scale-design claims in
@@ -62,10 +63,9 @@ object PlanAudit {
     val adaptOk = modeUniform == "direct" && modeSkewed == "skew-safe"
     println(s"${if (adaptOk) "OK " else "HOT"} adaptive collapse decision     uniform=$modeUniform skewed=$modeSkewed")
 
-    // Post-ingest, the engine runs off the CACHED canonical frame (Query
-    // persists it sorted-within-partitions); every per-subject operator
-    // must add ZERO exchanges above the cache — one partitioning for the
-    // whole pipeline.
+    // Over a canonical frame cached sorted-within-partitions, every
+    // per-subject operator must add ZERO exchanges above the cache — one
+    // partitioning for the whole pipeline.
     val canonical = preds
       .withColumn(TemporalWindowAgg.TsUs, unix_micros(col("timestamp")))
       .sortWithinPartitions(col("subject_id"), col(TemporalWindowAgg.TsUs))
@@ -116,14 +116,33 @@ object PlanAudit {
     // Subset-key co-partitioning: a join on (subject_id, timestamp) over
     // two branches of the hash(subject_id)-partitioned frame must add NO
     // exchange (requireAllClusterKeysForCoPartition=false — without it,
-    // EnsureRequirements re-shuffles BOTH sides of every window-tree join
-    // to hash(subject_id, timestamp): 2 extra full-data shuffles per tree
-    // level at 100 TB). Regression guard for Tables.configure/tune.
+    // EnsureRequirements re-shuffles BOTH sides of every such join to
+    // hash(subject_id, timestamp): 2 extra full-data shuffles per join at
+    // 100 TB). Regression guard for Tables.configure/tune.
     val anchors = canonical.filter(col("is_click") > 0).select("subject_id", "timestamp")
     val joined = canonical.join(anchors, Seq("subject_id", "timestamp"), "inner")
     val nJoinEx = aboveCache(joined)
     println(s"${if (nJoinEx == 0) "OK " else "HOT"} co-partitioned anchor join     extra exchanges=$nJoinEx")
     if (nJoinEx != 0) joined.explain("formatted")
+
+    // Window-tree kernel: one sorted pass per subject adds NO exchange over
+    // the hash(subject_id)-partitioned frame, and neither an exchange nor a
+    // sort over a bucketed table sorted on (subject_id, timestamp) (one file
+    // per bucket: the frame's partitions map one-to-one onto the buckets).
+    val tree = WindowNode("trigger", None, children = Seq(
+      WindowNode("gap.end", Some(TemporalBounds(true, 86400000000L, true)), Map("is_purchase" -> (None, Some(0L))),
+        Seq(WindowNode("target.end", Some(EventBounds(false, "is_purchase", true, 0L)))))))
+    val kernelEx = exchanges(WindowTree(tree, "is_click", preds)) - exchanges(preds)
+    PredicateFrames.writeBucketed(preds, "graft_audit_bucketed",
+      buckets = spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val overBucketed = WindowTree(tree, "is_click", PredicateFrames.readBucketed(spark, "graft_audit_bucketed"))
+    val (bucketedEx, bucketedSorts) =
+      (exchanges(overBucketed), "Sort ".r.findAllIn(overBucketed.queryExecution.executedPlan.toString).length)
+    val kernelOk = kernelEx == 0 && bucketedEx == 0 && bucketedSorts == 0
+    println(s"${if (kernelOk) "OK " else "HOT"} window-tree kernel             added exchanges=$kernelEx " +
+      s"over bucketed: exchanges=$bucketedEx sorts=$bucketedSorts")
+    if (!kernelOk) overBucketed.explain("formatted")
+    spark.sql("DROP TABLE IF EXISTS graft_audit_bucketed")
 
     // Extension-operator plan shapes. Packing: one exchange (the bucket
     // repartition) feeds the per-bucket running-sum window. Decontaminate:

@@ -15,7 +15,7 @@ import graft.sources.{PredicateFrames, Tables}
   *
   * Args: [replication] [--no-checkpoint] [--stages] [--skew] [--runs N]
   *       [--bucketed]
-  *   --no-checkpoint  disable per-level lineage cuts (ExtractSubtree)
+  *   --no-checkpoint  spark.graft.checkpoint=off: Query returns a lazy plan
   *   --stages         per-stage breakdown of the timed runs (Probe.StageLog)
   *   --skew           inject a pathological subject owning ~10% of events
   *   --runs N         timed end-to-end runs (default 3); reports median

@@ -3,34 +3,22 @@ package graft.plans
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.model.{EndpointBounds, EventBounds, TemporalBounds}
+import graft.Query
+import graft.config.TaskConfig
+import graft.model.{EventBounds, TemporalBounds}
 import graft.operators.{Constraints, EventBoundAgg, TemporalWindowAgg}
 
-/** A node of the window tree: the trigger root plus one node per window
-  * start/end boundary, each carrying the endpoint expression that defines
-  * the window between it and its parent, and the count constraints that
-  * window must satisfy. (reference: src/aces/config.py:1574-1640 builds the
-  * same tree with bigtree Nodes.)
-  */
-final case class WindowNode(
-    name: String,
-    endpointExpr: Option[EndpointBounds],
-    constraints: Map[String, Constraints.Range] = Map.empty,
-    children: Seq[WindowNode] = Seq.empty
-)
-
-/** Recursive window-tree evaluator.
+/** Relational window-tree evaluator: the test oracle for [[WindowTree]].
   *
   * (reference: src/aces/extract_subtree.py:16-386; prose spec in
   * docs/source/algorithm.md:181-306.)
   *
-  * The recursion happens on the *driver*, composing one lazy Spark plan per
-  * tree edge; every per-subject operator below reuses a single hash
-  * partitioning on `subject_id`. To keep Catalyst re-analysis cost from
-  * growing multiplicatively with tree depth (the Spark analogue of the
-  * reference's eager materialization at every step), each level's
-  * constrained window summary is `localCheckpoint`ed — truncating lineage
-  * while preserving partitioning.
+  * A direct port of the reference's recursion: the driver composes one
+  * lazy Spark plan per tree edge — a [[TemporalWindowAgg]] or
+  * [[EventBoundAgg]] pass over the whole frame, joined to the edge's
+  * anchors — and each level's constrained window summary is a
+  * [[Materialize]] lineage cut. It shares no evaluation code with the
+  * per-subject kernel, which is what makes it an oracle.
   */
 object ExtractSubtree {
 
@@ -42,6 +30,20 @@ object ExtractSubtree {
     * tests on tiny data set `off` to keep plans inspectable.
     */
   private def maybeCheckpoint(df: DataFrame): DataFrame = Materialize(df)
+
+  /** [[Query]] with this evaluator in place of [[WindowTree]]: trigger
+    * anchors, pruning to subjects with a trigger row, the recursion, then
+    * Query's own label / index projection. The result is lazy.
+    */
+  def query(cfg: TaskConfig, predicatesDf: DataFrame): DataFrame = {
+    val filtered = Query.canonicalRows(cfg, predicatesDf)
+    val anchors = Constraints
+      .checkConstraints(Map(cfg.trigger.predicate -> (Some(1L), None)), filtered)
+      .select(col("subject_id"), col("timestamp").as("subtree_anchor_timestamp"))
+    val pruned = filtered.join(anchors.select("subject_id").distinct(), Seq("subject_id"), "left_semi")
+    Query.project(cfg,
+      apply(cfg.windowTree, anchors, pruned).withColumnRenamed("subtree_anchor_timestamp", "trigger"))
+  }
 
   /** @param anchors DataFrame(subject_id, subtree_anchor_timestamp) of valid
     *                realizations of this subtree's root.
