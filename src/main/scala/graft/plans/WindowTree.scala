@@ -1,9 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.catalyst.expressions.GenericRow
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.LongType
 
 import graft.model.{EndpointBounds, EventBounds, TemporalBounds}
 import graft.operators.{Constraints, EventBoundAgg}
@@ -41,12 +40,17 @@ final case class WindowNode(
   *     becomes the child's anchor and the root offset resets to 0;
   *   - a missing bound or a failed `has:` constraint drops the trigger row.
   *
-  * Per-task memory is one subject at a time: its rows × (predicates + 1)
-  * longs in arrays that double as they grow (≤ 16 B per row and column,
-  * 24 B for the moment of a copy), plus one int per boundary row of each
-  * event-bound predicate.
+  * Rows cross the kernel boundary as `array<bigint>` columns through typed
+  * encoders, unboxed. Per-task memory is one subject at a time: its rows ×
+  * (predicates + 1) longs in arrays that double as they grow, reused by
+  * the task's next subject (≤ 16 B per row and column, 24 B for the moment
+  * of a copy), plus an int and a long per boundary row of each event-bound
+  * predicate.
   */
 object WindowTree {
+
+  // Built once: deriving a product encoder reflects on the type.
+  private lazy val (inputEncoder, outputEncoder) = (Encoders.product[SubjectRow], Encoders.product[Realized])
 
   /** @param frame canonical predicates frame: unique, non-null
     *              (subject_id, timestamp) keys.
@@ -65,184 +69,183 @@ object WindowTree {
       i
     }
 
-    // Edges in pre-order: their output slots.
+    // Edges in pre-order: their output slots. Event bounds: the distinct
+    // boundary predicates (or record start / end) they search.
     val names = collection.mutable.ArrayBuffer.empty[String]
-    def compile(node: WindowNode, rootOffsetUs: Long): Seq[Edge] = node.children.map { child =>
+    val boundaries = collection.mutable.ArrayBuffer.empty[Int]
+    def compile(node: WindowNode, rootOffsetUs: Long): Array[Edge] = node.children.map { child =>
       val slot = names.size
       names += child.name
       val bounds = child.endpointExpr
         .getOrElse(throw new IllegalStateException(s"Node '${child.name}' lacks endpoint expr"))
         .withAddedOffset(rootOffsetUs)
-      val has = Constraints.resolve(child.constraints).map { case (c, (lo, hi)) => (predIndex(c), lo, hi) }
+      val has = Constraints.resolve(child.constraints).map { case (c, (lo, hi)) =>
+        (predIndex(c), lo.getOrElse(Long.MinValue), hi.getOrElse(Long.MaxValue))
+      }
       bounds match {
         case tb: TemporalBounds =>
-          Edge(slot, Left(tb), -1, has, compile(child, rootOffsetUs + tb.windowMicros))
+          val end = tb.offsetMicros + tb.windowMicros
+          Edge(slot, None, -1, tb.offsetMicros, end, tb.inclusiveFrame, has, compile(child, rootOffsetUs + tb.windowMicros))
         case eb: EventBounds =>
           val boundary = eb.boundEventName match {
             case EventBounds.StartOfRecord => Edge.RecordStart
             case EventBounds.EndOfRecord   => Edge.RecordEnd
             case p                         => predIndex(p)
           }
+          if (!boundaries.contains(boundary)) boundaries += boundary
           val rules = EventBoundAgg.Rules(eb.mode == "bound_to_row", eb.closed, eb.offsetMicros)
-          Edge(slot, Right(rules), boundary, has, compile(child, 0L))
+          Edge(slot, Some(rules), boundaries.indexOf(boundary), 0L, 0L, rules.offsetFrame.getOrElse((0L, -1L)),
+            has, compile(child, 0L))
       }
-    }
-    val kernel = new SubjectKernel(compile(tree, 0L), predIndex(trigger), predCols.size, names.size)
+    }.toArray
+    val kernel =
+      new SubjectKernel(compile(tree, 0L), predIndex(trigger), predCols.size, names.size, boundaries.toArray)
 
     val input = frame.select(
-      Seq(col("subject_id"), col("timestamp"), unix_micros(col("timestamp"))) ++
-        predCols.map(c => coalesce(col(c).cast(LongType), lit(0L))): _*)
-    val flat = StructType(
-      Seq("subject_id", "trigger").map(StructField(_, LongType, nullable = false)) ++
-        names.indices.flatMap(i =>
-          (Seq("start", "end") ++ predCols.indices).map(f => StructField(s"${i}_$f", LongType, nullable = false))))
+      col("subject_id"), col("timestamp"), unix_micros(col("timestamp")).as("us"),
+      array(predCols.map(c => coalesce(col(c).cast(LongType), lit(0L))): _*).as("counts"))
     val realized = input
       .groupBy("subject_id")
-      .as[Long, Row](Encoders.scalaLong, Encoders.row(input.schema))
-      .flatMapSortedGroups(col("timestamp"))(kernel.apply)(Encoders.row(flat))
+      .as[Long, SubjectRow](Encoders.scalaLong, inputEncoder)
+      .flatMapSortedGroups(col("timestamp"))(kernel.apply)(outputEncoder)
 
+    val width = 2 + predCols.size
+    def cell(i: Int): Column = col("cells").getItem(i)
     realized.select(
       Seq(col("subject_id").cast(frame.schema("subject_id").dataType).as("subject_id"),
         timestamp_micros(col("trigger")).as("trigger")) ++
         names.zipWithIndex.map { case (name, i) =>
           struct(
             Seq(lit(name).as("window_name"),
-              timestamp_micros(col(s"${i}_start")).as("timestamp_at_start"),
-              timestamp_micros(col(s"${i}_end")).as("timestamp_at_end")) ++
-              predCols.indices.map(c => col(s"${i}_$c").as(predCols(c))): _*
+              timestamp_micros(cell(i * width)).as("timestamp_at_start"),
+              timestamp_micros(cell(i * width + 1)).as("timestamp_at_end")) ++
+              predCols.indices.map(c => cell(i * width + 2 + c).as(predCols(c))): _*
           ).as(s"${name}_summary")
         }: _*)
   }
 }
 
-/** A compiled tree edge: its temporal bounds or event-bound rules, with
-  * the accumulated root offset applied; `boundary` is the event bound's
-  * predicate column index, or [[Edge.RecordStart]] / [[Edge.RecordEnd]];
-  * `has` holds (predicate index, min, max) constraints.
+/** Kernel input: a row's epoch µs and predicate counts. Output: per edge
+  * slot, the window's start µs, end µs and counts.
   */
-private final case class Edge(
-    slot: Int,
-    window: Either[TemporalBounds, EventBoundAgg.Rules],
-    boundary: Int,
-    has: Seq[(Int, Option[Long], Option[Long])],
-    children: Seq[Edge])
+private[plans] final case class SubjectRow(us: Long, counts: Array[Long])
+private[plans] final case class Realized(subject_id: Long, trigger: Long, cells: Array[Long])
+
+/** A compiled edge (root offset applied). Temporal (no `rules`): the window
+  * spans [start, end] µs from its anchor and counts the inclusive µs frame
+  * `frame`. Event-bound: `rules` over the `boundary`-th boundary, `frame`
+  * the offset-correction frame (empty if none). `has`: (predicate, min, max).
+  */
+private final case class Edge(slot: Int, rules: Option[EventBoundAgg.Rules], boundary: Int, start: Long, end: Long,
+    frame: (Long, Long), has: Seq[(Int, Long, Long)], children: Array[Edge])
 
 private object Edge {
   val RecordStart = -1
   val RecordEnd = -2
 }
 
-/** The per-subject evaluation behind [[WindowTree]]. Input rows are
-  * (subject_id, timestamp, epoch µs, predicate counts…) in timestamp
-  * order; each output row is (subject_id, trigger µs, then per edge slot:
-  * start µs, end µs, counts…).
+/** The per-subject evaluation behind [[WindowTree]], one instance per task.
+  * Its arrays are reused by the task's next subject, which
+  * `flatMapSortedGroups` passes only once this one's output is drained.
   */
-private final class SubjectKernel(roots: Seq[Edge], trigger: Int, nPreds: Int, nSlots: Int)
+private final class SubjectKernel(roots: Array[Edge], trigger: Int, nPreds: Int, nSlots: Int, boundaries: Array[Int])
     extends Serializable {
 
-  private val slotWidth = 2 + nPreds
+  private val width = 2 + nPreds
+  // Timestamps, and prefix sums: pre(k * nPreds + c) sums predicate c
+  // over rows [0, k). Per boundary: its rows and their timestamps.
+  private var n = 0
+  private var ts = new Array[Long](16)
+  private var pre = new Array[Long](17 * nPreds)
+  private val boundRows = new Array[Array[Int]](boundaries.length)
+  private val boundTs = new Array[Array[Long]](boundaries.length)
+  private val out = new Array[Long](nSlots * width)
 
-  def apply(subject: Long, rows: Iterator[Row]): Iterator[Row] = {
-    // Timestamps and prefix sums: pre(k * nPreds + c) sums predicate c
-    // over rows [0, k).
-    var n = 0
-    var ts = new Array[Long](16)
-    var pre = new Array[Long](17 * nPreds)
+  def apply(subject: Long, rows: Iterator[SubjectRow]): Iterator[Realized] = {
+    n = 0
     rows.foreach { r =>
       if (n == ts.length) {
         ts = java.util.Arrays.copyOf(ts, 2 * n)
         pre = java.util.Arrays.copyOf(pre, (2 * n + 1) * nPreds)
       }
-      ts(n) = r.getLong(2)
+      ts(n) = r.us
       var c = 0
       while (c < nPreds) {
-        pre((n + 1) * nPreds + c) = pre(n * nPreds + c) + r.getLong(3 + c)
+        pre((n + 1) * nPreds + c) = pre(n * nPreds + c) + r.counts(c)
         c += 1
       }
       n += 1
     }
-    def own(k: Int, c: Int): Long = pre((k + 1) * nPreds + c) - pre(k * nPreds + c)
-    val anchors = (0 until n).filter(own(_, trigger) >= 1)
-    if (anchors.isEmpty) return Iterator.empty
-
-    /** How many of indexes [0, len) satisfy `p`, which holds up to some index. */
-    def prefix(len: Int)(p: Int => Boolean): Int = {
-      var (lo, hi) = (0, len)
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        if (p(mid)) lo = mid + 1 else hi = mid
+    val anchors = (0 until n).iterator.filter(own(_, trigger) >= 1)
+    if (!anchors.hasNext) return Iterator.empty
+    for (i <- boundaries.indices) {
+      boundRows(i) = boundaries(i) match {
+        case Edge.RecordStart => Array(0)
+        case Edge.RecordEnd   => Array(n - 1)
+        case c                => (0 until n).filter(own(_, c) > 0).toArray
       }
-      lo
+      boundTs(i) = boundRows(i).map(ts(_))
     }
-    // Each event bound's boundary rows, in order, built on first use.
-    val boundaryRows = collection.mutable.Map.empty[Int, Array[Int]]
-    def rowsOf(boundary: Int): Array[Int] = boundaryRows.getOrElseUpdate(boundary, boundary match {
-      case Edge.RecordStart => Array(0)
-      case Edge.RecordEnd   => Array(n - 1)
-      case c                => (0 until n).filter(own(_, c) > 0).toArray
-    })
+    // `map` copies `out` right after `filter` has written it.
+    anchors.filter(holds(roots, _)).map(a => Realized(subject, ts(a), out.clone()))
+  }
 
-    val out = new Array[Long](2 + nSlots * slotWidth)
-    /** Sign · counts over the inclusive µs frame [t+lo, t+hi] into `out`. */
-    def addFrame(base: Int, t: Long, lo: Long, hi: Long, sign: Long): Unit =
-      if (lo <= hi) {
-        val u = prefix(n)(ts(_) <= t + hi) * nPreds
-        val l = prefix(n)(ts(_) < t + lo) * nPreds
-        for (c <- 0 until nPreds) out(base + 2 + c) += sign * (pre(u + c) - pre(l + c))
-      }
+  private def own(k: Int, c: Int): Long = pre((k + 1) * nPreds + c) - pre(k * nPreds + c)
 
-    /** Writes every edge's summary from anchor row `a`; false if one fails. */
-    def holds(edges: Seq[Edge], a: Int): Boolean = edges.forall { e =>
-      val base = 2 + e.slot * slotWidth
-      java.util.Arrays.fill(out, base + 2, base + slotWidth, 0L)
-      val childAnchor = e.window match {
-        case Left(tb) =>
-          val (lo, hi) = tb.inclusiveFrame
-          out(base) = ts(a) + tb.offsetMicros
-          out(base + 1) = ts(a) + tb.offsetMicros + tb.windowMicros
-          addFrame(base, ts(a), lo, hi, 1L)
-          a
-        case Right(r) =>
-          // The nearest boundary row at or before (bound_to_row), or at
-          // or after, row + offset; `includeEq` admits one exactly there.
-          val t = ts(a) + r.offsetUs
-          val bs = rowsOf(e.boundary)
-          val b =
-            if (r.boundToRow) {
-              val k = prefix(bs.length)(i => ts(bs(i)) < t || r.includeEq && ts(bs(i)) == t)
-              if (k == 0) -1 else bs(k - 1)
-            } else {
-              val k = prefix(bs.length)(i => ts(bs(i)) < t || !r.includeEq && ts(bs(i)) == t)
-              if (k == bs.length) -1 else bs(k)
-            }
-          if (b >= 0) {
-            val rowEdge = (if (r.adjustOwn) a else a + 1) * nPreds
-            val boundEdge = (if (r.subtractOwnAtBoundary) b else b + 1) * nPreds
-            val (from, to) = if (r.boundToRow) (boundEdge, rowEdge) else (rowEdge, boundEdge)
-            for (c <- 0 until nPreds) out(base + 2 + c) = pre(to + c) - pre(from + c)
-            r.offsetFrame.foreach { case (lo, hi) =>
-              addFrame(base, ts(a), lo, hi, if (r.addOffsetPeriod) 1L else -1L)
-            }
-            out(base) = if (r.boundToRow) ts(b) else t
-            out(base + 1) = if (r.boundToRow) t else ts(b)
-          }
-          b
-      }
-      childAnchor >= 0 &&
-      e.has.forall { case (c, lo, hi) =>
-        val v = out(base + 2 + c)
-        lo.forall(v >= _) && hi.forall(v <= _)
-      } &&
-      holds(e.children, childAnchor)
+  /** How many of `times(0 until len)` (ascending) are before `t` (`orAt`: or at it). */
+  private def countBefore(times: Array[Long], len: Int, t: Long, orAt: Boolean): Int = {
+    var lo = 0
+    var hi = len
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (times(mid) < t || orAt && times(mid) == t) lo = mid + 1 else hi = mid
     }
+    lo
+  }
 
-    anchors.iterator.flatMap { a =>
-      if (!holds(roots, a)) None
-      else {
-        out(0) = subject
-        out(1) = ts(a)
-        Some(new GenericRow(out.map(v => v: Any)))
-      }
+  /** Sign · counts of rows [from, to) into the summary at `base`. */
+  private def addRows(base: Int, from: Int, to: Int, sign: Long): Unit = {
+    var c = 0
+    while (c < nPreds) {
+      out(base + 2 + c) += sign * (pre(to * nPreds + c) - pre(from * nPreds + c))
+      c += 1
     }
+  }
+
+  /** Sign · counts over the inclusive µs frame [t+lo, t+hi]. */
+  private def addFrame(base: Int, t: Long, frame: (Long, Long), sign: Long): Unit =
+    if (frame._1 <= frame._2)
+      addRows(base, countBefore(ts, n, t + frame._1, orAt = false), countBefore(ts, n, t + frame._2, orAt = true), sign)
+
+  /** Writes every edge's summary from anchor row `a`; false if one fails. */
+  private def holds(edges: Array[Edge], a: Int): Boolean = edges.forall { e =>
+    val base = e.slot * width
+    java.util.Arrays.fill(out, base + 2, base + width, 0L)
+    val childAnchor = e.rules match {
+      case None =>
+        out(base) = ts(a) + e.start
+        out(base + 1) = ts(a) + e.end
+        addFrame(base, ts(a), e.frame, 1L)
+        a
+      case Some(r) =>
+        // The nearest boundary row at or before (bound_to_row), or at or
+        // after, row + offset; `includeEq` admits one exactly there.
+        val t = ts(a) + r.offsetUs
+        val (bRows, bTs) = (boundRows(e.boundary), boundTs(e.boundary))
+        val k = countBefore(bTs, bTs.length, t, r.includeEq == r.boundToRow)
+        val b = if (r.boundToRow) (if (k == 0) -1 else bRows(k - 1)) else if (k == bTs.length) -1 else bRows(k)
+        if (b >= 0) {
+          val rowEdge = if (r.adjustOwn) a else a + 1
+          val boundEdge = if (r.subtractOwnAtBoundary) b else b + 1
+          if (r.boundToRow) addRows(base, boundEdge, rowEdge, 1L) else addRows(base, rowEdge, boundEdge, 1L)
+          addFrame(base, ts(a), e.frame, if (r.addOffsetPeriod) 1L else -1L)
+          out(base) = if (r.boundToRow) ts(b) else t
+          out(base + 1) = if (r.boundToRow) t else ts(b)
+        }
+        b
+    }
+    childAnchor >= 0 &&
+    e.has.forall { case (c, lo, hi) => out(base + 2 + c) >= lo && out(base + 2 + c) <= hi } &&
+    holds(e.children, childAnchor)
   }
 }
