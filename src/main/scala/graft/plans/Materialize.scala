@@ -1,5 +1,6 @@
 package graft.plans
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 
@@ -15,9 +16,11 @@ import org.apache.spark.sql.execution.LogicalRDD
   *     lineage is truncated, so on a real cluster an executor loss kills
   *     the query. The right choice for local mode and for clusters where
   *     task retry (not executor loss) is the failure model.
-  *   - `reliable`: `df.checkpoint()` to the directory in
-  *     `spark.graft.checkpoint.dir` (sets `SparkContext.setCheckpointDir`
-  *     on first use) — survives executor loss; the 100 TB-cluster setting.
+  *   - `reliable`: `df.checkpoint()` to the directory in the session's
+  *     `spark.graft.checkpoint.dir` (`SparkContext.setCheckpointDir` is
+  *     pointed there whenever it is elsewhere; unset, the context keeps
+  *     its directory or gets one under /tmp) — survives executor loss;
+  *     the 100 TB-cluster setting.
   *   - `off`: no cuts (tiny data / plan-inspection tests).
   */
 object Materialize {
@@ -33,11 +36,13 @@ object Materialize {
     case "off" => df
     case "reliable" =>
       val sc = df.sparkSession.sparkContext
-      if (sc.getCheckpointDir.isEmpty) {
-        val dir = df.sparkSession.conf
-          .get("spark.graft.checkpoint.dir", s"/tmp/graft-checkpoints-${sc.applicationId}")
-        sc.setCheckpointDir(dir)
-      }
+      val named = df.sparkSession.conf.getOption("spark.graft.checkpoint.dir")
+      // The context holds one directory (a fresh subdirectory of the one
+      // it was given); a session that names another moves it there.
+      val elsewhere = named.exists(d =>
+        !sc.getCheckpointDir.exists(c => new Path(c).getParent.toUri.getPath == new Path(d).toUri.getPath))
+      if (sc.getCheckpointDir.isEmpty || elsewhere)
+        sc.setCheckpointDir(named.getOrElse(s"/tmp/graft-checkpoints-${sc.applicationId}"))
       df.checkpoint(eager)
     case _ =>
       // The lazy cut persists its RDD when planned; computing it here (the

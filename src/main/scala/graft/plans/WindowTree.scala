@@ -1,8 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{DataType, LongType}
 
 import graft.model.{EndpointBounds, EventBounds, TemporalBounds}
 import graft.operators.{Constraints, EventBoundAgg}
@@ -50,25 +50,79 @@ final case class WindowNode(
 object WindowTree {
 
   // Built once: deriving a product encoder reflects on the type.
-  private lazy val (inputEncoder, outputEncoder) = (Encoders.product[SubjectRow], Encoders.product[Realized])
+  private lazy val inputEncoder = Encoders.product[SubjectRow]
+  private[graft] lazy val outputEncoder = Encoders.product[Realized]
 
   /** @param frame canonical predicates frame: unique, non-null
     *              (subject_id, timestamp) keys.
-    * @return one row per realized trigger row: `subject_id`, `trigger`,
-    *         then a `<node>_summary` struct per tree node in pre-order
-    *         (`window_name`, `timestamp_at_start`, `timestamp_at_end`, one
-    *         count per predicate column).
+    * @return one row per realized trigger row: see [[summaries]].
     */
   def apply(tree: WindowNode, trigger: String, frame: DataFrame): DataFrame = {
     // `__`-prefixed columns are engine internals, never predicates.
     val predCols =
       frame.columns.filterNot(c => c == "subject_id" || c == "timestamp" || c.startsWith("__")).toSeq
+    val kernel = SubjectKernel(tree, trigger, predCols)
+    val input = frame.select(
+      col("subject_id"), col("timestamp"), unix_micros(col("timestamp")).as("us"),
+      array(predCols.map(c => coalesce(col(c).cast(LongType), lit(0L))): _*).as("counts"))
+    val realized = input
+      .groupBy("subject_id")
+      .as[Long, SubjectRow](Encoders.scalaLong, inputEncoder)
+      .flatMapSortedGroups(col("timestamp"))(kernel.apply)(outputEncoder)
+    summaries(realized, kernel, frame.schema("subject_id").dataType)
+  }
+
+  /** The kernel's rows as the window-tree result: `subject_id` (as
+    * `subjectType`), `trigger`, then a `<node>_summary` struct per tree
+    * node in pre-order (`window_name`, `timestamp_at_start`,
+    * `timestamp_at_end`, one count per predicate).
+    */
+  private[graft] def summaries(realized: Dataset[Realized], kernel: SubjectKernel, subjectType: DataType): DataFrame = {
+    val width = 2 + kernel.predicates.size
+    def cell(i: Int): Column = col("cells").getItem(i)
+    realized.select(
+      Seq(col("subject_id").cast(subjectType).as("subject_id"), timestamp_micros(col("trigger")).as("trigger")) ++
+        kernel.names.zipWithIndex.map { case (name, i) =>
+          struct(
+            Seq(lit(name).as("window_name"),
+              timestamp_micros(cell(i * width)).as("timestamp_at_start"),
+              timestamp_micros(cell(i * width + 1)).as("timestamp_at_end")) ++
+              kernel.predicates.indices.map(c => cell(i * width + 2 + c).as(kernel.predicates(c))): _*
+          ).as(s"${name}_summary")
+        }: _*)
+  }
+}
+
+/** Kernel input: a row's epoch µs and predicate counts. Output: per edge
+  * slot, the window's start µs, end µs and counts.
+  */
+private[graft] final case class SubjectRow(us: Long, counts: Array[Long])
+private[graft] final case class Realized(subject_id: Long, trigger: Long, cells: Array[Long])
+
+/** A compiled edge (root offset applied). Temporal (no `rules`): the window
+  * spans [start, end] µs from its anchor and counts the inclusive µs frame
+  * `frame`. Event-bound: `rules` over the `boundary`-th boundary, `frame`
+  * the offset-correction frame (empty if none). `has`: (predicate, min, max).
+  */
+private final case class Edge(slot: Int, rules: Option[EventBoundAgg.Rules], boundary: Int, start: Long, end: Long,
+    frame: (Long, Long), has: Seq[(Int, Long, Long)], children: Array[Edge])
+
+private object Edge {
+  val RecordStart = -1
+  val RecordEnd = -2
+}
+
+private[graft] object SubjectKernel {
+
+  /** The kernel of `tree` rooted at rows where `trigger` holds, over rows
+    * whose counts are the `predicates`, in that order.
+    */
+  def apply(tree: WindowNode, trigger: String, predicates: Seq[String]): SubjectKernel = {
     def predIndex(name: String): Int = {
-      val i = predCols.indexOf(name)
-      require(i >= 0, s"Predicate '$name' not found in the predicates frame: ${predCols.mkString(", ")}")
+      val i = predicates.indexOf(name)
+      require(i >= 0, s"Predicate '$name' not found in the predicates frame: ${predicates.mkString(", ")}")
       i
     }
-
     // Edges in pre-order: their output slots. Event bounds: the distinct
     // boundary predicates (or record start / end) they search.
     val names = collection.mutable.ArrayBuffer.empty[String]
@@ -98,71 +152,62 @@ object WindowTree {
             has, compile(child, 0L))
       }
     }.toArray
-    val kernel =
-      new SubjectKernel(compile(tree, 0L), predIndex(trigger), predCols.size, names.size, boundaries.toArray)
-
-    val input = frame.select(
-      col("subject_id"), col("timestamp"), unix_micros(col("timestamp")).as("us"),
-      array(predCols.map(c => coalesce(col(c).cast(LongType), lit(0L))): _*).as("counts"))
-    val realized = input
-      .groupBy("subject_id")
-      .as[Long, SubjectRow](Encoders.scalaLong, inputEncoder)
-      .flatMapSortedGroups(col("timestamp"))(kernel.apply)(outputEncoder)
-
-    val width = 2 + predCols.size
-    def cell(i: Int): Column = col("cells").getItem(i)
-    realized.select(
-      Seq(col("subject_id").cast(frame.schema("subject_id").dataType).as("subject_id"),
-        timestamp_micros(col("trigger")).as("trigger")) ++
-        names.zipWithIndex.map { case (name, i) =>
-          struct(
-            Seq(lit(name).as("window_name"),
-              timestamp_micros(cell(i * width)).as("timestamp_at_start"),
-              timestamp_micros(cell(i * width + 1)).as("timestamp_at_end")) ++
-              predCols.indices.map(c => cell(i * width + 2 + c).as(predCols(c))): _*
-          ).as(s"${name}_summary")
-        }: _*)
+    val roots = compile(tree, 0L)
+    new SubjectKernel(roots, predIndex(trigger), predicates, names.toSeq, boundaries.toArray)
   }
 }
 
-/** Kernel input: a row's epoch µs and predicate counts. Output: per edge
-  * slot, the window's start µs, end µs and counts.
-  */
-private[plans] final case class SubjectRow(us: Long, counts: Array[Long])
-private[plans] final case class Realized(subject_id: Long, trigger: Long, cells: Array[Long])
-
-/** A compiled edge (root offset applied). Temporal (no `rules`): the window
-  * spans [start, end] µs from its anchor and counts the inclusive µs frame
-  * `frame`. Event-bound: `rules` over the `boundary`-th boundary, `frame`
-  * the offset-correction frame (empty if none). `has`: (predicate, min, max).
-  */
-private final case class Edge(slot: Int, rules: Option[EventBoundAgg.Rules], boundary: Int, start: Long, end: Long,
-    frame: (Long, Long), has: Seq[(Int, Long, Long)], children: Array[Edge])
-
-private object Edge {
-  val RecordStart = -1
-  val RecordEnd = -2
-}
-
-/** The per-subject evaluation behind [[WindowTree]], one instance per task.
+/** The per-subject evaluation behind [[WindowTree]], one instance per task:
+  * [[load]] one subject's rows, then [[realize]] any of them as a trigger.
   * Its arrays are reused by the task's next subject, which
   * `flatMapSortedGroups` passes only once this one's output is drained.
   */
-private final class SubjectKernel(roots: Array[Edge], trigger: Int, nPreds: Int, nSlots: Int, boundaries: Array[Int])
-    extends Serializable {
+private[graft] final class SubjectKernel private (roots: Array[Edge], trigger: Int, val predicates: Seq[String],
+    val names: Seq[String], boundaries: Array[Int]) extends Serializable {
 
+  private val nPreds = predicates.size
   private val width = 2 + nPreds
   // Timestamps, and prefix sums: pre(k * nPreds + c) sums predicate c
-  // over rows [0, k). Per boundary: its rows and their timestamps.
+  // over rows [0, k). Per boundary: its rows and their timestamps, built
+  // on the loaded rows' first realize.
   private var n = 0
   private var ts = new Array[Long](16)
   private var pre = new Array[Long](17 * nPreds)
+  private var indexed = false
   private val boundRows = new Array[Array[Int]](boundaries.length)
   private val boundTs = new Array[Array[Long]](boundaries.length)
-  private val out = new Array[Long](nSlots * width)
+  private val out = new Array[Long](names.size * width)
+  private var read = 0L
 
+  /** A lower bound, relative to the trigger, on every instant a walk
+    * reads (≤ 0); `Long.MinValue` if a `<-` bound can read back to the
+    * record start.
+    */
+  val reach: Long = {
+    def from(edges: Array[Edge], anchor: Long): Long = edges.foldLeft(anchor) { (lo, e) =>
+      e.rules match {
+        case Some(r) if r.boundToRow => Long.MinValue
+        case _ =>
+          // A forward bound is at or after anchor + offset.
+          val child = anchor + e.rules.fold(0L)(_.offsetUs)
+          lo min (anchor + e.frame._1) min child min from(e.children, child)
+      }
+    }
+    from(roots, 0L)
+  }
+
+  /** Every trigger row of one subject's rows (ascending µs) that realizes. */
   def apply(subject: Long, rows: Iterator[SubjectRow]): Iterator[Realized] = {
+    load(rows)
+    (0 until n).iterator.filter(a => own(a, trigger) >= 1 && realize(a)).map(realized(subject, _))
+  }
+
+  /** Holds one subject's rows, ascending and unique in µs, until the next
+    * load.
+    */
+  def load(rows: Iterator[SubjectRow]): Unit = {
     n = 0
+    indexed = false
     rows.foreach { r =>
       if (n == ts.length) {
         ts = java.util.Arrays.copyOf(ts, 2 * n)
@@ -176,19 +221,34 @@ private final class SubjectKernel(roots: Array[Edge], trigger: Int, nPreds: Int,
       }
       n += 1
     }
-    val anchors = (0 until n).iterator.filter(own(_, trigger) >= 1)
-    if (!anchors.hasNext) return Iterator.empty
-    for (i <- boundaries.indices) {
-      boundRows(i) = boundaries(i) match {
-        case Edge.RecordStart => Array(0)
-        case Edge.RecordEnd   => Array(n - 1)
-        case c                => (0 until n).filter(own(_, c) > 0).toArray
-      }
-      boundTs(i) = boundRows(i).map(ts(_))
-    }
-    // `map` copies `out` right after `filter` has written it.
-    anchors.filter(holds(roots, _)).map(a => Realized(subject, ts(a), out.clone()))
   }
+
+  /** Walks the tree from loaded row `a`: true iff every window holds (its
+    * summaries then fill [[realized]]). Either way [[lastRead]] is then
+    * the latest instant the walk read: its anchors, temporal frame ends
+    * and found forward bounds; +∞ if a forward bound is not among the
+    * rows.
+    */
+  def realize(a: Int): Boolean = {
+    if (!indexed) {
+      for (i <- boundaries.indices) {
+        boundRows(i) = boundaries(i) match {
+          case Edge.RecordStart => Array(0)
+          case Edge.RecordEnd   => Array(n - 1)
+          case c                => (0 until n).filter(own(_, c) > 0).toArray
+        }
+        boundTs(i) = boundRows(i).map(ts(_))
+      }
+      indexed = true
+    }
+    read = ts(a)
+    holds(roots, a)
+  }
+
+  def lastRead: Long = read
+
+  /** The result row of the last [[realize]] of row `a`, if it held. */
+  def realized(subject: Long, a: Int): Realized = Realized(subject, ts(a), out.clone())
 
   private def own(k: Int, c: Int): Long = pre((k + 1) * nPreds + c) - pre(k * nPreds + c)
 
@@ -214,8 +274,10 @@ private final class SubjectKernel(roots: Array[Edge], trigger: Int, nPreds: Int,
 
   /** Sign · counts over the inclusive µs frame [t+lo, t+hi]. */
   private def addFrame(base: Int, t: Long, frame: (Long, Long), sign: Long): Unit =
-    if (frame._1 <= frame._2)
+    if (frame._1 <= frame._2) {
+      read = math.max(read, t + frame._2)
       addRows(base, countBefore(ts, n, t + frame._1, orAt = false), countBefore(ts, n, t + frame._2, orAt = true), sign)
+    }
 
   /** Writes every edge's summary from anchor row `a`; false if one fails. */
   private def holds(edges: Array[Edge], a: Int): Boolean = edges.forall { e =>
@@ -234,6 +296,10 @@ private final class SubjectKernel(roots: Array[Edge], trigger: Int, nPreds: Int,
         val (bRows, bTs) = (boundRows(e.boundary), boundTs(e.boundary))
         val k = countBefore(bTs, bTs.length, t, r.includeEq == r.boundToRow)
         val b = if (r.boundToRow) (if (k == 0) -1 else bRows(k - 1)) else if (k == bTs.length) -1 else bRows(k)
+        read =
+          if (r.boundToRow) math.max(read, t)
+          else if (b < 0) Long.MaxValue
+          else math.max(read, ts(b))
         if (b >= 0) {
           val rowEdge = if (r.adjustOwn) a else a + 1
           val boundEdge = if (r.subtractOwnAtBoundary) b else b + 1

@@ -1,11 +1,18 @@
 package graft.streaming
 
+import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 import scala.reflect.runtime.universe.TypeTag
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, KeyValueGroupedDataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.LongType
+
+import graft.Query
+import graft.config.TaskConfig
+import graft.model.{EventBounds, TemporalBounds}
+import graft.plans.{Realized, SubjectKernel, SubjectRow, WindowNode, WindowTree}
 
 /** Structured Streaming faces of the batch operators — the incremental
   * path the reference lacks (its "streaming" is stream-shaped data, batch
@@ -14,7 +21,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Operator families:
   *   - Cohort predicates: [[windowedCounts]] (tumbling windows),
   *     [[sessionizeStream]], [[cumulativeCounts]] (running totals), and
-  *     the trigger-anchored window tree [[cohortWindows]] (+
+  *     the batch window-tree kernel over a stream, [[cohortWindows]] (+
   *     [[labelRows]]); [[triggerWindowCounts]] is its one-window view.
   *   - Exact and url dedup ([[dedupExactStream]], [[urlDedupStream]]):
   *     Spark's own `dropDuplicatesWithinWatermark` on a 16-byte key.
@@ -36,7 +43,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object StreamingPredicates {
 
-  /** Saturating micros add — uncapped horizons/TTLs use Long.MaxValue as
+  /** Saturating micros add — infinite TTLs use Long.MaxValue as
     * +infinity, so `t + ttl` must clamp instead of wrapping. Shared by
     * every TTL-bounded state operator in this file (one definition: the
     * eviction-clock math must never diverge between the stateful streams).
@@ -158,16 +165,13 @@ object StreamingPredicates {
       bufferedTs: Array[Long],
       bufferedCounts: Array[Long])
 
-  /** Streaming trigger-window evaluation — the incremental analogue of the
-    * batch engine's trigger + temporal-lookahead window: every event where
+  /** Streaming trigger-window evaluation: every event where
     * `counts(triggerIdx) > 0` opens a window `(trigger, trigger+horizon]`;
     * its predicate sums are emitted exactly once, when the event-time
     * watermark passes the window end (so the window is provably closed).
     *
-    * A typed view of [[cohortWindows]] with one unconstrained temporal
-    * window. Its state is that operator's [[TriggerState]] — the layout
-    * and contents the former standalone machine stored, so its
-    * checkpoints resume.
+    * A typed view of [[cohortWindows]] over the one-edge tree
+    * `(trigger, trigger + horizon]`, predicates named `p0`, `p1`, ….
     */
   def triggerWindowCounts(
       events: Dataset[TimedEvent],
@@ -175,256 +179,148 @@ object StreamingPredicates {
       triggerIdx: Int,
       horizonMicros: Long
   ): Dataset[TriggerWindow] = {
-    val window = StreamWindowSpec("window", 0L, horizonMicros, endPredIdx = -1, 0L,
-      Array.fill(nPreds)(Long.MinValue), Array.fill(nPreds)(Long.MaxValue))
-    cohortWindows(events, nPreds, triggerIdx, Seq(window))
-      .map(r => TriggerWindow(r.subject_id, r.triggerTsMicros, r.windowEndsMicros(0), r.counts))(
-        Encoders.product[TriggerWindow])
+    val preds = Seq.tabulate(nPreds)(i => s"p$i")
+    val tree = WindowNode("trigger", None,
+      children = Seq(WindowNode("window", Some(TemporalBounds(false, horizonMicros, true)))))
+    cohortWindows(events, tree, preds(triggerIdx), preds)
+      .select(col("subject_id"), unix_micros(col("trigger")).as("triggerTsMicros"),
+        unix_micros(col("window_summary.timestamp_at_end")).as("windowEndMicros"),
+        array(preds.map(p => col(s"window_summary.$p")): _*).as("counts"))
+      .as(Encoders.product[TriggerWindow])
   }
 
-  /** One window of a streaming cohort task, anchored at the trigger.
+  /** Streaming ACES cohort: the batch window tree ([[WindowTree]]) over a
+    * watermarked event stream. Per subject, the state buffers the rows
+    * (same-instant rows summed, as the batch collapse does) and the
+    * pending triggers, and each call runs the batch kernel over the
+    * buffer once per pending trigger. A trigger is final once the latest
+    * instant its walk read (anchors, temporal frame ends, found forward
+    * bounds) is at or below the watermark: it is then emitted if its
+    * windows hold and dropped if not. Until then it waits, at most until
+    * the watermark passes `trigger + stateTtlMicros`, when it is dropped
+    * without emission (the batch null-bound drop).
     *
-    *   - Temporal window (`endPredIdx = -1`): spans
-    *     `(trigger + startOffsetMicros, trigger + endOffsetMicros]`.
-    *   - Event-bound window (`endPredIdx >= 0`): spans from
-    *     `start = trigger + startOffsetMicros` to the FIRST event with
-    *     `counts(endPredIdx) > 0` strictly after `start` (end event
-    *     included). The search is capped at `start + maxHorizonMicros`;
-    *     a trigger whose bound event does not arrive within the cap is
-    *     dropped (same outcome as the batch null-bound drop, provided the
-    *     cap covers the data's real gaps). Pass `Long.MaxValue` for an
-    *     UNCAPPED window — the batch engine's true unbounded
-    *     `start -> pred` lookahead ("wait for discharge") — which then
-    *     requires a finite `stateTtlMicros` on [[cohortWindows]] so state
-    *     stays bounded: the trigger waits for its bound event
-    *     indefinitely-up-to-TTL, and is evicted (no emission) once the
-    *     watermark passes `trigger + TTL`.
+    * State per subject is the pending triggers plus the rows some pending
+    * or future trigger can read: those from `min(pending) + reach` on,
+    * `reach` being the earliest instant before its trigger the tree can
+    * read. So a tree must not read back without bound (`<-` bounds), nor
+    * to a record end the stream never holds (`_RECORD_START` /
+    * `_RECORD_END`, which include `start: null`): such trees are
+    * rejected.
     *
-    * `minCounts`/`maxCounts`: per-predicate constraint bounds over the
-    * window's sums (`Long.MinValue`/`Long.MaxValue` = unconstrained) —
-    * the streaming analogue of the batch `has:` constraints.
-    */
-  final case class StreamWindowSpec(
-      name: String,
-      startOffsetMicros: Long,
-      endOffsetMicros: Long,
-      endPredIdx: Int,
-      maxHorizonMicros: Long,
-      minCounts: Array[Long],
-      maxCounts: Array[Long])
-
-  /** One emitted cohort row: `counts` is row-major `[window][predicate]`
-    * with stride nPreds; `windowEndsMicros` carries each window's resolved
-    * end. (Flat primitive arrays — see [[TriggerState]].)
-    */
-  final case class CohortRow(
-      subject_id: Long,
-      triggerTsMicros: Long,
-      windowEndsMicros: Array[Long],
-      counts: Array[Long])
-
-  /** Streaming MULTI-window cohort evaluation — the incremental analogue
-    * of the batch `Query` window tree for trigger-anchored window chains
-    * (e.g. the flagship's gap + event-bound target): every event with
-    * `counts(triggerIdx) > 0` opens one candidate cohort row; the row is
-    * emitted exactly once, when the event-time watermark has closed EVERY
-    * window (so sums are provably complete), and only if every window's
-    * constraints pass — StreamingSpec asserts output parity with the
-    * batch `Query` on the same data.
-    *
-    * State per subject = pending triggers + events some pending-or-future
-    * window could still read; both pruned on every watermark advance, so
-    * state is bounded by (max window deadline + allowed lateness) × rate.
-    *
-    * @param stateTtlMicros eviction deadline for unresolved triggers,
-    *        measured from the trigger event time: once the watermark
-    *        passes `trigger + TTL`, a still-open trigger is dropped
-    *        without emission (the batch null-bound drop). Mandatory when
-    *        any event-bound window is uncapped
-    *        (`maxHorizonMicros = Long.MaxValue`) — it is then the ONLY
-    *        state bound, giving per-subject state
-    *        ≈ (TTL + allowed lateness) × event rate.
+    * @param tree           window tree, as [[WindowTree]] takes it.
+    * @param trigger        the trigger predicate.
+    * @param predicates     the predicate behind each position of
+    *                       [[TimedEvent.counts]].
+    * @param stateTtlMicros how long past its trigger a trigger may wait.
+    *        Mandatory when the tree has a forward (`->`) bound, whose
+    *        event may never arrive; per-subject state is then bounded by
+    *        (TTL + allowed lateness) × event rate.
+    * @return `WindowTree`'s schema: `subject_id`, `trigger`, then a
+    *         `<node>_summary` struct per tree node.
     */
   def cohortWindows(
       events: Dataset[TimedEvent],
-      nPreds: Int,
-      triggerIdx: Int,
-      windows: Seq[StreamWindowSpec],
+      tree: WindowNode,
+      trigger: String,
+      predicates: Seq[String],
       stateTtlMicros: Long = Long.MaxValue
-  ): Dataset[CohortRow] = {
-    implicit val outEnc = Encoders.product[CohortRow]
-    implicit val stateEnc = Encoders.product[TriggerState]
-    val specs = windows.toArray
-    val uncapped = specs.filter(w => w.endPredIdx >= 0 && w.maxHorizonMicros == Long.MaxValue)
-    require(
-      uncapped.isEmpty || stateTtlMicros < Long.MaxValue,
-      s"event-bound window(s) [${uncapped.map(_.name).mkString(", ")}] are uncapped " +
-        "(maxHorizonMicros = Long.MaxValue) but no stateTtlMicros was given: an unbounded " +
-        "'start -> pred' lookahead cannot be streamed with finite state. Either cap the " +
-        "window (maxHorizonMicros >= the data's largest trigger-to-bound gap) or pass a " +
-        "finite stateTtlMicros T; per-subject state is then bounded by " +
+  ): DataFrame = {
+    val realized = events
+      .groupByKey(_.subject_id)(Encoders.scalaLong)
+      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
+        cohortState(tree, trigger, predicates, stateTtlMicros))(
+        Encoders.product[TriggerState], WindowTree.outputEncoder)
+    WindowTree.summaries(realized, SubjectKernel(tree, trigger, predicates), LongType)
+  }
+
+  /** The per-subject state function of [[cohortWindows]]. */
+  private[graft] def cohortState(
+      tree: WindowNode,
+      trigger: String,
+      predicates: Seq[String],
+      stateTtlMicros: Long): (Long, Iterator[TimedEvent], GroupState[TriggerState]) => Iterator[Realized] = {
+    def nodes(n: WindowNode): Seq[WindowNode] = n.children.flatMap(c => c +: nodes(c))
+    val bounds = nodes(tree).collect { case WindowNode(name, Some(eb: EventBounds), _, _) => name -> eb }
+    val recordEnds = Set(EventBounds.StartOfRecord, EventBounds.EndOfRecord)
+    val (unbounded, forward) =
+      bounds.partition { case (_, eb) => eb.mode == "bound_to_row" || recordEnds(eb.boundEventName) }
+    require(unbounded.isEmpty,
+      s"window(s) [${unbounded.map(_._1).mkString(", ")}] are bounded by a '<-', _RECORD_START or " +
+        "_RECORD_END event (start: null included): such a window can reach a subject's first or " +
+        "last event, which a stream never holds, so the tree cannot be streamed with bounded state.")
+    require(forward.isEmpty || stateTtlMicros < Long.MaxValue,
+      s"event-bound window(s) [${forward.map(_._1).mkString(", ")}] search forward ('->') for " +
+        "their bound but no stateTtlMicros was given: an unbounded lookahead cannot be streamed " +
+        "with finite state. Pass a finite stateTtlMicros T; per-subject state is then bounded by " +
         "(T + watermark allowed lateness) x event rate, and a trigger whose bound event " +
         "has not arrived once the watermark passes trigger + T is dropped — the same " +
         "outcome as the batch engine's null-bound row drop.")
-    val minStartOffset = specs.map(_.startOffsetMicros).min
-    events
-      .groupByKey(_.subject_id)(Encoders.scalaLong)
-      .flatMapGroupsWithState[TriggerState, CohortRow](
-        OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout()) {
-        (subject: Long, rows: Iterator[TimedEvent], state: GroupState[TriggerState]) =>
-          val wmMicros = state.getCurrentWatermarkMs() * 1000L
-          val prev = state.getOption.getOrElse(
-            TriggerState(Array.empty, Array.empty, Array.empty))
+    val kernel = SubjectKernel(tree, trigger, predicates)
+    val nPreds = predicates.size
+    val triggerIdx = predicates.indexOf(trigger)
 
-          val triggers = ArrayBuffer(prev.pendingTriggers: _*)
-          val bufTs = ArrayBuffer(prev.bufferedTs: _*)
-          val bufCounts = ArrayBuffer(prev.bufferedCounts: _*)
-          rows.foreach { e =>
-            if (e.tsMicros > wmMicros) {
-              bufTs += e.tsMicros
-              bufCounts ++= e.counts
-              if (e.counts(triggerIdx) > 0) triggers += e.tsMicros
-            }
-          }
-
-          val emissions = ArrayBuffer.empty[CohortRow]
-          val stillPending = ArrayBuffer.empty[Long]
-          // Earliest event-time at which some pending window could newly
-          // close — the next wake-up. Waking at the worst-case deadline
-          // (trigger + maxDeadlineOffset) instead would delay emission of
-          // an already-resolvable row by up to the full horizon when the
-          // subject receives no further events of its own.
-          var nextWake = Long.MaxValue
-          triggers.sorted.foreach { t =>
-            var allClosed = true
-            var failed = false
-            val ttlDeadline = satAdd(t, stateTtlMicros)
-            val ends = new Array[Long](specs.length)
-            var wi = 0
-            while (wi < specs.length && allClosed && !failed) {
-              val w = specs(wi)
-              val start = t + w.startOffsetMicros
-              if (w.endPredIdx < 0) {
-                val end = t + w.endOffsetMicros
-                if (wmMicros >= end) ends(wi) = end
-                else { allClosed = false; nextWake = math.min(nextWake, end) }
-              } else {
-                // First end-predicate event strictly after start. Events at
-                // or below the watermark are final (later arrivals would be
-                // late and dropped), so a found bound <= wm is THE bound.
-                val capEnd = satAdd(start, w.maxHorizonMicros)
-                var best = Long.MaxValue
-                var r = 0
-                while (r < bufTs.length) {
-                  val ts0 = bufTs(r)
-                  if (ts0 > start && ts0 <= capEnd && ts0 < best &&
-                      bufCounts(r * nPreds + w.endPredIdx) > 0) best = ts0
-                  r += 1
-                }
-                if (best != Long.MaxValue && best <= wmMicros) ends(wi) = best
-                else if (wmMicros >= capEnd) failed = true
-                else {
-                  allClosed = false
-                  // Candidate close: the buffered bound event (if one is
-                  // already known), the horizon cap, or the TTL eviction
-                  // point (whichever the watermark reaches first).
-                  nextWake = math.min(nextWake,
-                    math.min(best, math.min(capEnd, ttlDeadline)))
-                }
-              }
-              wi += 1
-            }
-            // TTL eviction: still unresolved once the watermark passes
-            // trigger + TTL -> drop without emission (batch null-bound
-            // drop). This is the state bound for uncapped windows.
-            if (!allClosed && wmMicros >= ttlDeadline) failed = true
-            if (!allClosed && !failed) stillPending += t
-            else if (!failed) {
-              val counts = new Array[Long](specs.length * nPreds)
-              var pass = true
-              wi = 0
-              while (wi < specs.length) {
-                val w = specs(wi)
-                val start = t + w.startOffsetMicros
-                val end = ends(wi)
-                var r = 0
-                while (r < bufTs.length) {
-                  val ts0 = bufTs(r)
-                  if (ts0 > start && ts0 <= end) {
-                    var i = 0
-                    while (i < nPreds) { counts(wi * nPreds + i) += bufCounts(r * nPreds + i); i += 1 }
-                  }
-                  r += 1
-                }
-                var i = 0
-                while (i < nPreds) {
-                  val c = counts(wi * nPreds + i)
-                  if (c < w.minCounts(i) || c > w.maxCounts(i)) pass = false
-                  i += 1
-                }
-                wi += 1
-              }
-              if (pass) emissions += CohortRow(subject, t, ends, counts)
-            }
-            // failed => trigger resolved with no emission (batch drops the
-            // row when an event bound is missing / a constraint fails)
-          }
-
-          // Prune events nothing can read anymore: pending triggers all
-          // have window starts >= min(pending) + minStartOffset; future
-          // triggers arrive > wm, so their starts are > wm + min(0, off).
-          val pendingFloor =
-            if (stillPending.isEmpty) Long.MaxValue else stillPending.min + minStartOffset
-          val pruneBelow = math.min(pendingFloor, wmMicros + math.min(0L, minStartOffset))
-          val keepIdx = (0 until bufTs.length).filter(r => bufTs(r) > pruneBelow)
-          val keepTs = keepIdx.map(bufTs).toArray
-          val keepCounts = keepIdx.flatMap(r =>
-            (0 until nPreds).map(i => bufCounts(r * nPreds + i))).toArray
-
-          if (stillPending.isEmpty && keepTs.isEmpty) state.remove()
-          else {
-            state.update(TriggerState(stillPending.toArray, keepTs, keepCounts))
-            val nextDeadlineMs =
-              if (stillPending.nonEmpty) math.max(nextWake / 1000L + 1L, wmMicros / 1000L + 1L)
-              // Events retained only for future triggers: wake on any
-              // watermark advance so the prune floor keeps moving.
-              else wmMicros / 1000L + 1L
-            state.setTimeoutTimestamp(nextDeadlineMs)
-          }
-          emissions.iterator
+    (subject: Long, rows: Iterator[TimedEvent], state: GroupState[TriggerState]) => {
+      val wmMicros = state.getCurrentWatermarkMs() * 1000L
+      val prev = state.getOption.getOrElse(TriggerState(Array.empty, Array.empty, Array.empty))
+      val pending = mutable.SortedSet(prev.pendingTriggers: _*)
+      val rowsAt = mutable.TreeMap.empty[Long, Array[Long]]
+      def add(t: Long, counts: Array[Long], from: Int): Unit = {
+        val sum = rowsAt.getOrElseUpdate(t, new Array[Long](nPreds))
+        var i = 0
+        while (i < nPreds) { sum(i) += counts(from + i); i += 1 }
       }
+      prev.bufferedTs.indices.foreach(r => add(prev.bufferedTs(r), prev.bufferedCounts, r * nPreds))
+      rows.foreach { e =>
+        if (e.tsMicros > wmMicros) {
+          add(e.tsMicros, e.counts, 0)
+          if (e.counts(triggerIdx) > 0) pending += e.tsMicros
+        }
+      }
+      // The kernel anchors on a trigger's own row. A checkpoint of the
+      // scan-loop evaluator lacks it when no window read it: restore it.
+      val bare = Array.tabulate(nPreds)(i => if (i == triggerIdx) 1L else 0L)
+      pending.foreach(t => if (!rowsAt.contains(t)) add(t, bare, 0))
+
+      val times = rowsAt.keysIterator.toArray
+      kernel.load(rowsAt.iterator.map { case (t, c) => SubjectRow(t, c) })
+      val emitted = ArrayBuffer.empty[Realized]
+      val waiting = ArrayBuffer.empty[Long]
+      var wake = Long.MaxValue
+      pending.foreach { t =>
+        val a = java.util.Arrays.binarySearch(times, t)
+        val held = kernel.realize(a)
+        val deadline = satAdd(t, stateTtlMicros)
+        if (kernel.lastRead <= wmMicros) { if (held) emitted += kernel.realized(subject, a) }
+        else if (wmMicros < deadline) {
+          waiting += t
+          wake = wake min kernel.lastRead min deadline
+        }
+      }
+
+      // Pending and future triggers (those arrive past the watermark) read
+      // nothing before their own time + reach.
+      val floor = (if (waiting.isEmpty) wmMicros + 1 else waiting.head min (wmMicros + 1)) + kernel.reach
+      val kept = rowsAt.rangeFrom(floor)
+      if (waiting.isEmpty && kept.isEmpty) state.remove()
+      else {
+        state.update(TriggerState(waiting.toArray, kept.keysIterator.toArray, kept.valuesIterator.flatten.toArray))
+        // Wake when the first waiting trigger can resolve; with none, on
+        // any watermark advance, so the retention floor keeps moving.
+        val wakeMs = if (waiting.isEmpty) 0L else wake / 1000L + 1L
+        state.setTimeoutTimestamp(math.max(wakeMs, wmMicros / 1000L + 1L))
+      }
+      emitted.iterator
+    }
   }
 
-  /** Project streamed cohort rows ([[cohortWindows]] output, live or from
-    * a sink table) onto the batch `Query` label surface:
-    * `(subject_id, index_timestamp, label, trigger)` — `label` is the
-    * label predicate's count over its window and `index_timestamp` the
-    * resolved end of the index window, both already carried by
-    * [[CohortRow]]. With this projection a streaming deployment emits the
-    * same label rows the batch engine writes (StreamingSpec asserts
-    * full-row equality), so a consumer can swap sinks without remapping.
-    *
-    * @param labelWindowIdx index into the `windows` spec seq of the window
-    *                       whose `label:` predicate defines the label.
-    * @param labelPredIdx   predicate index of the label predicate.
-    * @param indexWindowIdx window whose resolved end is the
-    *                       `index_timestamp` (reference: the window
-    *                       carrying `index_timestamp: end`).
+  /** The batch `Query` label surface over [[cohortWindows]] output (live
+    * or from a sink table): `Query`'s own label / index-timestamp
+    * projection of the task `cfg` whose tree and trigger the stream ran.
+    * A streaming deployment so writes the rows the batch engine writes
+    * (StreamingSpec asserts full-row equality).
     */
-  def labelRows(
-      cohort: DataFrame,
-      nPreds: Int,
-      labelWindowIdx: Int,
-      labelPredIdx: Int,
-      indexWindowIdx: Int
-  ): DataFrame =
-    cohort.select(
-      col("subject_id"),
-      timestamp_micros(element_at(col("windowEndsMicros"), indexWindowIdx + 1))
-        .as("index_timestamp"),
-      element_at(col("counts"), labelWindowIdx * nPreds + labelPredIdx + 1).as("label"),
-      timestamp_micros(col("triggerTsMicros")).as("trigger"))
+  def labelRows(cohort: DataFrame, cfg: TaskConfig): DataFrame = Query.project(cfg, cohort)
 
   /** Streaming exact dedup on the ingest path: keep the FIRST arrival of
     * each distinct text (by 64-bit exact hash + length, the

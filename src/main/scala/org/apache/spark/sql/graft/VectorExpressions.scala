@@ -216,8 +216,9 @@ case class PqAdcScoreBytes(left: Expression, right: Expression, offsets: Seq[Int
   * assignment's dominant CPU at scale). Selection semantics are exactly
   * the former comparator's (csim desc, cid asc; candidate order
   * irrelevant); the cosine arithmetic is [[FloatVectorCosine]]'s
-  * verbatim. Empty candidate arrays yield NULL (as `element_at(…, 1)`
-  * did).
+  * verbatim. A NaN cosine (a zero-norm or NaN-component vector) ranks
+  * below every number, NaNs tied. Empty candidate arrays yield NULL (as
+  * `element_at(…, 1)` did).
   */
 case class FloatVectorCosArgMaxCid(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -251,7 +252,8 @@ case class FloatVectorCosArgMaxCid(left: Expression, right: Expression)
         val yv = cv.getFloat(i).toDouble
         dot += xv * yv; na += xv * xv; nb += yv * yv; i += 1
       }
-      val sim = dot / (math.sqrt(na) * math.sqrt(nb))
+      val cos = dot / (math.sqrt(na) * math.sqrt(nb))
+      val sim = if (cos.isNaN) Double.NegativeInfinity else cos // NaN scores worst
       if (k == 0 || sim > bestSim || (sim == bestSim && cid < bestCid)) {
         bestSim = sim; bestCid = cid
       }
@@ -295,6 +297,7 @@ case class FloatVectorCosArgMaxCid(left: Expression, right: Expression)
       |      $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
       |    }
       |    double $sim = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
+      |    if ($sim != $sim) $sim = Double.NEGATIVE_INFINITY;
       |    if ($k == 0 || $sim > $bestSim || ($sim == $bestSim && $cid < $bestCid)) {
       |      $bestSim = $sim; $bestCid = $cid;
       |    }
@@ -311,7 +314,8 @@ case class FloatVectorCosArgMaxCid(left: Expression, right: Expression)
 
 /** Arg-min-squared-L2 candidate id — [[FloatVectorCosArgMaxCid]]'s PQ
   * twin (d asc, cid asc; the byDistAsc comparator's exact semantics),
-  * with [[FloatVectorL2Sq]]'s arithmetic verbatim.
+  * with [[FloatVectorL2Sq]]'s arithmetic verbatim. A NaN distance ranks
+  * worst, tied with +∞.
   */
 case class FloatVectorL2ArgMinCid(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -342,6 +346,7 @@ case class FloatVectorL2ArgMinCid(left: Expression, right: Expression)
         val d = v.getFloat(i).toDouble - cv.getFloat(i).toDouble
         s += d * d; i += 1
       }
+      if (s.isNaN) s = Double.PositiveInfinity // NaN scores worst
       if (k == 0 || s < bestD || (s == bestD && cid < bestCid)) {
         bestD = s; bestCid = cid
       }
@@ -379,6 +384,7 @@ case class FloatVectorL2ArgMinCid(left: Expression, right: Expression)
       |      double $d = (double) $a.getFloat($i) - (double) $cv.getFloat($i);
       |      $s += $d * $d;
       |    }
+      |    if ($s != $s) $s = Double.POSITIVE_INFINITY;
       |    if ($k == 0 || $s < $bestD || ($s == $bestD && $cid < $bestCid)) {
       |      $bestD = $s; $bestCid = $cid;
       |    }

@@ -196,9 +196,16 @@ class EndToEndSpec extends SparkSpec {
 
     spark.conf.set("spark.graft.checkpoint", "local")
     val local = snap(Query(cfg, predsDf))
+    val dir = Files.createTempDirectory("graft-e2e-ckpt")
     spark.conf.set("spark.graft.checkpoint", "reliable")
-    val reliable = snap(Query(cfg, predsDf))
-    spark.conf.unset("spark.graft.checkpoint")
+    spark.conf.set("spark.graft.checkpoint.dir", dir.toString)
+    val reliable =
+      try snap(Query(cfg, predsDf))
+      finally {
+        spark.conf.unset("spark.graft.checkpoint")
+        spark.conf.unset("spark.graft.checkpoint.dir")
+        deleteTree(dir)
+      }
     assert(local.nonEmpty && local == reliable)
   }
 

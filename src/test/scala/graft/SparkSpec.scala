@@ -24,6 +24,13 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       )
   }
 
+  /** Deletes `dir` and everything under it. */
+  def deleteTree(dir: java.nio.file.Path): Unit = {
+    val files = java.nio.file.Files.walk(dir)
+    try files.sorted(java.util.Comparator.reverseOrder()).forEach(java.nio.file.Files.delete(_))
+    finally files.close()
+  }
+
   /** Render a result frame to sorted rows of strings for golden comparison.
     * Timestamps formatted in UTC seconds precision; nulls → "null".
     */

@@ -2,11 +2,19 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.api.java.Optional
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
+import org.apache.spark.sql.types.LongType
+import org.scalacheck.{Gen, Prop, Test => SCTest}
 
+import graft.config.TaskConfig
+import graft.model.{EndpointBounds, EventBounds}
+import graft.plans.{Realized, SubjectKernel, WindowNode, WindowTree}
 import graft.streaming.StreamingPredicates
-import graft.streaming.StreamingPredicates.SubjectEvent
+import graft.streaming.StreamingPredicates.{SubjectEvent, TriggerState}
 
 /** Structured Streaming extension tests via MemoryStream micro-batches. */
 class StreamingSpec extends SparkSpec {
@@ -162,6 +170,45 @@ class StreamingSpec extends SparkSpec {
       batchLabels: Set[(Long, Long, Long, Long)],
       streamedLabels: Set[(Long, Long, Long, Long)])
 
+  /** (subject, trigger µs, gap counts, target counts) of cohort rows. */
+  private def cohortCounts(rows: DataFrame): Set[(Long, Long, List[Long], List[Long])] =
+    rows
+      .select(
+        col("subject_id"), unix_micros(col("trigger")).as("t"),
+        col("`gap.end_summary`.click"), col("`gap.end_summary`.buy"),
+        col("`gap.end_summary`.error"),
+        col("`target.end_summary`.click"), col("`target.end_summary`.buy"),
+        col("`target.end_summary`.error"))
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1),
+        List(r.getLong(2), r.getLong(3), r.getLong(4)),
+        List(r.getLong(5), r.getLong(6), r.getLong(7))))
+      .toSet
+
+  /** (subject, index_timestamp µs, label, trigger µs) of label rows. */
+  private def labelSurface(rows: DataFrame): Set[(Long, Long, Long, Long)] =
+    rows
+      .select(col("subject_id"), unix_micros(col("index_timestamp")),
+        col("label"), unix_micros(col("trigger")))
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .toSet
+
+  private val day = 24 * 3600L * 1000000L
+
+  /** The cohort task's events as a watermarked [[TimedEvent]] stream. */
+  private def cohortEvents(input: MemoryStream[(Long, Timestamp, String)]) = {
+    import spark.implicits._
+    input.toDF().toDF("subject_id", "timestamp", "code")
+      .withWatermark("timestamp", "0 seconds")
+      .select(col("subject_id"), col("timestamp"),
+        array(
+          (col("code") === "click").cast("long"),
+          (col("code") === "buy").cast("long"),
+          (col("code") === "error").cast("long")).as("counts"))
+      .as[StreamingPredicates.TimedEvent]
+  }
+
   /** Run `data` through the batch Query AND cohortWindows; return both
     * result sets as (subject, trigger µs, gap counts, target counts) plus
     * the full label-row surfaces from each side.
@@ -169,12 +216,11 @@ class StreamingSpec extends SparkSpec {
   private def cohortBothWays(
       data: Seq[(Long, String, String)],
       sinkName: String,
-      targetHorizonMicros: Long = 24 * 3600L * 1000000L,
-      stateTtlMicros: Long = Long.MaxValue,
+      stateTtlMicros: Long = 30 * day,
       flushTimes: Seq[String] = Seq("2024-01-05 00:00:00", "2024-01-05 01:00:00")): ParityRun = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val cfg = graft.config.TaskConfig.fromYaml(cohortYaml)
+    val cfg = TaskConfig.fromYaml(cohortYaml)
 
     val medsDf = data.toDF("subject_id", "time", "code")
       .withColumn("time", to_timestamp(col("time")))
@@ -184,50 +230,16 @@ class StreamingSpec extends SparkSpec {
     val (batchRows, batchLabels) =
       try {
         val batchOut = Query(cfg, preds)
-        val counts = batchOut
-          .select(
-            col("subject_id"), unix_micros(col("trigger")).as("t"),
-            col("`gap.end_summary`.click"), col("`gap.end_summary`.buy"),
-            col("`gap.end_summary`.error"),
-            col("`target.end_summary`.click"), col("`target.end_summary`.buy"),
-            col("`target.end_summary`.error"))
-          .collect()
-          .map(r => (r.getLong(0), r.getLong(1),
-            List(r.getLong(2), r.getLong(3), r.getLong(4)),
-            List(r.getLong(5), r.getLong(6), r.getLong(7))))
-          .toSet
-        val labels = batchOut
-          .select(col("subject_id"), unix_micros(col("index_timestamp")),
-            col("label"), unix_micros(col("trigger")))
-          .collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-          .toSet
-        (counts, labels)
+        (cohortCounts(batchOut), labelSurface(batchOut))
       } finally spark.conf.unset("spark.graft.checkpoint")
 
-    // Streaming side: same data through cohortWindows, flush events to
-    // push the watermark past every deadline + a batch for the timeout.
+    // Streaming side: same data through cohortWindows over the task's own
+    // tree, flush events to push the watermark past every deadline + a
+    // batch for the timeout.
     val input = MemoryStream[(Long, Timestamp, String)]
-    val events = input.toDF().toDF("subject_id", "timestamp", "code")
-      .withWatermark("timestamp", "0 seconds")
-      .select(col("subject_id"), col("timestamp"),
-        array(
-          (col("code") === "click").cast("long"),
-          (col("code") === "buy").cast("long"),
-          (col("code") === "error").cast("long")).as("counts"))
-      .as[StreamingPredicates.TimedEvent]
-    val hour = 3600L * 1000000L
-    val none = Array.fill(3)(Long.MinValue)
-    val any = Array.fill(3)(Long.MaxValue)
-    val specs = Seq(
-      // gap: (trigger, trigger+2h], error count must be 0
-      StreamingPredicates.StreamWindowSpec("gap", 0L, 2 * hour, -1, 2 * hour,
-        none, Array(Long.MaxValue, Long.MaxValue, 0L)),
-      // target: (trigger+2h, first buy], horizon per the caller (default
-      // 24h cap; Long.MaxValue = uncapped, TTL-bounded)
-      StreamingPredicates.StreamWindowSpec("target", 2 * hour, 0L, 1, targetHorizonMicros, none, any))
     val out = StreamingPredicates.cohortWindows(
-      events, nPreds = 3, triggerIdx = 0, specs, stateTtlMicros = stateTtlMicros)
+      cohortEvents(input), cfg.windowTree, cfg.trigger.predicate, Seq("click", "buy", "error"),
+      stateTtlMicros = stateTtlMicros)
 
     val query = out.writeStream
       .format("memory").queryName(sinkName).outputMode("append").start()
@@ -239,21 +251,10 @@ class StreamingSpec extends SparkSpec {
           input.addData((99L, ts(t), "noop"))
           query.processAllAvailable()
         }
-        spark.table(sinkName).collect().map { r =>
-          val c = r.getSeq[Long](3)
-          (r.getLong(0), r.getLong(1), c.slice(0, 3).toList, c.slice(3, 6).toList)
-        }.toSet
+        cohortCounts(spark.table(sinkName))
       } finally query.stop()
-    // Label surface from the SAME sink rows: target (idx 1) carries both
-    // the label predicate (buy, idx 1) and index_timestamp: end.
-    val streamedLabels = StreamingPredicates
-      .labelRows(spark.table(sinkName), nPreds = 3,
-        labelWindowIdx = 1, labelPredIdx = 1, indexWindowIdx = 1)
-      .select(col("subject_id"), unix_micros(col("index_timestamp")),
-        col("label"), unix_micros(col("trigger")))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toSet
+    // Label surface from the SAME sink rows, through the batch projection.
+    val streamedLabels = labelSurface(StreamingPredicates.labelRows(spark.table(sinkName), cfg))
     ParityRun(batchRows, streamed, batchLabels, streamedLabels)
   }
 
@@ -296,6 +297,9 @@ class StreamingSpec extends SparkSpec {
           (subj, f"2024-01-01 ${m / 60}%02d:${m % 60}%02d:00", code)
         }
       }
+      // The target's bound is searched without limit (TTL-bounded state):
+      // triggers whose bound never arrives stay pending, matching the
+      // batch null-bound drop.
       val run = cohortBothWays(data, s"cohort_rand_$seed")
       val (batch, streamed) = (run.batchCounts, run.streamedCounts)
       assert(streamed == batch,
@@ -304,29 +308,13 @@ class StreamingSpec extends SparkSpec {
       assert(run.streamedLabels == run.batchLabels,
         s"seed $seed: label rows diverge: missing=${(run.batchLabels -- run.streamedLabels).take(3)} " +
           s"extra=${(run.streamedLabels -- run.batchLabels).take(3)}")
-
-      // Same stream through the UNCAPPED target window (TTL-bounded
-      // state): on data whose bound gaps fit inside the TTL this is the
-      // batch engine's exact unbounded semantics, so parity must hold
-      // here too — triggers whose bound never arrives simply stay
-      // pending/evicted, matching the batch null-bound drop.
-      val unc = cohortBothWays(data, s"cohort_rand_unc_$seed",
-        targetHorizonMicros = Long.MaxValue,
-        stateTtlMicros = 30L * 24 * 3600 * 1000000L)
-      assert(unc.streamedCounts == unc.batchCounts,
-        s"seed $seed uncapped: streamed ${unc.streamedCounts.size} != batch ${unc.batchCounts.size}: " +
-          s"missing=${(unc.batchCounts -- unc.streamedCounts).take(3)} " +
-          s"extra=${(unc.streamedCounts -- unc.batchCounts).take(3)}")
-      assert(unc.streamedLabels == unc.batchLabels, s"seed $seed uncapped: label rows diverge")
     }
   }
 
   test("uncapped event-bound window matches batch when the bound arrives days later") {
-    val day = 24 * 3600L * 1000000L
     val data = Seq(
-      // Subject 1's buy lands 5 days after the trigger — far beyond the
-      // 24h cap the capped variant uses; only the uncapped window (the
-      // batch engine's true unbounded `start -> buy`) finds it.
+      // Subject 1's buy lands 5 days after the trigger; the bound search
+      // (the batch engine's unbounded `start -> buy`) still finds it.
       (1L, "2024-01-01 10:00:00", "click"),
       (1L, "2024-01-06 10:00:00", "buy"),
       // Subject 2's buy never arrives: batch drops the row (null bound);
@@ -334,7 +322,6 @@ class StreamingSpec extends SparkSpec {
       (2L, "2024-01-01 09:00:00", "click"))
     val run = cohortBothWays(
       data, "cohort_uncapped",
-      targetHorizonMicros = Long.MaxValue,
       stateTtlMicros = 30 * day,
       // Push the watermark past subject 1's bound, then past every TTL.
       flushTimes = Seq("2024-01-07 00:00:00", "2024-02-15 00:00:00", "2024-02-15 01:00:00"))
@@ -346,21 +333,147 @@ class StreamingSpec extends SparkSpec {
       s"streamed labels ${run.streamedLabels} != batch ${run.batchLabels}")
   }
 
+  private def oneEdgeTree(name: String, bound: EndpointBounds) =
+    WindowNode("trigger", None, children = Seq(WindowNode(name, Some(bound))))
+
   test("uncapped event-bound window without a TTL is rejected with the bound formula") {
     import spark.implicits._
-    val none = Array.fill(1)(Long.MinValue)
-    val any = Array.fill(1)(Long.MaxValue)
     val err = intercept[IllegalArgumentException] {
       StreamingPredicates.cohortWindows(
         spark.emptyDataset[StreamingPredicates.TimedEvent],
-        nPreds = 1, triggerIdx = 0,
-        windows = Seq(StreamingPredicates.StreamWindowSpec(
-          "discharge", 0L, 0L, 0, Long.MaxValue, none, any)))
+        oneEdgeTree("discharge", EventBounds(false, "p0", true)), "p0", Seq("p0"))
     }
     assert(err.getMessage.contains("discharge"))
     assert(err.getMessage.contains("stateTtlMicros"))
     assert(err.getMessage.contains("(T + watermark allowed lateness) x event rate"),
       s"message must give the state-bound formula; got: ${err.getMessage}")
+  }
+
+  test("cohortWindows rejects trees that read back to the record start") {
+    import spark.implicits._
+    Seq(EventBounds(false, "-p0", true), EventBounds(true, EventBounds.EndOfRecord, true),
+        TaskConfig.fromYaml(
+          """predicates:
+            |  p0: { code: A }
+            |trigger: p0
+            |windows:
+            |  input:
+            |    start: null
+            |    end: trigger
+            |    start_inclusive: True
+            |    end_inclusive: True
+            |""".stripMargin).windowTree.children.head.endpointExpr.get).foreach { bound =>
+      val err = intercept[IllegalArgumentException] {
+        StreamingPredicates.cohortWindows(
+          spark.emptyDataset[StreamingPredicates.TimedEvent],
+          oneEdgeTree("history", bound), "p0", Seq("p0"), stateTtlMicros = day)
+      }
+      assert(err.getMessage.contains("[history]") && err.getMessage.contains("bounded state"),
+        s"$bound: ${err.getMessage}")
+    }
+  }
+
+  test("cohortWindows state drops to 0 rows once the watermark passes every read and TTL") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val cfg = TaskConfig.fromYaml(cohortYaml)
+    val input = MemoryStream[(Long, Timestamp, String)]
+    val out = StreamingPredicates.cohortWindows(
+      cohortEvents(input), cfg.windowTree, cfg.trigger.predicate, Seq("click", "buy", "error"),
+      stateTtlMicros = 30 * day)
+    val query = out.writeStream
+      .format("memory").queryName("cohort_state_bound").outputMode("append").start()
+    def stateRows = query.lastProgress.stateOperators.map(_.numRowsTotal).sum
+    try {
+      input.addData(
+        (1L, ts("2024-01-01 10:00:00"), "click"), // realizes at its 12:30 buy
+        (1L, ts("2024-01-01 12:30:00"), "buy"),
+        (2L, ts("2024-01-01 09:00:00"), "click")) // its buy never arrives
+      query.processAllAvailable()
+      assert(stateRows == 2, s"both subjects hold a pending trigger: $stateRows")
+      // Past subject 2's TTL (Jan 31 09:00); the row itself is retained
+      // until a later watermark passes it.
+      input.addData((99L, ts("2024-02-15 00:00:00"), "noop"))
+      query.processAllAvailable()
+      // A late row: dropped, but its batch runs at the Feb 15 watermark.
+      input.addData((99L, ts("2024-01-01 00:00:00"), "noop"))
+      query.processAllAvailable()
+      assert(stateRows == 0, s"state must be empty: ${query.lastProgress.stateOperators.mkString}")
+      assert(spark.table("cohort_state_bound").select(col("subject_id")).as[Long].collect().toSeq == Seq(1L))
+    } finally query.stop()
+  }
+
+  test("cohort state matches batch WindowTree on generated trees, splits, arrival orders and watermarks") {
+    val res = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(100).withWorkers(4),
+      Prop.forAllNoShrink(WindowTreeGen.treeGen(streamable = true), WindowTreeGen.framesGen,
+        Gen.long)(streamAgrees))
+    assert(res.passed, res.status.toString)
+    assert(streamRealized.get >= 25, s"only ${streamRealized.get} of 100 cases realized a row")
+  }
+
+  private val streamRealized = new java.util.concurrent.atomic.AtomicInteger
+
+  /** Batch [[WindowTree]] over the collapsed frame `rows` against the
+    * cohort state function over a stream of the same rows: each instant
+    * split into 1–3 raw rows, arrivals shuffled within a random delay,
+    * random micro-batches, and each batch at a random watermark no row of
+    * it or later is behind. A final watermark past every TTL must resolve
+    * every trigger and leave no state.
+    */
+  private def streamAgrees(tree: WindowNode, rows: Seq[WindowTreeGen.Ev], seed: Long): Prop = {
+    import WindowTreeGen.{Hour, T0}
+    val rnd = new scala.util.Random(seed)
+    val ttl = 60 * day
+    val frame = WindowTreeGen.toDf(spark, rows).filter(col("timestamp").isNotNull)
+      .withColumn(EventBounds.AnyEvent, lit(1L))
+    val preds = frame.columns.drop(2).toSeq
+    val want = snap(WindowTree(tree, "pA", frame))
+
+    val raw = rows.collect { case WindowTreeGen.Ev(s, Some(h), c) =>
+      val parts = 1 + rnd.nextInt(3)
+      val split = Array.fill(parts, preds.size)(0L)
+      c.indices.foreach(i => (0L until c(i)).foreach(_ => split(rnd.nextInt(parts))(i) += 1))
+      split(0)(preds.size - 1) = 1L
+      split.toSeq.map(counts => (s, T0 + h * Hour, counts))
+    }.flatten
+    val delay = rnd.nextInt(49) * Hour
+    val arrivals = raw.map(r => (r, r._2 + (rnd.nextDouble() * delay).toLong)).sortBy(_._2).map(_._1)
+    val batches = {
+      val cuts = arrivals.indices.filter(_ => rnd.nextInt(4) == 0)
+      (0 +: cuts :+ arrivals.size).distinct.sliding(2).collect { case Seq(a, b) => arrivals.slice(a, b) }.toSeq
+    }
+
+    val fn = StreamingPredicates.cohortState(tree, "pA", preds, ttl)
+    val states = collection.mutable.Map.empty[Long, (TriggerState, Long)]
+    val emitted = collection.mutable.ArrayBuffer.empty[Realized]
+    def call(subject: Long, in: Seq[(Long, Long, Array[Long])], wmMs: Long): Unit = {
+      val prev = states.get(subject)
+      val st = TestGroupState.create[TriggerState](
+        Optional.ofNullable(prev.map(_._1).orNull), GroupStateTimeout.EventTimeTimeout(), 0L,
+        Optional.of(wmMs), in.isEmpty)
+      emitted ++= fn(subject, in.iterator.map { case (s, us, c) =>
+        StreamingPredicates.TimedEvent(s, new Timestamp(us / 1000), c)
+      }, st)
+      if (st.exists) states(subject) = (st.get, st.getTimeoutTimestampMs.get)
+      else states -= subject
+    }
+    def timeouts(wmMs: Long): Unit =
+      states.collect { case (s, (_, at)) if at < wmMs => s }.toSeq.foreach(call(_, Nil, wmMs))
+    var wmMs = 0L
+    batches.zipWithIndex.foreach { case (batch, k) =>
+      val latest = batches.drop(k).flatten.map(_._2).min / 1000 - 1
+      if (latest > wmMs) wmMs += (rnd.nextDouble() * (latest - wmMs)).toLong
+      batch.groupBy(_._1).foreach { case (s, in) => call(s, in, wmMs) }
+      timeouts(wmMs)
+    }
+    timeouts(raw.map(_._2).maxOption.getOrElse(T0) / 1000 + 2 * ttl / 1000)
+
+    val got = spark.createDataset(emitted.toSeq)(WindowTree.outputEncoder)
+    val gotSnap = snap(WindowTree.summaries(got, SubjectKernel(tree, "pA", preds), LongType))
+    if (want.nonEmpty) streamRealized.incrementAndGet()
+    (Prop(gotSnap == want) :| s"streamed:\n${gotSnap.mkString("\n")}\nbatch:\n${want.mkString("\n")}") &&
+      (Prop(states.isEmpty) :| s"state left: ${states.keys}") :| s"$tree\ndelay ${delay / Hour}h, ${batches.size} batches"
   }
 
   test("dedupExactStream keeps first arrival, drops within-watermark duplicates") {

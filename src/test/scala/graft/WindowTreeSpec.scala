@@ -5,184 +5,36 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.rng.Seed
 
+import graft.WindowTreeGen._
 import graft.config.TaskConfig
-import graft.model.{EndpointBounds, EventBounds, TemporalBounds}
+import graft.model.EventBounds
 import graft.plans.{ExtractSubtree, WindowNode, WindowTree}
 import graft.sources.PredicateFrames
 
 /** The per-subject window-tree kernel ([[WindowTree]], behind [[Query]])
   * against the relational oracle ([[ExtractSubtree]]: one window pass and
   * anchor join per tree edge) on generated task configs, trees and
-  * frames, under `spark.graft.checkpoint=local` and `off`.
+  * frames ([[WindowTreeGen]]), under `spark.graft.checkpoint=local`,
+  * `reliable` and `off`.
   */
 class WindowTreeSpec extends SparkSpec {
 
-  private val Hour = 3600000000L
-  private val T0 = 1577836800000000L // 2020-01-01 00:00 UTC, µs
-
-  /** One row of a plain predicates frame: no hour = a static row. Counts
-    * are (pA, pB, pC, male).
-    */
-  private case class Ev(subject: Long, hour: Option[Int], counts: Seq[Long])
-
-  private def toDf(session: SparkSession, rows: Seq[Ev]): DataFrame = {
-    import session.implicits._
-    rows
-      .map(e => (e.subject, e.hour.map(h => new java.sql.Timestamp((T0 + h * Hour) / 1000)),
-        e.counts(0), e.counts(1), e.counts(2), e.counts(3)))
-      .toDF("subject_id", "timestamp", "pA", "pB", "pC", "male")
-  }
-
-  /** One subject: a static row, then ≤ maxRows events at distinct hours of
-    * a 20-day span.
-    */
-  private def subjectGen(maxRows: Int): Gen[Seq[(Option[Int], Seq[Long])]] = for {
-    n <- Gen.choose(0, maxRows)
-    hours <- Gen.listOfN(n, Gen.choose(0, 480)).map(_.distinct.sorted)
-    counts <- Gen.listOfN(hours.size, Gen.listOfN(3, Gen.frequency(6 -> 0L, 3 -> 1L, 1 -> 2L)))
-    male <- Gen.oneOf(0L, 1L)
-  } yield (None, Seq(0L, 0L, 0L, male)) +: hours.zip(counts).map { case (h, c) => (Some(h), c :+ 0L) }
-
-  private val framesGen: Gen[Seq[Ev]] = for {
-    nSubj <- Gen.choose(1, 4)
-    subjects <- Gen.listOfN(nSubj, subjectGen(24))
-  } yield subjects.zipWithIndex.flatMap { case (rows, i) => rows.map { case (h, c) => Ev(i + 1L, h, c) } }
-
-  private val hoursGen = Gen.choose(1, 72)
-  private val boundPredGen = Gen.oneOf("pA", "pB", "pC", EventBounds.AnyEvent)
-  private val rangeGen = Gen.oneOf("(None, 0)", "(1, None)", "(0, 1)", "(None, 2)", "(2, None)")
-  private def hasGen(keys: Seq[String]): Gen[Seq[(String, String)]] = for {
-    n <- Gen.frequency(3 -> 0, 3 -> 1, 1 -> 2)
-    picked <- Gen.pick(n, keys)
-    ranges <- Gen.listOfN(n, rangeGen)
-  } yield picked.toSeq.zip(ranges)
-
-  // ---- task configs -------------------------------------------------------
-
-  private case class WinSpec(
-      start: Option[String], end: Option[String], startIncl: Boolean, endIncl: Boolean,
-      has: Seq[(String, String)])
-
-  /** A window anchored at `ref` by its start or its end, with a temporal,
-    * `->`/`<-` or record-bound other side.
-    */
-  private def windowGen(ref: String): Gen[WinSpec] = for {
-    rootIsStart <- Gen.oneOf(true, false)
-    root <- Gen.oneOf(
-      Gen.const(ref),
-      hoursGen.map(h => s"$ref + ${h}h"),
-      hoursGen.map(h => s"$ref - ${h}h"),
-      boundPredGen.map(p => s"$ref -> $p"),
-      boundPredGen.map(p => s"$ref <- $p"))
-    other <- Gen.oneOf(
-      Gen.const(None),
-      hoursGen.map(h => Some(if (rootIsStart) s"start + ${h}h" else s"end - ${h}h")),
-      boundPredGen.map(p => Some(if (rootIsStart) s"start -> $p" else s"end <- $p")))
-    startIncl <- Gen.oneOf(true, false)
-    endIncl <- Gen.oneOf(true, false)
-    has <- hasGen(Seq("pA", "pB", "pC", EventBounds.AnyEvent, EventBounds.StartOfRecord,
-      EventBounds.EndOfRecord))
-  } yield
-    if (rootIsStart) WinSpec(Some(root), other, startIncl, endIncl, has)
-    else WinSpec(other, Some(root), startIncl, endIncl, has)
-
-  /** 1–4 windows, each anchored at the trigger or at an earlier window's
-    * start or end, at most 3 windows deep.
-    */
-  private val windowsGen: Gen[Vector[WinSpec]] = {
-    def more(acc: Vector[(WinSpec, Int)], left: Int): Gen[Vector[(WinSpec, Int)]] =
-      if (left == 0) Gen.const(acc)
-      else {
-        val refs = ("trigger", 1) +: acc.zipWithIndex.collect {
-          case ((_, d), i) if d < 3 => Seq((s"w$i.start", d + 1), (s"w$i.end", d + 1))
-        }.flatten
-        Gen.oneOf(refs).flatMap { case (ref, d) =>
-          windowGen(ref).flatMap(w => more(acc :+ ((w, d)), left - 1))
-        }
-      }
-    Gen.choose(1, 4).flatMap(k => more(Vector.empty, k)).map(_.map(_._1))
-  }
-
-  private val yamlGen: Gen[String] = for {
-    windows <- windowsGen
-    trigger <- Gen.frequency(4 -> "pA", 1 -> EventBounds.AnyEvent)
-    static <- Gen.oneOf(true, false)
-    label <- Gen.option(Gen.zip(Gen.choose(0, windows.size - 1), Gen.oneOf("pB", "pC")))
-    index <- Gen.option(Gen.zip(Gen.choose(0, windows.size - 1), Gen.oneOf("start", "end")))
-  } yield {
-    def py(b: Boolean) = if (b) "True" else "False"
-    val ws = windows.zipWithIndex.map { case (w, i) =>
-      (Seq(
-        s"  w$i:",
-        s"    start: ${w.start.getOrElse("null")}",
-        s"    end: ${w.end.getOrElse("null")}",
-        s"    start_inclusive: ${py(w.startIncl)}",
-        s"    end_inclusive: ${py(w.endIncl)}") ++
-        (if (w.has.isEmpty) Nil
-         else Seq(w.has.map { case (k, r) => s"""$k: "$r"""" }.mkString("    has: { ", ", ", " }"))) ++
-        label.collect { case (`i`, p) => s"    label: $p" } ++
-        index.collect { case (`i`, s) => s"    index_timestamp: $s" }).mkString("\n")
-    }
-    (Seq("predicates:", "  pA: { code: A }", "  pB: { code: B }", "  pC: { code: C }") ++
-      (if (static) Seq("patient_demographics:", "  male: { code: SEX//male }") else Nil) ++
-      Seq(s"trigger: $trigger", "windows:") ++ ws).mkString("", "\n", "\n")
-  }
-
-  // ---- raw window trees ---------------------------------------------------
-
-  /** Bounds beyond what task configs produce: temporal windows of any sign
-    * (zero included) with their own offset, and event bounds with an
-    * offset of any sign.
-    */
-  private val boundsGen: Gen[EndpointBounds] = Gen.oneOf(
-    for {
-      li <- Gen.oneOf(true, false)
-      ri <- Gen.oneOf(true, false)
-      w <- Gen.choose(-48, 48)
-      o <- Gen.choose(-24, 24)
-    } yield TemporalBounds(li, w * Hour, ri, o * Hour),
-    for {
-      li <- Gen.oneOf(true, false)
-      ri <- Gen.oneOf(true, false)
-      forward <- Gen.oneOf(true, false)
-      p <- Gen.oneOf("pA", "pB", "pC", EventBounds.AnyEvent,
-        if (forward) EventBounds.EndOfRecord else EventBounds.StartOfRecord)
-      o <- Gen.frequency(2 -> Gen.const(0), 1 -> Gen.choose(-24, 24))
-    } yield EventBounds(li, if (forward) p else s"-$p", ri, o * Hour))
-
-  private def childrenGen(depth: Int): Gen[Seq[WindowNode]] =
-    if (depth > 3) Gen.const(Nil)
-    else for {
-      n <- if (depth == 1) Gen.choose(1, 2) else Gen.frequency(2 -> 0, 2 -> 1, 1 -> 2)
-      kids <- Gen.listOfN(n, for {
-        b <- boundsGen
-        has <- hasGen(Seq("pA", "pB", "pC", "*"))
-        c <- childrenGen(depth + 1)
-      } yield WindowNode("", Some(b), has.map { case (k, r) => k -> config.WindowDef.parseConstraint(k, r) }.toMap, c))
-    } yield kids
-
-  /** A trigger-rooted tree with nodes named n0, n1, … in pre-order. */
-  private val treeGen: Gen[WindowNode] = childrenGen(1).map { kids =>
-    var next = 0
-    def name(n: WindowNode): WindowNode = {
-      val named = n.copy(name = s"n$next")
-      next += 1
-      named.copy(children = n.children.map(name))
-    }
-    WindowNode("trigger", None, Map.empty, kids.map(name))
-  }
-
   // ---- comparison ---------------------------------------------------------
+
+  private lazy val checkpointDir = java.nio.file.Files.createTempDirectory("graft-windowtree-ckpt")
 
   /** One session per checkpoint mode (`Materialize` reads the mode from a
     * frame's own session), so parallel property workers never race on a
-    * shared conf.
+    * shared conf. `reliable` checkpoints under a temp dir of this spec.
     */
-  private lazy val sessions: Seq[(String, SparkSession)] = Seq("local", "off").map { mode =>
+  private lazy val sessions: Seq[(String, SparkSession)] = Seq("local", "reliable", "off").map { mode =>
     val s = spark.newSession()
     s.conf.set("spark.graft.checkpoint", mode)
+    s.conf.set("spark.graft.checkpoint.dir", checkpointDir.toString)
     mode -> s
   }
+
+  override def afterAll(): Unit = try deleteTree(checkpointDir) finally super.afterAll()
 
   private val realized = new java.util.concurrent.atomic.AtomicInteger
 
@@ -231,7 +83,7 @@ class WindowTreeSpec extends SparkSpec {
   }
 
   test("WindowTree matches ExtractSubtree on generated trees with any offsets") {
-    check(100)(Prop.forAllNoShrink(treeGen, framesGen)(treeAgrees))
+    check(100)(Prop.forAllNoShrink(treeGen(streamable = false), framesGen)(treeAgrees))
   }
 
   test("a subject with 10^4 rows") {
@@ -239,7 +91,7 @@ class WindowTreeSpec extends SparkSpec {
     val rows = Ev(1L, None, Seq(0L, 0L, 0L, 1L)) +: big
     (1L to 3L).foreach { seed =>
       val yaml = yamlGen.pureApply(Gen.Parameters.default, Seed(seed))
-      val tree = treeGen.pureApply(Gen.Parameters.default, Seed(seed))
+      val tree = treeGen(streamable = false).pureApply(Gen.Parameters.default, Seed(seed))
       Seq(queryAgrees(yaml, rows), treeAgrees(tree, rows)).foreach { p =>
         val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(1), p)
         assert(res.passed, res.status.toString)
