@@ -99,7 +99,7 @@ object Bpe {
       byteLevel: Boolean = false
   ): DataFrame = {
     val spark = docs.sparkSession
-    VocabGuard.check(spark, vocabLimit, "Bpe.learnMerges")
+    VocabGuard.check(vocabLimit, "Bpe.learnMerges")
     val wordCounts = docs
       .select(explode(filter(split(lower(col(textCol)), " "), t => t =!= "")).as("w"))
       .groupBy("w")

@@ -64,7 +64,7 @@ object Unigram {
       textCol: String = "text"
   ): DataFrame = {
     val spark = docs.sparkSession
-    VocabGuard.check(spark, vocabLimit, "Unigram.learnPieces")
+    VocabGuard.check(vocabLimit, "Unigram.learnPieces")
     // Parallelism floor: the tokenize/explode map side otherwise runs at
     // scan parallelism (1-2 tasks on a small single-file input); a
     // corpus-scale scan already exceeds the floor and adds no exchange.

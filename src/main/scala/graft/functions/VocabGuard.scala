@@ -6,25 +6,20 @@ package graft.functions
   * loops legitimate at corpus scale. The BOUND ITSELF is the safety
   * property, so a request that would no longer fit driver memory must
   * fail loudly at the call, not OOM mid-collect.
-  *
-  * Ceiling: `spark.graft.vocab.maxDriverRows` (default 10M ≈ a few
-  * hundred MB of (word, count) rows at typical word lengths — inside a
-  * multi-GB driver with headroom; real tokenizer vocabularies are
-  * 10⁴–10⁵).
   */
-private[functions] object VocabGuard {
+private[graft] object VocabGuard {
 
-  /** @param spark the session of the frame being learned from — its conf,
-    *              not the thread's active session's, sets the ceiling.
+  /** The ceiling: 10M ≈ a few hundred MB of (word, count) rows at typical
+    * word lengths — inside a multi-GB driver with headroom; real tokenizer
+    * vocabularies are 10⁴–10⁵.
     */
-  def check(spark: org.apache.spark.sql.SparkSession, vocabLimit: Int, caller: String): Unit = {
-    val max = spark.conf.getOption("spark.graft.vocab.maxDriverRows")
-      .map(_.toLong).getOrElse(10000000L)
+  val maxDriverRows: Long = 10000000L
+
+  def check(vocabLimit: Int, caller: String): Unit = {
     require(vocabLimit > 0, s"$caller: vocabLimit must be positive, got $vocabLimit")
-    require(vocabLimit <= max,
+    require(vocabLimit <= maxDriverRows,
       s"$caller: vocabLimit=$vocabLimit exceeds the driver-side dictionary " +
-        s"ceiling $max (spark.graft.vocab.maxDriverRows) — the learn collects " +
-        "that many (word, count) rows to the driver; raise the conf only " +
-        "with the driver memory to back it")
+        s"ceiling VocabGuard.maxDriverRows = $maxDriverRows — the learn collects " +
+        "that many (word, count) rows to the driver")
   }
 }

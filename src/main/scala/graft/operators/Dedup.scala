@@ -1363,9 +1363,7 @@ object Dedup {
     * star pass cuts the union to exact-(ehash, elen) matches of the
     * shard (broadcast semi-join — tiny). The band pass pays exactly ONE
     * thin exchange: a map-side chunk explode + broadcast semi-join on
-    * the shard's probed buckets (narrow 4×16-bit bands; an opt-in
-    * 56×24-bit triple widening exists for exchange-bound deployments —
-    * [[WideBandThreshold]]) feeds a
+    * the shard's probed 4×16-bit buckets feeds a
     * (chunk, key, ehash, elen) aggregate electing each cluster's union
     * rep bucket-locally — exact because identical text implies an
     * identical signature, so a cluster's members share its buckets —
@@ -1386,8 +1384,7 @@ object Dedup {
       maxHamming: Int = 3,
       maxBucketSize: Int = 256,
       textCol: String = "text",
-      idCol: String = "doc_id",
-      wideThreshold: Int = WideBandThreshold
+      idCol: String = "doc_id"
   ): DataFrame = {
     require(index.columns.sorted.sameElements(Array("doc_id", "ehash", "elen", "sig")),
       s"not a simhashIndex frame (columns ${index.columns.mkString(",")}); " +
@@ -1435,7 +1432,7 @@ object Dedup {
         .unionByName(shardIdx.select(col("doc_id"), col("ehash"),
           col("elen"), col("sig"), lit(true).as("__shard"))),
       shardIdx, Seq("ehash", "elen"), repSigFilter = true,
-      maxHamming, maxBucketSize, wideThreshold)
+      maxHamming, maxBucketSize)
       .groupBy("doc_a", "doc_b").agg(min(col("hamming")).as("hamming"))
 
     bandPairs.unionByName(starPairs)
@@ -1483,74 +1480,6 @@ object Dedup {
         shiftright(sig, c * 16).bitwiseAND(0xffffL).as("key"))
     }: _*))
 
-  /** Distinct-shard-signature count at which [[incrementalBandPairs]]
-    * widens its restriction banding — DISABLED by default, on measured
-    * evidence (BENCH_NOTES §28): a ≥65k-sig shard does saturate the
-    * narrow 4×16-bit keyspace (probes ~63% of every chunk, so the
-    * broadcast semi-join stops cutting and the thin aggregate's input
-    * approaches 4× the corpus's chunk rows — the §21 bound), but the
-    * measured penalty is MILD because those rows are 28-byte thin: a
-    * 100k-distinct-sig shard against a 12.8M-sig corpus ingests in
-    * 0.17× the recuration wall. The widened scheme (56 triple bands)
-    * restores semi-join selectivity yet pays 14× the map-side explode
-    * and random probes into a multi-MB broadcast hash — measured 5-15×
-    * SLOWER end-to-end on local[32] at every corpus ratio tried. Keep
-    * narrow unless the deployment is genuinely exchange-bound (network
-    * shuffle at cluster scale); then opt in per call via
-    * `wideThreshold`, or fleet-wide via the session conf
-    * `spark.graft.wideband.threshold` (an explicit argument wins).
-    */
-  private[graft] val WideBandThreshold: Int = Int.MaxValue
-
-  /** Broadcast budget for the opted-in widened banding, in DISTINCT
-    * shard signatures: the probe set broadcast to every executor is
-    * ~56 thin rows per distinct sig (~70 MB at 100k — the measured
-    * figure the widening's own doc carries), so past ~2M sigs the
-    * broadcast itself becomes the bottleneck the widening was meant to
-    * remove. Enforced with a loud split-hint `require` (an over-bound
-    * batch should split, not silently stall the fleet); override via
-    * `spark.graft.wideband.maxDistinctSigs` on deployments with bigger
-    * broadcast headroom.
-    */
-  private[graft] val WideBandMaxDistinctSigs: Long = 2000000L
-
-  /** The widened banding: 8-bit chunk TRIPLES — 56 bands of 24-bit keys
-    * (keyspace 56 × 2^24 ≈ 939M vs the narrow 4 × 2^16 = 262k). Recall
-    * guarantee is unchanged for the Hamming ≤ 3 regime these families
-    * run at: ≤3 differing bits touch ≤3 of the eight 8-bit chunks, so
-    * ≥5 chunks agree exactly and at least C(5,3) = 10 of the 56 triples
-    * are fully shared by any true pair. A 100k-sig shard probes ≤0.6%
-    * of each band's 2^24 key space, restoring the semi-join's cut; the
-    * practical new bound is the probed-key BROADCAST (≤56 rows/sig —
-    * ~70 MB at 100k distinct sigs), which caps single ingest batches at
-    * ~1-2M distinct signatures before they should split.
-    */
-  private val WideTriples: Seq[Seq[Int]] =
-    (0 until 8).combinations(3).map(_.toSeq).toSeq
-
-  private def wideKeyOf(
-      sig: org.apache.spark.sql.Column, t: Seq[Int]): org.apache.spark.sql.Column =
-    t.zipWithIndex.map { case (c, pos) =>
-      shiftleft(shiftright(sig, c * 8).bitwiseAND(0xffL), (2 - pos) * 8)
-    }.reduce(_ bitwiseOR _)
-
-  private def wideChunkKeys(sig: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    explode(array(WideTriples.zipWithIndex.map { case (t, b) =>
-      struct(lit(b).as("chunk"), wideKeyOf(sig, t).as("key"))
-    }: _*))
-
-  /** The key signature `sig` takes in wide band `band` — the widened
-    * [[incrementalBandPairs]] rep-sig filter. A 56-branch CASE, but it
-    * runs on the post-aggregate bucket reps (bucket-count-sized), never
-    * on exploded corpus rows.
-    */
-  private def wideKeyAt(
-      sig: org.apache.spark.sql.Column,
-      band: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    WideTriples.zipWithIndex.foldLeft(lit(-1L): org.apache.spark.sql.Column) {
-      case (acc, (t, b)) => when(band === b, wideKeyOf(sig, t)).otherwise(acc)
-    }
-
   /** The shared ONE-thin-exchange incremental BAND pass (simhash's
     * (ehash, elen) cluster edition and the raw-signature families):
     * the union's chunk rows (null sigs excluded) cut map-side to the
@@ -1565,26 +1494,6 @@ object Dedup {
     * the bucket — required when the cluster key is NOT the signature
     * itself. Returns RAW verified (doc_a, doc_b, hamming) pairs;
     * callers union their star passes and apply the per-pair MIN.
-    *
-    * OPTIONAL band widening (`wideThreshold`, off by default — see
-    * [[WideBandThreshold]] for the measured reasoning): a shard with
-    * ≥ `wideThreshold` DISTINCT signatures switches to [[WideTriples]]
-    * — 56 bands of 24-bit keys with the identical Hamming ≤ 3 recall
-    * guarantee (≤3 differing bits leave ≥5 of the eight 8-bit chunks
-    * untouched, so some triple is fully shared). The candidate SET is
-    * banding-invariant (both schemes guarantee a shared band for every
-    * true pair; verification is exact), so batch parity holds in both
-    * regimes whenever the bucket cap doesn't shed — and the cap sheds
-    * strictly more rarely in 24-bit buckets than in batch's 16-bit
-    * ones, so the widened regime never misses a pair batch kept
-    * (parity asserted in WideBandSpec).
-    *
-    * When opted in, widening ALSO requires the corpus to dwarf the
-    * shard (> 16× non-null rows): the shard's own chunk rows always
-    * survive the restriction, so wide banding shuffles ≥ 56 rows per
-    * shard sig where narrow pays 4, and below that ratio (a bootstrap
-    * or recuration, where the "shard" IS the union) the wider explode
-    * is pure overhead with nothing left to restrict.
     */
   private def incrementalBandPairs(
       union: DataFrame,
@@ -1592,69 +1501,16 @@ object Dedup {
       clusterCols: Seq[String],
       repSigFilter: Boolean,
       maxHamming: Int,
-      maxBucketSize: Int,
-      wideThreshold: Int = WideBandThreshold): DataFrame = {
-    // Scheme pick: at the disabled default the decision is free (no
-    // jobs). Conf opt-in (`spark.graft.wideband.threshold`) lets a
-    // network-bound cluster widen fleet-wide without touching call
-    // sites; an explicit wideThreshold argument (parity specs, A/B
-    // probes) wins over the conf.
-    val effThreshold =
-      if (wideThreshold != WideBandThreshold) wideThreshold
-      else union.sparkSession.conf
-        .getOption("spark.graft.wideband.threshold").map(_.toInt)
-        .getOrElse(WideBandThreshold)
-    // An opted-in threshold first pays one PLAIN count job — a cheap
-    // upper bound on the distinct-sig count, so normal-size shards
-    // under a standing opt-in short-circuit to narrow without ever
-    // running the distinct aggregate. Only shards at or past the
-    // threshold pay the distinct count (ids don't matter —
-    // re-encounters band on the same keys) and, past that, the union
-    // count (corpus ≫ shard gate). effThreshold <= 1 is the explicit
-    // force-wide hook (parity specs, A/B probes) and skips the
-    // corpus-ratio gate.
-    val useWide = effThreshold != Int.MaxValue && {
-      val shardNN = shardSigs.filter(col("sig").isNotNull)
-      val nShard = shardNN.count()
-      nShard >= effThreshold && {
-        val nDistinct = shardNN.agg(count_distinct(col("sig"))).head().getLong(0)
-        val wide = nDistinct >= effThreshold &&
-          (effThreshold <= 1 || {
-            val nUnion = union.filter(col("sig").isNotNull).count()
-            nUnion - nShard > 16L * nShard
-          })
-        // The widened scheme's own bound, enforced loudly: probed keys
-        // broadcast ~56 thin rows per DISTINCT shard signature (~70 MB
-        // at 100k sigs), so an over-bound shard pays a multi-GB
-        // broadcast that stalls every executor. Cap configurable for
-        // deployments with bigger driver/executor headroom.
-        if (wide) {
-          val maxSigs = union.sparkSession.conf
-            .getOption("spark.graft.wideband.maxDistinctSigs").map(_.toLong)
-            .getOrElse(WideBandMaxDistinctSigs)
-          require(nDistinct <= maxSigs,
-            s"wide banding: this shard carries $nDistinct distinct " +
-              s"signatures — the 56-triple widening broadcasts ~56 probe " +
-              s"rows per distinct sig (~${56L * nDistinct / 1000000}M rows " +
-              s"here), past the broadcast budget of $maxSigs sigs " +
-              "(spark.graft.wideband.maxDistinctSigs). Split the ingest " +
-              "batch, or stay on the narrow scheme (its saturated regime " +
-              "is measured mild — BENCH_NOTES §28)")
-        }
-        wide
-      }
-    }
-    val bandKeys: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-      if (useWide) wideChunkKeys else chunkKeys
+      maxBucketSize: Int): DataFrame = {
     val probedKeys = shardSigs.filter(col("sig").isNotNull)
-      .select(bandKeys(col("sig")).as("ck"))
+      .select(chunkKeys(col("sig")).as("ck"))
       .select(col("ck.chunk").as("chunk"), col("ck.key").as("key"))
       .distinct()
     val carried =
       (Seq("doc_id", "sig", "__shard") ++ clusterCols).distinct.map(c => col(c))
     val unionChunks = union
       .filter(col("sig").isNotNull)
-      .select(carried :+ bandKeys(col("sig")).as("ck"): _*)
+      .select(carried :+ chunkKeys(col("sig")).as("ck"): _*)
       .select(carried :+ col("ck.chunk").as("chunk") :+ col("ck.key").as("key"): _*)
       .join(broadcast(probedKeys), Seq("chunk", "key"), "left_semi")
     // ONE exchange for the whole band pass: the up-front (chunk, key)
@@ -1670,10 +1526,7 @@ object Dedup {
         col("__r").getField("sig").as("sig"))
     val bucketReps =
       if (!repSigFilter) bucketReps0
-      else if (useWide)
-        bucketReps0.filter(wideKeyAt(col("sig"), col("chunk")) === col("key"))
-      else
-        bucketReps0.filter(expr("(shiftright(sig, chunk * 16) & 65535) = key"))
+      else bucketReps0.filter(expr("(shiftright(sig, chunk * 16) & 65535) = key"))
     val wChunk = Window.partitionBy("chunk", "key")
     val capped = bucketReps
       .withColumn("bsize", count(lit(1)).over(wChunk))
@@ -1703,13 +1556,11 @@ object Dedup {
     * the union to exact-sig matches of the shard (broadcast semi-join —
     * tiny). The band pass pays exactly ONE exchange, and a THIN one: a
     * map-side chunk explode + broadcast semi-join on the shard's
-    * probed-bucket keys (narrow 4×16-bit bands; an opt-in 56×24-bit
-    * triple widening exists for exchange-bound deployments —
-    * [[WideBandThreshold]])
-    * feeds a (chunk, key, sig) aggregate that elects each signature's
-    * union rep bucket-locally — exact because a signature's whole
-    * cluster shares its buckets — with the cap window and the
-    * probe-broadcast candidate join both reusing that partitioning.
+    * probed 4×16-bit bucket keys feeds a (chunk, key, sig) aggregate
+    * that elects each signature's union rep bucket-locally — exact
+    * because a signature's whole cluster shares its buckets — with the
+    * cap window and the probe-broadcast candidate join both reusing that
+    * partitioning.
     * Per-shard pair work is O(shard-rows × bucket), never
     * O(union-bucket²), and no corpus-sized row set is ever shuffled.
     * Output is provably identical to filtering the symmetric self-join:
@@ -1721,8 +1572,7 @@ object Dedup {
       shardSigs: DataFrame,
       corpusSigs: DataFrame,
       maxHamming: Int,
-      maxBucketSize: Int,
-      wideThreshold: Int = WideBandThreshold
+      maxBucketSize: Int
   ): DataFrame = {
     val shard = graft.plans.Materialize(shardSigs.select(col("media_id"), col("sig")))
 
@@ -1767,8 +1617,7 @@ object Dedup {
           lit(false).as("__shard"))
         .unionByName(shard.select(col("media_id").as("doc_id"),
           col("sig"), lit(true).as("__shard"))),
-      shard, Seq("sig"), repSigFilter = false, maxHamming, maxBucketSize,
-      wideThreshold)
+      shard, Seq("sig"), repSigFilter = false, maxHamming, maxBucketSize)
 
     bandPairs.unionByName(starPairs)
       .groupBy("doc_a", "doc_b").agg(min(col("hamming")).as("hamming"))

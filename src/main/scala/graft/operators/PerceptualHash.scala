@@ -222,8 +222,7 @@ object PerceptualHash {
       shardSigs: DataFrame,
       corpusSigs: DataFrame,
       maxHamming: Int = 2,
-      maxBucketSize: Int = 256,
-      wideThreshold: Int = Dedup.WideBandThreshold
+      maxBucketSize: Int = 256
   ): DataFrame = {
     require(corpusSigs.columns.sorted.sameElements(Array("media_id", "phash")),
       s"not a signatures frame (columns ${corpusSigs.columns.mkString(",")}); " +
@@ -234,7 +233,7 @@ object PerceptualHash {
     Dedup.sigDedupIncremental(
       shardSigs.select(col("media_id").cast("long"), col("phash").cast("long").as("sig")),
       corpusSigs.select(col("media_id").cast("long"), col("phash").cast("long").as("sig")),
-      maxHamming, maxBucketSize, wideThreshold)
+      maxHamming, maxBucketSize)
   }
 
   private def dedupFromSignatures(

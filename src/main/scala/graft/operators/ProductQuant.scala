@@ -44,27 +44,15 @@ import org.apache.spark.sql.graft.VectorExpressions
   */
 private[graft] object ConcurrentFits {
 
-  /** Pool width: `spark.graft.pq.fitParallelism` (default 16) — on a busy
-    * cluster scheduler a narrower wave keeps concurrent fit jobs from
-    * starving co-tenant queries.
+  /** Default pool width: wide enough for every subspace fit of a
+    * production PQ (m = 16) in one wave.
     */
-  private def configuredParallelism: Int =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .flatMap(_.conf.getOption("spark.graft.pq.fitParallelism"))
-      .map { raw =>
-        val n = raw.toIntOption.getOrElse(
-          throw new IllegalArgumentException(
-            s"spark.graft.pq.fitParallelism must be a positive integer, got '$raw'"))
-        require(n > 0, s"spark.graft.pq.fitParallelism must be positive, got $n")
-        n
-      }
-      .getOrElse(16)
+  private val FitParallelism = 16
 
-  def run[T](thunks: Seq[() => T], parallelism: Int = 0): Seq[T] = {
+  def run[T](thunks: Seq[() => T], parallelism: Int = FitParallelism): Seq[T] = {
     if (thunks.lengthCompare(1) <= 0) return thunks.map(_.apply())
-    val width = if (parallelism > 0) parallelism else configuredParallelism
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(width, thunks.length))
+      math.min(parallelism, thunks.length))
     try {
       val futures = thunks.map(t =>
         pool.submit(new java.util.concurrent.Callable[T] { def call(): T = t() }))
@@ -193,8 +181,7 @@ object ProductQuant {
     require(dims % m == 0, s"vector dim $dims is not divisible by m=$m subspaces")
     val sub = dims / m
 
-    val fitFraction = corpus.sparkSession.conf
-      .get("spark.graft.ivf.fitFraction", "1.0").toDouble
+    val fitFraction = graft.GraftConf.IvfFitFraction(corpus.sparkSession)
     val rawBase = {
       val b = corpus.select(col(idCol).as("id"), col(vecCol).as("__raw"))
       if (fitFraction >= 1.0) b
@@ -509,7 +496,7 @@ object ProductQuant {
       else None
     val resolvedNlist =
       if (nlist > 0) nlist else Similarity.resolveNlistN(corpusN.get, nlist)
-    val resolvedNprobe = Similarity.resolveNprobe(nprobe, resolvedNlist)
+    val resolvedNprobe = Similarity.resolveNprobe(corpus.sparkSession, nprobe, resolvedNlist)
     serveIvfPq(
       queries, corpus,
       ivfPqIndex(corpus, resolvedNlist, m, ks, refineIters, idCol, vecCol),
@@ -829,7 +816,7 @@ object ProductQuant {
     val codebooks = index.codebooks
     val resolvedNprobe =
       if (nprobe > 0) nprobe
-      else Similarity.resolveNprobe(nprobe, cents.select("cid").count().toInt)
+      else Similarity.resolveNprobe(corpus.sparkSession, nprobe, cents.select("cid").count().toInt)
     val (mCount, _, offsets, sub) = layoutOf(codebooks)
 
     val codesWithCid = pred.map(index.codes.filter(_)).getOrElse(index.codes)
@@ -892,8 +879,8 @@ object ProductQuant {
     *
     * Scan routing: the per-query lookup tables are `Σks·8 ≈ m·ks·8`
     * bytes each, so a query frame is broadcastable only while
-    * `|Q|·m·ks·8` stays under `spark.graft.pq.adcBroadcastMaxBytes`
-    * (default 64 MB ≈ 16k queries at m=16, ks=32). Beyond that — and
+    * `|Q|·m·ks·8` stays under [[AdcBroadcastMaxBytes]] (64 MB ≈ 16k
+    * queries at m=16, ks=32). Beyond that — and
     * ALWAYS in the self-join form, where the query frame is the corpus
     * itself — the scan becomes a bucketed shuffle join: queries hash
     * into `min(shuffle.partitions, ⌈|Q|/64⌉)` buckets (each query's
@@ -944,6 +931,23 @@ object ProductQuant {
       rerankFactor: Int,
       idCol: String,
       vecCol: String
+  ): DataFrame = pqScan(queries, corpus, codebooks, k, rerankFactor, idCol, vecCol)
+
+  /** The broadcast budget of the ADC scan's per-query lookup tables. */
+  private[graft] val AdcBroadcastMaxBytes: Long = 64L << 20
+
+  /** [[pqTopK]] over fitted codebooks, with the broadcast route taken
+    * while the query tables fit `adcBroadcastMaxBytes`.
+    */
+  private[graft] def pqScan(
+      queries: DataFrame,
+      corpus: DataFrame,
+      codebooks: DataFrame,
+      k: Int,
+      rerankFactor: Int,
+      idCol: String,
+      vecCol: String,
+      adcBroadcastMaxBytes: Long = AdcBroadcastMaxBytes
   ): DataFrame = {
     val spark = corpus.sparkSession
     val (mCount, sizes, offsets, sub) = layoutOf(codebooks)
@@ -981,10 +985,8 @@ object ProductQuant {
     val qCount =
       if (queries eq corpus) corpusCount else queries.select(idCol).count()
     val tabBytes = sizes.sum.toLong * 8 + 32
-    val maxBroadcastBytes = spark.conf
-      .get("spark.graft.pq.adcBroadcastMaxBytes", (64L << 20).toString).toLong
     val useBroadcast =
-      !(queries eq corpus) && qCount * tabBytes <= maxBroadcastBytes
+      !(queries eq corpus) && qCount * tabBytes <= adcBroadcastMaxBytes
 
     val candidates =
       if (useBroadcast) {

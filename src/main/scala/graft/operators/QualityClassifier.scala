@@ -80,6 +80,9 @@ object QualityClassifier {
       .withColumn("x", lit(1.0) / sqrt(count(lit(1)).over(w)))
   }
 
+  /** Training blocks up to this size iterate on the driver (see [[train]]). */
+  private val LocalBlocksMaxBytes: Long = 32L << 20
+
   /** Fit logistic weights on a labeled corpus (`labelCol` ∈ {0, 1}) with
     * Adagrad steps (Duchi, Hazan & Singer, JMLR 2011) — the per-feature
     * adaptive rate is what makes few-iteration batch fitting work on
@@ -155,21 +158,19 @@ object QualityClassifier {
       // Scale-adaptive iteration engine: each distributed step is one
       // tiny job whose ~40 ms scheduler round-trip dominates at bench
       // scale (×iters). When the compacted blocks fit
-      // `spark.graft.fit.localBlocksMaxBytes` (default 32 MB), collect
+      // [[LocalBlocksMaxBytes]] (32 MB), collect
       // them ONCE and run the steps on the driver — the same
       // [[blockGradient]] per block, blocks folded in the same partition
       // order, so the learned weights are BIT-IDENTICAL to the
       // distributed path (asserted in QualityClassifierSpec); zero jobs
       // per iteration. A corpus-scale training frame exceeds the bound
       // and keeps the distributed path unchanged.
-      val localMaxBytes = spark.conf
-        .get("spark.graft.fit.localBlocksMaxBytes", (32L << 20).toString).toLong
       val localBlocks: Option[Array[DocBlocks]] = {
         val bytes = blocks
           .map(b => 8L * b.ys.length + 4L * b.offsets.length +
             4L * b.feats.length + 8L * b.xs.length)
           .collect().sum
-        if (bytes <= localMaxBytes) Some(blocks.collect()) else None
+        if (bytes <= LocalBlocksMaxBytes) Some(blocks.collect()) else None
       }
       for (_ <- 1 to iters) {
         val g = localBlocks match {
@@ -216,14 +217,15 @@ object QualityClassifier {
       dim: Int,
       w: Array[Double],
       bias: Double,
-      sc: org.apache.spark.SparkContext): Array[Double] = {
+      sc: org.apache.spark.SparkContext,
+      treeFoldMinPartitions: Int = TreeFoldMinPartitions): Array[Double] = {
     val wB = sc.broadcast((w.clone(), bias))
     try {
       val perPart = blocks.map { part =>
         val (wCur, biasCur) = wB.value
         QualityClassifier.blockGradient(part, wCur, biasCur)
       }
-      pairwiseFold(perPart, dim)
+      pairwiseFold(perPart, dim, treeFoldMinPartitions)
     } finally wB.destroy()
   }
 
@@ -274,10 +276,12 @@ object QualityClassifier {
     }
   }
 
+  private val TreeFoldMinPartitions = 1024
+
   /** Sum the per-partition gradient arrays with BOUNDED driver inflow.
     *
-    * Up to `spark.graft.fit.treeFoldMinPartitions` (default 1024)
-    * partitions, the arrays collect straight to the driver and fold in
+    * Up to `treeMin` partitions ([[TreeFoldMinPartitions]] = 1024 by
+    * default), the arrays collect straight to the driver and fold in
     * partition order — one dim+1-double array per partition, ≤ ~8 MB at
     * dim=1024, and bit-identical to the historical linear fold. Above
     * that (the 100 TB regime: 10⁴–10⁵ partitions would push 80–800 MB
@@ -294,16 +298,13 @@ object QualityClassifier {
     * near its inflow bound).
     */
   private def pairwiseFold(
-      perPart: org.apache.spark.rdd.RDD[Array[Double]], dim: Int): Array[Double] = {
+      perPart: org.apache.spark.rdd.RDD[Array[Double]], dim: Int, treeMin: Int): Array[Double] = {
     def sumInto(a: Array[Double], p: Array[Double]): Array[Double] = {
       var i = 0
       while (i < a.length) { a(i) += p(i); i += 1 }
       a
     }
     val parts = perPart.getNumPartitions
-    val treeMin = org.apache.spark.sql.SparkSession.getActiveSession
-      .flatMap(_.conf.getOption("spark.graft.fit.treeFoldMinPartitions"))
-      .map(_.toInt).getOrElse(1024)
     if (parts <= treeMin)
       perPart.collect().foldLeft(new Array[Double](dim + 1))(sumInto)
     else {

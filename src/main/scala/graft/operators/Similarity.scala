@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -104,9 +104,9 @@ object Similarity {
     if (nlist > 0) nlist
     else math.max(16, math.ceil(math.sqrt(n.toDouble)).toInt)
 
-  /** Resolve an `nprobe` request: positive = explicit; `<= 0` = the
-    * configured fraction of the resolved centroid count —
-    * `ceil(spark.graft.ivf.nprobeFraction · nlist)`, default 0.625 (the
+  /** Resolve an `nprobe` request: positive = explicit; `<= 0` =
+    * `ceil(fraction · nlist)`, the fraction being `spark`'s
+    * [[graft.GraftConf.IvfNprobeFraction]], default 0.625 (the
     * same 10-of-16 probing ratio the committed RECALL.json numbers were
     * measured at).
     *
@@ -128,17 +128,9 @@ object Similarity {
     * the knob (session-wide) or the explicit parameter (per call) buys
     * the clustered-corpus speedup once the corpus is known to cluster.
     */
-  private[graft] def resolveNprobe(nprobe: Int, nlist: Int): Int =
+  private[graft] def resolveNprobe(spark: SparkSession, nprobe: Int, nlist: Int): Int =
     if (nprobe > 0) nprobe
-    else {
-      val frac = org.apache.spark.sql.SparkSession.getActiveSession
-        .flatMap(_.conf.getOption("spark.graft.ivf.nprobeFraction"))
-        .map(_.toDouble)
-        .getOrElse(0.625)
-      require(frac > 0 && frac <= 1.0,
-        s"spark.graft.ivf.nprobeFraction must be in (0, 1], got $frac")
-      math.max(1, math.ceil(frac * nlist).toInt)
-    }
+    else math.max(1, math.ceil(graft.GraftConf.IvfNprobeFraction(spark) * nlist).toInt)
 
   /** All centroids collapsed into ONE row holding an array of
     * (cid, cv) structs — the broadcastable unit for per-row centroid
@@ -265,7 +257,7 @@ object Similarity {
   ): DataFrame = {
     val resolvedNlist = resolveNlist(corpus, nlist, idCol)
     ivfTopK(queries, corpus, ivfCentroids(corpus, resolvedNlist, refineIters, idCol, vecCol),
-      k, resolveNprobe(nprobe, resolvedNlist), idCol, vecCol)
+      k, resolveNprobe(corpus.sparkSession, nprobe, resolvedNlist), idCol, vecCol)
   }
 
   /** Fit the IVF centroid table once — `nlist` rows of `(cid, cv)`, the
@@ -294,8 +286,7 @@ object Similarity {
 
     // Deterministic Lloyd-fit sample: hash-gated on id (stable under any
     // partitioning, unlike DataFrame.sample) — 1.0 keeps the full corpus.
-    val fitFraction = corpus.sparkSession.conf
-      .get("spark.graft.ivf.fitFraction", "1.0").toDouble
+    val fitFraction = graft.GraftConf.IvfFitFraction(corpus.sparkSession)
     val fitBase =
       if (fitFraction >= 1.0) base
       else base.filter(
@@ -391,7 +382,7 @@ object Similarity {
       queries: DataFrame, corpus: DataFrame, centroids: DataFrame,
       nprobe: Int, idCol: String, vecCol: String): DataFrame = {
     val resolvedNprobe =
-      if (nprobe > 0) nprobe else resolveNprobe(nprobe, centroids.count().toInt)
+      if (nprobe > 0) nprobe else resolveNprobe(corpus.sparkSession, nprobe, centroids.count().toInt)
     val base = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
     val qBase = queries.select(col(idCol).as("id"), col(vecCol).as("v"))
 

@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.LogicalRDD
   * and read back from storage, instead of every consumer re-running and
   * re-analysing its whole lineage.
   *
-  * Mode is read from the session conf `spark.graft.checkpoint`:
+  * Mode is the frame's session's [[graft.GraftConf.Checkpoint]]:
   *
   *   - `local` (default): `localCheckpoint` — blocks live in executor
   *     storage (memory, spill to disk). Fastest, but NOT fault-tolerant:
@@ -17,7 +17,7 @@ import org.apache.spark.sql.execution.LogicalRDD
   *     the query. The right choice for local mode and for clusters where
   *     task retry (not executor loss) is the failure model.
   *   - `reliable`: `df.checkpoint()` to the directory in the session's
-  *     `spark.graft.checkpoint.dir` (`SparkContext.setCheckpointDir` is
+  *     [[graft.GraftConf.CheckpointDir]] (`SparkContext.setCheckpointDir` is
   *     pointed there whenever it is elsewhere; unset, the context keeps
   *     its directory or gets one under /tmp) — survives executor loss;
   *     the 100 TB-cluster setting.
@@ -25,8 +25,7 @@ import org.apache.spark.sql.execution.LogicalRDD
   */
 object Materialize {
 
-  def mode(df: DataFrame): String =
-    df.sparkSession.conf.get("spark.graft.checkpoint", "local")
+  def mode(df: DataFrame): String = graft.GraftConf.Checkpoint(df.sparkSession)
 
   /** A lineage cut of `df`; with `eager`, computed before this returns. A
     * failing eager `local` cut unpersists the RDD it marked before
@@ -36,7 +35,7 @@ object Materialize {
     case "off" => df
     case "reliable" =>
       val sc = df.sparkSession.sparkContext
-      val named = df.sparkSession.conf.getOption("spark.graft.checkpoint.dir")
+      val named = graft.GraftConf.CheckpointDir(df.sparkSession)
       // The context holds one directory (a fresh subdirectory of the one
       // it was given); a session that names another moves it there.
       val elsewhere = named.exists(d =>

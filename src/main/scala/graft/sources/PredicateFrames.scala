@@ -185,7 +185,8 @@ object PredicateFrames {
     // unrelated read during that window merely runs row-based. The eager
     // write also mirrors the reference (EventStream Dataset.load is
     // eager). On a cluster, point `spark.graft.esgpt.staging` at shared
-    // storage.
+    // storage; unset, the staging root is a temp dir that Spark's shutdown
+    // hook deletes with the staged parquet inside it.
     val key = "spark.sql.parquet.enableVectorizedReader"
     val prev = spark.conf.get(key, "true")
     spark.conf.set(key, "false")
@@ -196,9 +197,9 @@ object PredicateFrames {
         val meas = spark.read.parquet(s"$path/dynamic_measurements_df.parquet")
         val out = fromEsgpt(
           subjects, events, meas, esgptValueColumns(spark, path, predicates), predicates)
-        val staging = spark.conf.getOption("spark.graft.esgpt.staging").getOrElse {
-          val d = java.nio.file.Files.createTempDirectory("graft_esgpt_")
-          d.toFile.deleteOnExit()
+        val staging = graft.GraftConf.EsgptStaging(spark).getOrElse {
+          val d = java.nio.file.Files.createTempDirectory("graft_esgpt_").toFile
+          org.apache.spark.sql.graft.ScratchDirs.deleteAtShutdown(d)
           d.toString
         }
         // Unique dir per CALL: a shared dir keyed on inputs alone would be
@@ -261,24 +262,23 @@ object PredicateFrames {
     *     rows spread across partitions by timestamp), then repartition
     *     only the already-collapsed rows to hash(subject_id).
     *
-    * `spark.graft.collapse` picks: `adaptive` (default) measures the
-    * input and chooses ([[chooseCollapseMode]]); `direct` / `skew-safe`
-    * force a strategy. At 100 TB the difference is a full-data exchange —
-    * the single largest avoidable cost in the pipeline — so the default
-    * spends a column-pruned sample scan to earn the right to skip it.
+    * [[chooseCollapseMode]] measures the input and picks one; PlanAudit
+    * and the parity specs force a strategy through `mode`. At 100 TB the
+    * difference is a full-data exchange — the single largest avoidable
+    * cost in the pipeline — so a column-pruned sample scan earns the
+    * right to skip it.
     */
-  def collapse(df: DataFrame, predCols: Seq[String]): DataFrame = {
+  def collapse(df: DataFrame, predCols: Seq[String]): DataFrame = collapse(df, predCols, "adaptive")
+
+  private[graft] def collapse(df: DataFrame, predCols: Seq[String], mode: String): DataFrame = {
     val sums = predCols.map(c => sum(col(c)).cast(LongType).as(c))
     val typed = df
       .withColumn("subject_id", col("subject_id").cast(LongType))
       // TIMESTAMP_NTZ (e.g. non-UTC-adjusted parquet) → TIMESTAMP; exact
       // under the pinned UTC session timezone.
       .withColumn("timestamp", col("timestamp").cast(TimestampType))
-    val mode = df.sparkSession.conf.get("spark.graft.collapse", "adaptive") match {
-      case "adaptive" => chooseCollapseMode(typed)
-      case m          => m
-    }
-    if (mode == "direct")
+    val chosen = if (mode == "adaptive") chooseCollapseMode(typed) else mode
+    if (chosen == "direct")
       typed
         .repartition(col("subject_id"))
         .groupBy("subject_id", "timestamp")

@@ -106,13 +106,19 @@ object Tables {
     * (subject_id, timestamp) keys via [[PredicateFrames.collapse]] (ends
     * hash(subject_id)-partitioned for the per-subject window pipeline).
     */
-  def eventsAsPredicates(spark: SparkSession, sfDir: String, types: Seq[String]): DataFrame = {
+  def eventsAsPredicates(spark: SparkSession, sfDir: String, types: Seq[String]): DataFrame =
+    eventsAsPredicates(spark, sfDir, types, "adaptive")
+
+  /** [[eventsAsPredicates]] with the collapse strategy forced to `mode`. */
+  private[graft] def eventsAsPredicates(
+      spark: SparkSession, sfDir: String, types: Seq[String], mode: String): DataFrame = {
     val ev = events(spark, sfDir)
     PredicateFrames.collapse(
       ev.select(
         Seq(col("user_id").as("subject_id"), col("ts").as("timestamp")) ++
           types.map(t => (col("event_type") === t).cast("long").as(s"is_$t")): _*
       ),
-      types.map(t => s"is_$t"))
+      types.map(t => s"is_$t"),
+      mode)
   }
 }

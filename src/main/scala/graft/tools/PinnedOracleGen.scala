@@ -140,7 +140,7 @@ object PinnedOracleGen {
       val rn = Similarity.resolveNlist(corpus, nlist, "vec_id")
       val cents = Similarity.ivfCentroids(corpus, rn, refineIters, "vec_id", "embedding")
       Similarity.ivfCandidateFrame(qs, corpus, cents,
-          Similarity.resolveNprobe(nprobe, rn), "vec_id", "embedding")
+          Similarity.resolveNprobe(corpus.sparkSession, nprobe, rn), "vec_id", "embedding")
         .select(col("query_id"), col("id").as("neighbor_id"))
     }
     Seq(

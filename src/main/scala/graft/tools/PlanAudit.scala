@@ -41,13 +41,10 @@ object PlanAudit {
     // no sampling job.
     val preds = Tables.eventsAsPredicates(spark, dir, Seq("click", "purchase", "error"))
     audit("ingest_collapse(adaptive)", preds, 1)
-    spark.conf.set("spark.graft.collapse", "skew-safe")
-    val predsSafe = Tables.eventsAsPredicates(spark, dir, Seq("click", "purchase", "error"))
+    val predsSafe = Tables.eventsAsPredicates(spark, dir, Seq("click", "purchase", "error"), "skew-safe")
     audit("ingest_collapse(skew-safe)", predsSafe, 2)
-    spark.conf.set("spark.graft.collapse", "direct")
-    val predsDirect = Tables.eventsAsPredicates(spark, dir, Seq("click", "purchase", "error"))
+    val predsDirect = Tables.eventsAsPredicates(spark, dir, Seq("click", "purchase", "error"), "direct")
     audit("ingest_collapse(direct)", predsDirect, 1)
-    spark.conf.unset("spark.graft.collapse")
 
     // Adaptive decision quality: sampled statistics must route a skewed /
     // duplicate-heavy corpus to skew-safe and a uniform one to direct

@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.GraftConf
 import graft.operators.{Dedup, ProductQuant, Similarity}
 import graft.sources.Tables
 
@@ -184,13 +185,13 @@ object RecallProbe {
     // is the regime the fraction targets — the former 500-vector
     // measurement (250-sample fit, ratio 16) sat 2 points over its bar
     // and flipped on unrelated seeding changes.
-    spark.conf.set("spark.graft.ivf.fitFraction", "0.5")
+    spark.conf.set(GraftConf.IvfFitFraction.key, "0.5")
     val ivfSampledRecall =
       try recall(
         pairs(Similarity.ivfTopK(emb1, emb1, k = 5, nlist = 16, nprobe = 10,
           refineIters = 2, idCol = "vec_id", vecCol = "embedding"), "query_id", "neighbor_id"),
         exact1)
-      finally spark.conf.unset("spark.graft.ivf.fitFraction")
+      finally spark.conf.unset(GraftConf.IvfFitFraction.key)
 
     // nprobe cost sweep at the auto-derived nlist: the probe join scans
     // ~nprobe/nlist of the corpus, so the auto default should be the
@@ -248,10 +249,10 @@ object RecallProbe {
     // √nlist ratio, auto nlist/nprobe — the documented clustered-corpus
     // configuration, measured through the same public entry point.
     val sqrtFrac = math.ceil(math.sqrt(mogNlist)) / mogNlist
-    spark.conf.set("spark.graft.ivf.nprobeFraction", f"$sqrtFrac%.4f")
+    spark.conf.set(GraftConf.IvfNprobeFraction.key, f"$sqrtFrac%.4f")
     val mogFracRecall =
       try recall(pairs(Similarity.ivfTopK(mog, k = 5), "query_id", "neighbor_id"), mogExact)
-      finally spark.conf.unset("spark.graft.ivf.nprobeFraction")
+      finally spark.conf.unset(GraftConf.IvfNprobeFraction.key)
 
     // ── OPQ-lite: full-rank PCA rotation before PQ (EmbeddingProjection
     // .rotateToBasis — dot/cosine preserved exactly, energy compacted
@@ -345,7 +346,7 @@ object RecallProbe {
          |    "exact_pairs": ${mogExact.size},
          |    "recall_at_sqrt_nprobe": $mogSqrtRecall%.4f,
          |    "recall_with_nprobeFraction_knob": {"fraction": $sqrtFrac%.4f, "recall_at_k": $mogFracRecall%.4f,
-         |      "config": "spark.graft.ivf.nprobeFraction=sqrt(nlist)/nlist, auto nlist/nprobe"},
+         |      "config": "${GraftConf.IvfNprobeFraction.key}=sqrt(nlist)/nlist, auto nlist/nprobe"},
          |    "mog_nprobe_sweep": [
          |      $mogSweepJson
          |    ]

@@ -68,7 +68,7 @@ object ScaleProbe {
     }
 
     val cfg = TaskConfig.fromYaml(flagshipYaml)
-    spark.conf.set("spark.graft.checkpoint", if (noCheckpoint) "off" else "local")
+    spark.conf.set(graft.GraftConf.Checkpoint.key, if (noCheckpoint) "off" else "local")
 
     val stageLog = new Probe.StageLog
     if (printStages) spark.sparkContext.addSparkListener(stageLog)

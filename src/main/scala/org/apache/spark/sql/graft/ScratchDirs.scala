@@ -1,0 +1,17 @@
+package org.apache.spark.sql.graft
+
+import java.io.File
+
+import org.apache.spark.util.ShutdownHookManager
+
+/** Scratch directories that Spark's shutdown hook deletes with all their
+  * contents. `File.deleteOnExit` skips a directory that is not empty, so
+  * it never removes a directory that data was written into. Lives under
+  * `org.apache.spark` because `ShutdownHookManager` is `private[spark]`.
+  */
+object ScratchDirs {
+
+  def deleteAtShutdown(dir: File): Unit = ShutdownHookManager.registerShutdownDeleteDir(dir)
+
+  def deletedAtShutdown(dir: File): Boolean = ShutdownHookManager.hasShutdownDeleteDir(dir)
+}

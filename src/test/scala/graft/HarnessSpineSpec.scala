@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[Sessions.local]], and stage metrics come from the one listener,
   * [[graft.tools.Probe.StageLog]], so a new probe cannot grow its own.
   * Streaming state machines stay on one core each: a new near-dup stream
-  * goes through `StreamingPredicates.bandedPairStream`.
+  * goes through `StreamingPredicates.bandedPairStream`. Session settings
+  * stay in one registry, [[GraftConf]].
   */
 class HarnessSpineSpec extends AnyFunSuite {
 
@@ -31,6 +32,12 @@ class HarnessSpineSpec extends AnyFunSuite {
 
   test("onStageCompleted is overridden at most once") {
     assert(count("""def\s+onStageCompleted\b""").values.sum <= 1)
+  }
+
+  test("spark.graft.* keys are declared only in GraftConf, at most 5 of them") {
+    val keys = count("\"spark\\.graft\\.")
+    assert(keys.keySet.subsetOf(Set("GraftConf.scala")), s"key literals outside GraftConf: $keys")
+    assert(keys.getOrElse("GraftConf.scala", 0) <= 5)
   }
 
   test("flatMapGroupsWithState is called at most 4 times") {

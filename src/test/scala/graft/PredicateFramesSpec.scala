@@ -49,14 +49,8 @@ class PredicateFramesSpec extends SparkSpec {
     }.toDF("subject_id", "timestamp", "a", "b")
       .withColumn("timestamp", to_timestamp(col("timestamp")))
 
-    spark.conf.set("spark.graft.collapse", "skew-safe")
-    val skewSafe =
-      try snap(PredicateFrames.collapse(raw, Seq("a", "b")))
-      finally spark.conf.unset("spark.graft.collapse")
-    spark.conf.set("spark.graft.collapse", "direct")
-    val direct =
-      try snap(PredicateFrames.collapse(raw, Seq("a", "b")))
-      finally spark.conf.unset("spark.graft.collapse")
+    val skewSafe = snap(PredicateFrames.collapse(raw, Seq("a", "b"), "skew-safe"))
+    val direct = snap(PredicateFrames.collapse(raw, Seq("a", "b"), "direct"))
     // default = adaptive; on a tiny in-memory frame it must shortcut to
     // direct without a sampling job, and match both forced modes.
     val adaptive = snap(PredicateFrames.collapse(raw, Seq("a", "b")))
@@ -212,5 +206,29 @@ class PredicateFramesSpec extends SparkSpec {
       "1|2020-01-02 00:00:00|0|1|0|0",
       "1|2020-01-03 00:00:00|1|1|0|1"
     ).sorted)
+  }
+
+  test("ESGPT directory loads stage into a dir that is deleted at shutdown, contents and all") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_esgpt_in_")
+    try {
+      Seq((1L, "BLUE")).toDF("subject_id", "eye_color")
+        .write.parquet(s"$dir/subjects_df.parquet")
+      Seq((10L, 1L, "2020-01-01 00:00", "ADMISSION"), (11L, 1L, "2020-01-02 00:00", "DISCHARGE"))
+        .toDF("event_id", "subject_id", "ts", "event_type")
+        .select(col("event_id"), col("subject_id"), to_timestamp(col("ts")).as("timestamp"), col("event_type"))
+        .write.parquet(s"$dir/events_df.parquet")
+      Seq((10L, "HR", 80.0)).toDF("event_id", "measurement", "value")
+        .write.parquet(s"$dir/dynamic_measurements_df.parquet")
+      java.nio.file.Files.writeString(dir.resolve("config.json"), """{"name": "tiny"}""")
+
+      val df = PredicateFrames.fromEsgptDir(spark, dir.toString,
+        Seq("admission" -> PlainPredicateDef(CodeEq("event_type//ADMISSION"))))
+      assert(snap(df) == Seq("1|2020-01-01 00:00:00|1", "1|2020-01-02 00:00:00|0", "1|null|0"))
+      // inputFiles: <staging root>/esgpt_<path hash>_<seq>/part-*.parquet
+      val root = java.nio.file.Paths.get(new java.net.URI(df.inputFiles.head)).getParent.getParent
+      assert(root.getFileName.toString.startsWith("graft_esgpt_"))
+      assert(org.apache.spark.sql.graft.ScratchDirs.deletedAtShutdown(root.toFile))
+    } finally deleteTree(dir)
   }
 }

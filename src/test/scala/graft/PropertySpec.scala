@@ -193,11 +193,8 @@ class PropertySpec extends AnyFunSuite with SparkSpec {
           .withColumn("timestamp",
             to_timestamp(col("h") * 3600 + 1700000000L))
           .select("subject_id", "timestamp", "a", "b")
-        def run(mode: String): Seq[String] = {
-          spark.conf.set("spark.graft.collapse", mode)
-          try snap(graft.sources.PredicateFrames.collapse(df, Seq("a", "b")))
-          finally spark.conf.unset("spark.graft.collapse")
-        }
+        def run(mode: String): Seq[String] =
+          snap(graft.sources.PredicateFrames.collapse(df, Seq("a", "b"), mode))
         val direct = run("direct")
         direct.nonEmpty && direct == run("skew-safe") && direct == run("adaptive")
       }

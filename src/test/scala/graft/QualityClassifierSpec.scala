@@ -52,7 +52,7 @@ class QualityClassifierSpec extends SparkSpec {
   }
 
   test("the two-level gradient fold matches the linear collect fold") {
-    // Above spark.graft.fit.treeFoldMinPartitions the per-partition
+    // Above QualityClassifier.TreeFoldMinPartitions the per-partition
     // gradient arrays group-sum on executors before reaching the driver
     // (bounded inflow at corpus scale); parity with the linear fold — at
     // a tolerance above merge-order ulp, far under the rounding grain —
@@ -65,10 +65,8 @@ class QualityClassifierSpec extends SparkSpec {
     try {
       val linear = QualityClassifier.rddGradient(
         blocks, dim, w, 0.25, spark.sparkContext)
-      spark.conf.set("spark.graft.fit.treeFoldMinPartitions", "1")
-      val tree =
-        try QualityClassifier.rddGradient(blocks, dim, w, 0.25, spark.sparkContext)
-        finally spark.conf.unset("spark.graft.fit.treeFoldMinPartitions")
+      val tree = QualityClassifier.rddGradient(
+        blocks, dim, w, 0.25, spark.sparkContext, treeFoldMinPartitions = 1)
       for (i <- 0 to dim)
         assert(math.abs(tree(i) - linear(i)) < 1e-9,
           s"slot $i: tree=${tree(i)} linear=${linear(i)}")
@@ -77,7 +75,7 @@ class QualityClassifierSpec extends SparkSpec {
 
   test("the driver-local iteration engine is bit-identical to the RDD path") {
     // train() collects the CSR blocks and iterates on the driver when
-    // they fit spark.graft.fit.localBlocksMaxBytes; same blockGradient
+    // they fit QualityClassifier.LocalBlocksMaxBytes; same blockGradient
     // kernel + same fold order ⇒ exact equality, asserted here.
     val dim = 64
     val labeled = docs.withColumn("y", (col("lang") === "en").cast("int"))
