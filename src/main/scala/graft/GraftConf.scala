@@ -30,7 +30,10 @@ object GraftConf {
 
   val Checkpoint = new Entry[String]("spark.graft.checkpoint", "local",
     "lineage cuts: `local` (localCheckpoint), `reliable` (checkpoint to `checkpoint.dir`) or `off`",
-    (_, v) => v)
+    { (key, v) =>
+      require(Set("local", "reliable", "off")(v), s"$key must be local, reliable or off, got '$v'")
+      v
+    })
 
   val CheckpointDir = new Entry[Option[String]]("spark.graft.checkpoint.dir", None,
     "directory for `reliable` cuts; unset, the context keeps its own or gets one under /tmp",

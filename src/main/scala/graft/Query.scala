@@ -16,11 +16,6 @@ object Query {
 
   /** Run a task query over a canonical predicates frame.
     *
-    * The reference eagerly validates (subject_id, timestamp) uniqueness
-    * with a full scan (query.py:110-115); loaders built with
-    * `PredicateFrames.collapse` guarantee it by construction, so the scan
-    * is opt-in here (`validateUnique`).
-    *
     * Under `spark.graft.checkpoint=local|reliable` (the default is local)
     * the result is materialized before this returns; nothing else is
     * persisted, and a failing query leaves nothing persisted. Under `off`
@@ -29,15 +24,11 @@ object Query {
     * window tree is one sorted pass per subject ([[WindowTree]]), so the
     * input is read once.
     */
-  def apply(cfg: TaskConfig, predicatesDf: DataFrame, validateUnique: Boolean = false): DataFrame = {
-    if (validateUnique) {
-      val dupes = predicatesDf.groupBy("subject_id", "timestamp").count().filter(col("count") > 1)
-      require(dupes.isEmpty, "The (subject_id, timestamp) columns must be unique.")
-    }
+  def apply(cfg: TaskConfig, predicatesDf: DataFrame): DataFrame = {
     val realized = WindowTree(cfg.windowTree, cfg.trigger.predicate, canonicalRows(cfg, predicatesDf))
     // Mirrors the reference's eager execution (query() returns a computed
     // frame, query.py:142-151).
-    Materialize(project(cfg, realized), eager = true)
+    Materialize(project(cfg, realized))
   }
 
   /** Static-demographics filter, then rows with a subject and a timestamp

@@ -1457,7 +1457,7 @@ object QueryCatalog {
       // demonstrating).
       Dedup.semDeDupIncremental(
         e.filter(col("vec_id") >= 400), corpus,
-        graft.plans.Materialize(Similarity.ivfCentroids(corpus, nlist = 16), eager = true),
+        graft.plans.Materialize(Similarity.ivfCentroids(corpus, nlist = 16)),
         threshold = 0.4, nprobe = 2)
         .select(col("vec_id"), col("cid"), round(col("csim"), 3).as("csim"), col("keep"))
         .orderBy("vec_id")
@@ -3891,8 +3891,8 @@ object QueryCatalog {
         .select("doc_id", "lang", "text")
       // TRULY force the shard frames before compaction rewrites the
       // state layout their lazy plans list files from: a parquet
-      // round-trip, not a Materialize (localCheckpoint is lazy by
-      // default and a no-op under spark.graft.checkpoint=off).
+      // round-trip, not a Materialize (a no-op under
+      // spark.graft.checkpoint=off, the one mode whose plans stay lazy).
       s0.unionByName(s1).write.mode("overwrite").parquet(s"$state/_gate_release")
       val got01 = s.read.parquet(s"$state/_gate_release")
       CurationPipeline.compactShardState(s, state)

@@ -520,21 +520,17 @@ object Dedup {
   ): DataFrame = {
     // The per-round lineage cut is load-bearing here, not an optimization:
     // without it, round k's plan nests k self-joins and the convergence
-    // count() re-executes the whole chain — combinatorial blow-up. So when
-    // `spark.graft.checkpoint=off` (plan-inspection mode), fall back to an
-    // eager localCheckpoint instead of honoring the no-op.
-    def cut(df: DataFrame): DataFrame =
-      if (graft.plans.Materialize.mode(df) == "off") df.localCheckpoint(true)
-      else graft.plans.Materialize(df, eager = true)
+    // count() re-executes the whole chain — combinatorial blow-up. So it
+    // cuts under `spark.graft.checkpoint=off` (plan-inspection mode) too.
     val e = pairs.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
     // The symmetric edge list is STATIC across rounds — materialize it
     // hash(dst)-partitioned once, so every round's neighbor join
     // re-exchanges only the (much thinner, shrinking-churn) label side,
     // never the edges.
-    val edges = cut(
+    val edges = graft.plans.Materialize.always(
       e.union(e.select(col("dst").as("src"), col("src").as("dst"))).distinct()
         .repartition(col("dst")))
-    var labels = cut(
+    var labels = graft.plans.Materialize.always(
       edges.select(col("src").as("id")).distinct().withColumn("lbl", col("id")))
     var changed = 1L
     while (changed > 0) {
@@ -545,7 +541,7 @@ object Dedup {
       // The previous label rides the materialized frame as `old`, so the
       // convergence check is a filter-count over the cut blocks instead
       // of a second labels join (one fewer join + scan per round).
-      val next = cut(
+      val next = graft.plans.Materialize.always(
         labels
           .join(neighborMin, Seq("id"), "left")
           .select(
@@ -695,8 +691,7 @@ object Dedup {
   ): DataFrame = {
     val resolvedNlist = Similarity.resolveNlist(vectors, nlist, idCol)
     val cents = graft.plans.Materialize(
-      Similarity.ivfCentroids(vectors, resolvedNlist, refineIters, idCol, vecCol),
-      eager = true)
+      Similarity.ivfCentroids(vectors, resolvedNlist, refineIters, idCol, vecCol))
     semDeDup(vectors, cents, threshold, nprobe, idCol, vecCol)
   }
 

@@ -308,7 +308,7 @@ object ProductQuant {
           col("mi"),
           col("cid"),
           transform(array_sort(col("dims")), d => d.getField("mn").cast("float")).as("cv"))
-      cents = graft.plans.Materialize(cents, eager = true)
+      cents = graft.plans.Materialize(cents)
     }
     // Re-densify ids (empty codewords drop out during Lloyd) so code
     // values always index the per-subspace codeword list positionally.
@@ -320,8 +320,7 @@ object ProductQuant {
     // budget counts it against the corpus-exchange-free contract).
     graft.plans.Materialize(
       denseIdsByMi(cents, "cid", "cv")
-        .select(col("mi").as("m"), col("cid"), col("cv")),
-      eager = true)
+        .select(col("mi").as("m"), col("cid"), col("cv")))
   }
 
   /** Map-side sub-vector assignment against the per-subspace broadcast
@@ -532,8 +531,7 @@ object ProductQuant {
     val resolvedNlist = Similarity.resolveNlist(corpus, nlist, idCol)
     val Seq(cents, codebooks) = ConcurrentFits.run(Seq(
       () => graft.plans.Materialize(
-        Similarity.ivfCentroids(corpus, resolvedNlist, refineIters, idCol, vecCol),
-        eager = true),
+        Similarity.ivfCentroids(corpus, resolvedNlist, refineIters, idCol, vecCol)),
       // pqCodebooks materializes its own result (several consumers).
       () => pqCodebooks(corpus, m, ks, refineIters, idCol, vecCol)))
     IvfPqIndex(cents, codebooks,

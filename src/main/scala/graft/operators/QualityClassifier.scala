@@ -401,8 +401,7 @@ object QualityClassifier {
       hashedFeatures(docs, dim, idCol, textCol).join(labeled, Seq("doc_id"))
         .unionByName(labeled.select(
           col("doc_id"), lit(-1).as("feat"), lit(1.0).as("x"), col("y")))
-        .repartition(col("doc_id")),
-      eager = true)
+        .repartition(col("doc_id")))
   }
 
   /** The `(feat, w)` weight frame, bias at `feat = −1`; zero weights are

@@ -312,7 +312,7 @@ object Similarity {
         .select(
           col("cid"),
           transform(array_sort(col("dims")), d => d.getField("m").cast("float")).as("cv"))
-      centroids = graft.plans.Materialize(centroids, eager = true)
+      centroids = graft.plans.Materialize(centroids)
     }
     centroids
   }

@@ -5,9 +5,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Lineage-cut points: a frame that several later plans read (an
-  * iterative dedup round, a fitted index, a query result) is computed once
-  * and read back from storage, instead of every consumer re-running and
-  * re-analysing its whole lineage.
+  * iterative dedup round, a fitted index, a query result) is computed once,
+  * where it is cut, and read back from storage, instead of every consumer
+  * re-running and re-analysing its whole lineage.
   *
   * Mode is the frame's session's [[graft.GraftConf.Checkpoint]]:
   *
@@ -21,17 +21,17 @@ import org.apache.spark.sql.execution.LogicalRDD
   *     pointed there whenever it is elsewhere; unset, the context keeps
   *     its directory or gets one under /tmp) — survives executor loss;
   *     the 100 TB-cluster setting.
-  *   - `off`: no cuts (tiny data / plan-inspection tests).
+  *   - `off`: no cuts; plans stay lazy (tiny data / plan-inspection tests).
   */
 object Materialize {
 
-  def mode(df: DataFrame): String = graft.GraftConf.Checkpoint(df.sparkSession)
+  private def mode(df: DataFrame): String = graft.GraftConf.Checkpoint(df.sparkSession)
 
-  /** A lineage cut of `df`; with `eager`, computed before this returns. A
-    * failing eager `local` cut unpersists the RDD it marked before
-    * rethrowing, so a failed query leaves no blocks behind.
+  /** A lineage cut of `df`, computed before this returns (`off`: `df`
+    * itself). A failing `local` cut unpersists the RDD it marked before
+    * rethrowing, so a failed job leaves no blocks behind.
     */
-  def apply(df: DataFrame, eager: Boolean = false): DataFrame = mode(df) match {
+  def apply(df: DataFrame): DataFrame = mode(df) match {
     case "off" => df
     case "reliable" =>
       val sc = df.sparkSession.sparkContext
@@ -42,16 +42,24 @@ object Materialize {
         !sc.getCheckpointDir.exists(c => new Path(c).getParent.toUri.getPath == new Path(d).toUri.getPath))
       if (sc.getCheckpointDir.isEmpty || elsewhere)
         sc.setCheckpointDir(named.getOrElse(s"/tmp/graft-checkpoints-${sc.applicationId}"))
-      df.checkpoint(eager)
-    case _ =>
-      // The lazy cut persists its RDD when planned; computing it here (the
-      // eager path's one job) keeps the handle needed to release it.
-      val cut = df.localCheckpoint(eager = false)
-      if (eager) {
-        val rdd = cut.queryExecution.logical.asInstanceOf[LogicalRDD].rdd
-        try rdd.count()
-        catch { case e: Throwable => rdd.unpersist(blocking = false); throw e }
-      }
-      cut
+      df.checkpoint() // eager
+    case "local" => local(df)
+  }
+
+  /** [[apply]], but a `local` cut under `off` too: for iterative plans
+    * whose cut is load-bearing (round k would otherwise nest k rounds).
+    */
+  private[graft] def always(df: DataFrame): DataFrame =
+    if (mode(df) == "off") local(df) else apply(df)
+
+  private def local(df: DataFrame): DataFrame = {
+    // `localCheckpoint(false)` marks its RDD persisted when planned;
+    // counting that RDD here, not through `localCheckpoint(true)`, keeps
+    // the handle needed to release it.
+    val cut = df.localCheckpoint(false)
+    val rdd = cut.queryExecution.logical.asInstanceOf[LogicalRDD].rdd
+    try rdd.count()
+    catch { case e: Throwable => rdd.unpersist(blocking = false); throw e }
+    cut
   }
 }

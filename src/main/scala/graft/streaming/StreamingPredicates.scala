@@ -20,9 +20,9 @@ import graft.plans.{Realized, SubjectKernel, SubjectRow, WindowNode, WindowTree}
   *
   * Operator families:
   *   - Cohort predicates: [[windowedCounts]] (tumbling windows),
-  *     [[sessionizeStream]], [[cumulativeCounts]] (running totals), and
-  *     the batch window-tree kernel over a stream, [[cohortWindows]] (+
-  *     [[labelRows]]); [[triggerWindowCounts]] is its one-window view.
+  *     [[sessionizeStream]], and the batch window-tree kernel over a
+  *     stream, [[cohortWindows]] (+ [[labelRows]]);
+  *     [[triggerWindowCounts]] is its one-window view.
   *   - Exact and url dedup ([[dedupExactStream]], [[urlDedupStream]]):
   *     Spark's own `dropDuplicatesWithinWatermark` on a 16-byte key.
   *   - Near-dup pairs: minhash / embedding / phash / afp / video. Each
@@ -137,9 +137,6 @@ object StreamingPredicates {
           .as("duration_us"),
         col("n_events"))
   }
-
-  final case class SubjectEvent(subject_id: Long, tsMicros: Long, counts: Array[Long])
-  final case class SubjectTotals(subject_id: Long, lastTsMicros: Long, totals: Array[Long])
 
   /** Input row for [[cohortWindows]] — keeps the watermarked
     * `timestamp` column (event-time timeout requires it to survive into
@@ -1273,38 +1270,5 @@ object StreamingPredicates {
       .withColumn("avg_nll", -sumLp / col("n_tokens"))
       .withColumn("ppl", exp(col("avg_nll")))
       .drop("__lmmap", "__oov")
-  }
-
-  /** Per-subject running totals with stateful processing. Emits one update
-    * per micro-batch per active subject. State here is unbounded by design
-    * (a running total never expires); a production deployment bounding
-    * state would add an event-time timeout keyed off the watermark and
-    * emit a final record on eviction.
-    */
-  def cumulativeCounts(
-      events: Dataset[SubjectEvent],
-      nPreds: Int
-  ): Dataset[SubjectTotals] = {
-    implicit val enc = Encoders.product[SubjectTotals]
-    events
-      .groupByKey(_.subject_id)(Encoders.scalaLong)
-      .flatMapGroupsWithState[SubjectTotals, SubjectTotals](
-        OutputMode.Append(),
-        GroupStateTimeout.NoTimeout()) {
-        (subject: Long, rows: Iterator[SubjectEvent], state: GroupState[SubjectTotals]) =>
-          val prev = state.getOption.getOrElse(SubjectTotals(subject, 0L, Array.fill(nPreds)(0L)))
-          var lastTs = prev.lastTsMicros
-          val totals = prev.totals.clone()
-          var any = false
-          rows.foreach { e =>
-            any = true
-            lastTs = math.max(lastTs, e.tsMicros)
-            var i = 0
-            while (i < nPreds) { totals(i) += e.counts(i); i += 1 }
-          }
-          val updated = SubjectTotals(subject, lastTs, totals)
-          state.update(updated)
-          if (any) Iterator(updated) else Iterator.empty
-      }
   }
 }

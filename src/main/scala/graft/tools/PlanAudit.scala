@@ -311,8 +311,7 @@ object PlanAudit {
     // budget as the full run.
     val semCents = graft.plans.Materialize(
       graft.operators.Similarity.ivfCentroids(
-        embT.filter(col("vec_id") < 400), nlist = 4, refineIters = 1),
-      eager = true)
+        embT.filter(col("vec_id") < 400), nlist = 4, refineIters = 1))
     audit("semdedup_incr", graft.operators.Dedup.semDeDupIncremental(
       embT.filter(col("vec_id") >= 400), embT.filter(col("vec_id") < 400),
       semCents, threshold = 0.4, nprobe = 2), 6)
@@ -333,7 +332,7 @@ object PlanAudit {
     // union + the two touching-shard flag joins — corpus payloads never
     // enter the plan (the index is the 16-byte (id, hash) rows).
     val phashIdx = graft.plans.Materialize(graft.operators.PerceptualHash.signatures(
-      bitmaps.filter(col("media_id") < 250)), eager = true)
+      bitmaps.filter(col("media_id") < 250)))
     audit("phash_dedup(incr)", graft.operators.PerceptualHash.dedupIncremental(
       bitmaps.filter(col("media_id") >= 250), phashIdx), 6)
 
@@ -346,7 +345,7 @@ object PlanAudit {
     audit("afp_signatures", graft.operators.AudioFingerprint.signatures(wavs), 0)
     audit("afp_dedup", graft.operators.AudioFingerprint.dedup(wavs), 6)
     val afpIdx = graft.plans.Materialize(graft.operators.AudioFingerprint.signatures(
-      wavs.filter(col("media_id") < 250)), eager = true)
+      wavs.filter(col("media_id") < 250)))
     audit("afp_dedup(incr)", graft.operators.AudioFingerprint.dedupIncremental(
       wavs.filter(col("media_id") >= 250), afpIdx), 6)
 
@@ -402,8 +401,7 @@ object PlanAudit {
     // both lookup tables broadcast, no token-keyed exchange, no fit.
     val biLm = graft.plans.Materialize(
       graft.operators.Vocabulary.bigramLm(
-        docsT.filter(col("doc_id") < 250), vocabSize = 20, bigramSize = 200),
-      eager = true)
+        docsT.filter(col("doc_id") < 250), vocabSize = 20, bigramSize = 200))
     audit("text_perplexity(bigram)", graft.operators.Vocabulary.perplexityBigram(
       docsT.filter(col("doc_id") >= 250), biLm, "text", "doc_id"), 2)
 
@@ -512,7 +510,7 @@ object PlanAudit {
     // clustering and banding over thin (id, ehash, elen, sig) rows —
     // corpus text never enters the plan.
     val shIdx = graft.plans.Materialize(graft.operators.Dedup.simhashIndex(
-      docsT.filter(col("doc_id") < 250)), eager = true)
+      docsT.filter(col("doc_id") < 250)))
     audit("dedup_simhash(incr)", graft.operators.Dedup.simhashIncremental(
       docsT.filter(col("doc_id") >= 250), shIdx), 6)
 
@@ -524,7 +522,7 @@ object PlanAudit {
     // semi-restricted corpus df + probe ranking window + candidate join
     // + candidate-id semi + sets aggregate + two verify joins.
     val ngIdx = graft.plans.Materialize(graft.operators.Dedup.ngramIndex(
-      docsT.filter(col("doc_id") < 250)), eager = true)
+      docsT.filter(col("doc_id") < 250)))
     audit("dedup_ngram_jaccard(incr)", graft.operators.Dedup.ngramJaccardIncremental(
       docsT.filter(col("doc_id") >= 250), ngIdx, threshold = 0.8), 9)
     // The plan must NOT re-derive union-level ranks: no window function
@@ -551,7 +549,7 @@ object PlanAudit {
     audit("video_dedup", graft.operators.VideoFingerprint.dedup(
       vids, vFrameBytes, minShared = 3L), 4)
     val vIdx = graft.plans.Materialize(graft.operators.VideoFingerprint.signatures(
-      vids.filter(col("media_id") < 250), vFrameBytes), eager = true)
+      vids.filter(col("media_id") < 250), vFrameBytes))
     audit("video_dedup(incr)", graft.operators.VideoFingerprint.dedupIncremental(
       vids.filter(col("media_id") >= 250), vIdx, vFrameBytes, minShared = 3L), 4)
 
@@ -559,7 +557,7 @@ object PlanAudit {
     // cap and inverted-index join over thin (doc_id, fp) rows — corpus
     // text never enters the plan.
     val wnIdx = graft.plans.Materialize(graft.operators.Dedup.winnowIndex(
-      docsT.filter(col("doc_id") < 250)), eager = true)
+      docsT.filter(col("doc_id") < 250)))
     audit("dedup_winnow(incr)", graft.operators.Dedup.winnowIncremental(
       docsT.filter(col("doc_id") >= 250), wnIdx), 6)
 
@@ -580,7 +578,7 @@ object PlanAudit {
     // plus the index join sides — NOTHING in the plan re-parses corpus
     // urls (the index arrives pre-normalized).
     val urlIdx = graft.plans.Materialize(graft.operators.UrlCuration.urlIndex(
-      urlDocs.filter(col("doc_id") < 250)), eager = true)
+      urlDocs.filter(col("doc_id") < 250)))
     audit("dedup_url(incr)", graft.operators.UrlCuration.dedupByUrlIncremental(
       urlDocs.filter(col("doc_id") >= 250), urlIdx), 3)
 
@@ -774,7 +772,7 @@ object PlanAudit {
     // Cluster assignment against persisted centroids (the assign-many
     // serve path): broadcast centroid array only — ZERO corpus exchanges.
     val clusterCents = graft.plans.Materialize(
-      graft.operators.Similarity.ivfCentroids(embT, nlist = 8), eager = true)
+      graft.operators.Similarity.ivfCentroids(embT, nlist = 8))
     audit("cluster_assign(serve)", graft.operators.Similarity.clusterAssign(
       embT, centroids = Some(clusterCents)), 0)
 

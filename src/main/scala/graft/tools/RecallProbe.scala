@@ -223,8 +223,7 @@ object RecallProbe {
     val mog = graft.plans.Materialize(
       graft.harness.SyntheticEmbeddings
         .mixtureOfGaussians(spark, n = 2000, dim = 64, nClusters = 40, clusterStd = 0.08)
-        .select("vec_id", "embedding"),
-      eager = true)
+        .select("vec_id", "embedding"))
     val mogExact = pairs(Similarity.bruteForceTopK(mog, mog, k = 5), "query_id", "neighbor_id")
     val mogNlist = Similarity.resolveNlist(mog, 0, "vec_id")
     val mogSweep = Seq(
@@ -268,7 +267,7 @@ object RecallProbe {
         "vec_id", "embedding"), "query_id", "neighbor_id")
     val mogModel = graft.operators.EmbeddingProjection.fitPca(mog, k = 64)
     val mogRot = graft.plans.Materialize(
-      graft.operators.EmbeddingProjection.rotateToBasis(mog, mogModel), eager = true)
+      graft.operators.EmbeddingProjection.rotateToBasis(mog, mogModel))
     // Rotation-correctness gate: exact top-k on the rotated corpus must
     // BE the exact top-k (cosine preserved bit-for-bit at double-dot
     // precision).
@@ -279,7 +278,7 @@ object RecallProbe {
     val opqMogRot = recall(starvedPq(mogRot), mogExact)
     val emb1Model = graft.operators.EmbeddingProjection.fitPca(emb1, k = 64)
     val emb1Rot = graft.plans.Materialize(
-      graft.operators.EmbeddingProjection.rotateToBasis(emb1, emb1Model), eager = true)
+      graft.operators.EmbeddingProjection.rotateToBasis(emb1, emb1Model))
     val opqEmb1Plain = recall(starvedPq(emb1), exact1)
     val opqEmb1Rot = recall(starvedPq(emb1Rot), exact1)
 

@@ -78,7 +78,7 @@ object TextScaleProbe {
       // Serving: score against a PRE-FIT LM (fit excluded, the
       // fit-once/score-many shape) — materialized once outside the timer.
       val lm = graft.plans.Materialize(
-        Vocabulary.unigramLm(corpus, vocabSize = 1 << 16), eager = true)
+        Vocabulary.unigramLm(corpus, vocabSize = 1 << 16))
       val tPplServe = time {
         Vocabulary.perplexity(corpus, lm, "text", "doc_id")
           .write.format("noop").mode("overwrite").save()
@@ -106,7 +106,7 @@ object TextScaleProbe {
           .write.format("noop").mode("overwrite").save()
       }
       val post = graft.plans.Materialize(
-        graft.operators.Retrieval.postings(corpus), eager = true)
+        graft.operators.Retrieval.postings(corpus))
       val probes = spark.createDataFrame(Seq(
         (1L, "spark join"), (2L, "window merge sort"), (3L, "vector hash batch")))
         .toDF("query_id", "query_text")

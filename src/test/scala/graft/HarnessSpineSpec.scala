@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[graft.tools.Probe.StageLog]], so a new probe cannot grow its own.
   * Streaming state machines stay on one core each: a new near-dup stream
   * goes through `StreamingPredicates.bandedPairStream`. Session settings
-  * stay in one registry, [[GraftConf]].
+  * stay in one registry, [[GraftConf]], and lineage cuts in one place,
+  * [[graft.plans.Materialize]].
   */
 class HarnessSpineSpec extends AnyFunSuite {
 
@@ -40,9 +41,13 @@ class HarnessSpineSpec extends AnyFunSuite {
     assert(keys.getOrElse("GraftConf.scala", 0) <= 5)
   }
 
-  test("flatMapGroupsWithState is called at most 4 times") {
-    // The banded near-dup core, cohortWindows, substringDupStream and
-    // cumulativeCounts.
-    assert(count("""\.flatMapGroupsWithState\b""").values.sum <= 4)
+  test("flatMapGroupsWithState is called at most 3 times") {
+    // The banded near-dup core, cohortWindows and substringDupStream.
+    assert(count("""\.flatMapGroupsWithState\b""").values.sum <= 3)
+  }
+
+  test("localCheckpoint( and .checkpoint( appear only in Materialize") {
+    val cuts = count("""localCheckpoint\(|\.checkpoint\(""")
+    assert(cuts.keySet.subsetOf(Set("Materialize.scala")), s"lineage cuts outside Materialize: $cuts")
   }
 }

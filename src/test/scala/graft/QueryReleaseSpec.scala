@@ -4,9 +4,9 @@ import org.apache.spark.sql.functions._
 
 import graft.config.TaskConfig
 
-/** Query.apply's cache contract: the canonical frame it persists is
-  * released on every path, and under `spark.graft.checkpoint=off` it
-  * persists nothing at all.
+/** Query.apply's release contract: a failing query leaves no cached plan
+  * and no persisted RDD behind (its result cut is released), and under
+  * `spark.graft.checkpoint=off` it persists nothing at all.
   */
 class QueryReleaseSpec extends SparkSpec {
 

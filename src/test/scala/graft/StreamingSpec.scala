@@ -14,7 +14,7 @@ import graft.config.TaskConfig
 import graft.model.{EndpointBounds, EventBounds}
 import graft.plans.{Realized, SubjectKernel, WindowNode, WindowTree}
 import graft.streaming.StreamingPredicates
-import graft.streaming.StreamingPredicates.{SubjectEvent, TriggerState}
+import graft.streaming.StreamingPredicates.TriggerState
 
 /** Structured Streaming extension tests via MemoryStream micro-batches. */
 class StreamingSpec extends SparkSpec {
@@ -1177,30 +1177,6 @@ class StreamingSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(pairs == Set((1L, 2L), (3L, 4L)),
         s"expected the pre-TTL pair and the post-TTL fresh pair only; got $pairs")
-    } finally query.stop()
-  }
-
-  test("cumulativeCounts keeps running per-subject totals") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-
-    val input = MemoryStream[SubjectEvent]
-    val out = StreamingPredicates.cumulativeCounts(input.toDS(), nPreds = 2)
-
-    val query = out.writeStream
-      .format("memory").queryName("cum_counts").outputMode("append").start()
-    try {
-      input.addData(SubjectEvent(1L, 1000L, Array(1L, 0L)), SubjectEvent(1L, 2000L, Array(2L, 1L)))
-      query.processAllAvailable()
-      input.addData(SubjectEvent(1L, 3000L, Array(0L, 5L)), SubjectEvent(2L, 500L, Array(7L, 0L)))
-      query.processAllAvailable()
-
-      val rows = spark.table("cum_counts").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2).toList))
-      // latest emission per subject reflects the running totals
-      val latest = rows.groupBy(_._1).view.mapValues(_.maxBy(_._2)).toMap
-      assert(latest(1L)._3 == List(3L, 6L))
-      assert(latest(2L)._3 == List(7L, 0L))
     } finally query.stop()
   }
 

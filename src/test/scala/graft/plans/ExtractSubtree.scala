@@ -22,18 +22,18 @@ import graft.operators.{Constraints, EventBoundAgg, TemporalWindowAgg}
   */
 object ExtractSubtree {
 
-  /** Lazy checkpoint: materialized on first action and reused by every
-    * consumer (each level's summary has three — child anchors, the
-    * re-anchor join, and the struct summary), without the serial eager
-    * pass per recursion level. Mode (local / reliable / off) comes from
-    * the single `spark.graft.checkpoint` conf, see [[Materialize]] —
-    * tests on tiny data set `off` to keep plans inspectable.
+  /** Lineage cut, computed where it is made and reused by every consumer
+    * (each level's summary has three — child anchors, the re-anchor join,
+    * and the struct summary). Mode (local / reliable / off) comes from the
+    * single `spark.graft.checkpoint` conf, see [[Materialize]]; under
+    * `off` the recursion stays one lazy plan.
     */
   private def maybeCheckpoint(df: DataFrame): DataFrame = Materialize(df)
 
   /** [[Query]] with this evaluator in place of [[WindowTree]]: trigger
     * anchors, pruning to subjects with a trigger row, the recursion, then
-    * Query's own label / index projection. The result is lazy.
+    * Query's own label / index projection. The recursion's cuts are
+    * computed as it runs; the projection over them is lazy.
     */
   def query(cfg: TaskConfig, predicatesDf: DataFrame): DataFrame = {
     val filtered = Query.canonicalRows(cfg, predicatesDf)
