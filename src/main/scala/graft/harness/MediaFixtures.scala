@@ -2,7 +2,7 @@ package graft.harness
 
 import java.io.ByteArrayOutputStream
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.types._
 
 /** Deterministic container-payload generators for the oracle harness:
@@ -323,24 +323,20 @@ object MediaFixtures {
     * id — generated partition-wise.
     */
   def syntheticVideos(ids: DataFrame): DataFrame = {
-    val spark = ids.sparkSession
-    val rdd = ids.rdd.mapPartitions(_.map { r =>
+    ids.mapPartitions(_.map { r =>
       val id = r.getLong(0)
       Row(id, videoPayload(id))
-    })
-    spark.createDataFrame(rdd, mediaIdPayloadSchema)
+    })(Encoders.row(mediaIdPayloadSchema))
   }
 
   /** (media_id, payload) frame of synthetic dHash-oracle bitmaps, one per
     * input id — generated partition-wise like [[syntheticContainers]].
     */
   def syntheticBitmaps(ids: DataFrame): DataFrame = {
-    val spark = ids.sparkSession
-    val rdd = ids.rdd.mapPartitions(_.map { r =>
+    ids.mapPartitions(_.map { r =>
       val id = r.getLong(0)
       Row(id, bmpPayload(id))
-    })
-    spark.createDataFrame(rdd, mediaIdPayloadSchema)
+    })(Encoders.row(mediaIdPayloadSchema))
   }
 
   /** The audio fingerprint [[wavPayload]]'s clip realizes, closed-form
@@ -471,12 +467,10 @@ object MediaFixtures {
     * clips, one per input id — generated partition-wise.
     */
   def syntheticWavs(ids: DataFrame): DataFrame = {
-    val spark = ids.sparkSession
-    val rdd = ids.rdd.mapPartitions(_.map { r =>
+    ids.mapPartitions(_.map { r =>
       val id = r.getLong(0)
       Row(id, wavPayload(id))
-    })
-    spark.createDataFrame(rdd, mediaIdPayloadSchema)
+    })(Encoders.row(mediaIdPayloadSchema))
   }
 
   /** (media_id, payload) frame of OFFSET-re-encode pairs: ids pair up
@@ -498,8 +492,7 @@ object MediaFixtures {
     * family-specific frame 1.
     */
   def syntheticWavsShifted(ids: DataFrame): DataFrame = {
-    val spark = ids.sparkSession
-    val rdd = ids.rdd.mapPartitions(_.map { r =>
+    ids.mapPartitions(_.map { r =>
       val id = r.getLong(0)
       val fam = id / 2
       val base = fam * 5 // one afpTarget family seed per shift family
@@ -508,8 +501,7 @@ object MediaFixtures {
         else wavPayloadShifted(base,
           (1 + (fam % 3).toInt) * graft.operators.AudioFingerprint.AnchorHop)
       Row(id, payload)
-    })
-    spark.createDataFrame(rdd, mediaIdPayloadSchema)
+    })(Encoders.row(mediaIdPayloadSchema))
   }
 
   def payloadFor(id: Long): Array[Byte] = (id % 6) match {
@@ -530,11 +522,9 @@ object MediaFixtures {
     * driver-side materialization).
     */
   def syntheticContainers(ids: DataFrame): DataFrame = {
-    val spark = ids.sparkSession
-    val rdd = ids.rdd.mapPartitions(_.map { r =>
+    ids.mapPartitions(_.map { r =>
       val id = r.getLong(0)
       Row(id, payloadFor(id))
-    })
-    spark.createDataFrame(rdd, mediaIdPayloadSchema)
+    })(Encoders.row(mediaIdPayloadSchema))
   }
 }

@@ -60,22 +60,13 @@ object QueryCatalog {
     * (their sinks write eagerly at compile — concurrent runs on a shared
     * path would clobber each other mid-read), but UUID-fresh paths that
     * are never reclaimed accumulate unboundedly across harness/bench
-    * runs. One shutdown hook reaps everything registered; the returned
-    * frames stay readable for the whole session (deletion is at exit,
-    * never eager — many entries hand back LAZY frames over these paths).
+    * runs. Spark's shutdown hook reaps everything registered, after the
+    * SparkContext stops; the returned frames stay readable for the whole
+    * session (deletion is at exit, never eager — many entries hand back
+    * LAZY frames over these paths).
     */
-  private val scratchPaths = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  private lazy val scratchHook: Unit = {
-    def delete(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(delete))
-      f.delete(); ()
-    }
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      scratchPaths.forEach(p => delete(new java.io.File(p)))
-    }))
-  }
   private def cleanupAtExit(path: String): String = {
-    scratchHook; scratchPaths.add(path); path
+    org.apache.spark.sql.graft.ScratchDirs.deleteAtShutdown(new java.io.File(path)); path
   }
   private def scratchDir(prefix: String, sfDir: String): String =
     cleanupAtExit(s"/tmp/${prefix}_${sfDir.replaceAll("[^a-zA-Z0-9]", "_")}_" +

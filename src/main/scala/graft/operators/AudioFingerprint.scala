@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -281,15 +281,13 @@ object AudioFingerprint {
       idCol: String = "media_id",
       payloadCol: String = "payload"
   ): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media
+    media
       .select(col(idCol).cast("long"), col(payloadCol).cast("binary"))
-      .rdd.mapPartitions(_.flatMap { r =>
+      .mapPartitions(_.flatMap { r =>
         if (r.isNullAt(0) || r.isNullAt(1)) Iterator.empty
         else fingerprints(r.getAs[Array[Byte]](1))
           .map(h => Row(r.getLong(0), h)).iterator
-      })
-    spark.createDataFrame(rdd, sigSchema)
+      })(Encoders.row(sigSchema))
   }
 
   /** Near-dup pairs `(doc_a, doc_b, hamming)` at Hamming ≤ `maxHamming`

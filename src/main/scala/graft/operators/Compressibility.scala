@@ -2,7 +2,7 @@ package graft.operators
 
 import java.util.zip.Deflater
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.types._
 
 /** Compression-ratio quality signal: deflate each document's UTF-8 bytes
@@ -50,10 +50,8 @@ object Compressibility {
       idCol: String = "doc_id",
       level: Int = Deflater.DEFAULT_COMPRESSION
   ): DataFrame = {
-    val spark = docs.sparkSession
-    val rdd = docs
+    docs
       .select(idCol, textCol)
-      .rdd
       .mapPartitions { rows =>
         // One codec per partition, reused across documents and released
         // when the partition iterator drains (native zlib memory —
@@ -79,7 +77,6 @@ object Compressibility {
           }
           def next(): Row = mapped.next()
         }
-      }
-    spark.createDataFrame(rdd, schema)
+      }(Encoders.row(schema))
   }
 }

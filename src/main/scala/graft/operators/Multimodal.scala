@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -59,8 +59,8 @@ object Multimodal {
   /** Pure-expression payload metrics — anything derivable WITHOUT a codec
     * stays a codegen'd Column over the binary payload; only the actual
     * decode belongs in the partition-wise [[extractFeatures]] hook.
-    * (Routing these through the RDD hook forfeits whole-stage codegen and
-    * AQE for no reason.)
+    * (Routing these through the hook forfeits whole-stage codegen for no
+    * reason.)
     */
   def nBytes(payload: Column): Column = coalesce(octet_length(payload), lit(0)).cast(LongType)
 
@@ -78,10 +78,8 @@ object Multimodal {
     * deployment swaps ONLY the body of `decodeOne`.
     */
   def extractFeatures(media: DataFrame, batchSize: Int = 256): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media
+    media
       .select("media_id", "modality", "payload")
-      .rdd
       .mapPartitions { rows =>
         // One-time per-partition "codec init" happens here in a real decoder.
         rows.grouped(batchSize).flatMap { batch =>
@@ -93,8 +91,7 @@ object Multimodal {
             Row(id, modality, payload.length.toLong, checksum, hist.toSeq)
           }
         }
-      }
-    spark.createDataFrame(rdd, featureSchema)
+      }(Encoders.row(featureSchema))
   }
 
   /** Frame sampling over an opaque media payload: every `stride`-th
@@ -131,10 +128,8 @@ object Multimodal {
     * matching [[sampleFrames]] exactly (asserted in tests).
     */
   def sampleFramesDecoded(media: DataFrame, frameBytes: Int, stride: Int): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media
+    media
       .select("media_id", "payload")
-      .rdd
       .mapPartitions { rows =>
         // Real codecs initialize their decoder state here, once.
         rows.flatMap { r =>
@@ -145,8 +140,7 @@ object Multimodal {
             .map(i => Row(id, i, payload.slice(i * frameBytes, math.min((i + 1) * frameBytes, payload.length))))
             .filter(_.getAs[Array[Byte]](2).nonEmpty)
         }
-      }
-    spark.createDataFrame(rdd, frameSchema)
+      }(Encoders.row(frameSchema))
   }
 
   /** Resize metadata projection — the codec-free half of an image resize:
@@ -705,10 +699,8 @@ object Multimodal {
     * batch shape as [[decodeMedia]].
     */
   def containerMeta(media: DataFrame, batchSize: Int = 256): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media
+    media
       .select("media_id", "payload")
-      .rdd
       .mapPartitions { rows =>
         rows.grouped(batchSize).flatMap { batch =>
           batch.iterator.map { r =>
@@ -727,8 +719,7 @@ object Multimodal {
               meta.bitrateKbps.orNull, meta.sampleRate.orNull)
           }
         }
-      }
-    spark.createDataFrame(rdd, containerMetaSchema)
+      }(Encoders.row(containerMetaSchema))
   }
 
   /** Partition-wise REAL decode, dispatching on magic bytes: BMP (byte
@@ -739,10 +730,8 @@ object Multimodal {
     * one needed, would initialize once per partition).
     */
   def decodeMedia(media: DataFrame, batchSize: Int = 256): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media
+    media
       .select("media_id", "payload")
-      .rdd
       .mapPartitions { rows =>
         // ImageIO is headless-safe for decoding; pin it explicitly so a
         // misconfigured executor JVM never tries to touch a display, and
@@ -769,7 +758,6 @@ object Multimodal {
             }
           }
         }
-      }
-    spark.createDataFrame(rdd, decodedSchema)
+      }(Encoders.row(decodedSchema))
   }
 }

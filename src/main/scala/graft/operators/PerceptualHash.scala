@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -149,13 +149,11 @@ object PerceptualHash {
       idCol: String = "media_id",
       payloadCol: String = "payload"
   ): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col(idCol).cast("long"), col(payloadCol)).rdd
+    media.select(col(idCol).cast("long"), col(payloadCol))
       .mapPartitions(_.flatMap { r =>
         if (r.isNullAt(0) || r.isNullAt(1)) None
         else dhash(r.getAs[Array[Byte]](1)).map(h => Row(r.getLong(0), h))
-      })
-    spark.createDataFrame(rdd, sigSchema)
+      })(Encoders.row(sigSchema))
   }
 
   /** Near-duplicate image pairs: (doc_a, doc_b, hamming) with

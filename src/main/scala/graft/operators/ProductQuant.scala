@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.VectorExpressions
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** Product quantization (PQ) for approximate nearest neighbors — the
   * memory shape that makes 100 TB-scale ANN feasible (Jégou, Douze,
@@ -246,17 +247,18 @@ object ProductQuant {
     // per-mi top-ks runs as a window over the ≤ P·m·ks partial winners.
     // Winner sets are identical (same per-mi ks-smallest-hash criterion;
     // ties across equal 64-bit hashes were already selection-ambiguous
-    // in the TakeOrdered form). `.rdd` here is safe from the AQE
-    // double-execution hazard: `hashed` is scan+filter+project,
-    // exchange-free by construction.
+    // in the TakeOrdered form).
     val seedIds = {
       val mLoc = m
       val ksLoc = ks
       val hashed = rawBase.select(
         col("id") +: (0 until m).map(mi =>
           xxhash64(col("id"), lit(mi)).as(s"__h$mi")): _*)
-      val idType = hashed.schema("id").dataType
-      val partial = hashed.rdd.mapPartitions { it =>
+      val candSchema = StructType(Seq(
+        StructField("mi", IntegerType, nullable = false),
+        StructField("id", hashed.schema("id").dataType),
+        StructField("__h", LongType, nullable = false)))
+      val cand = hashed.mapPartitions { it =>
         // Max-heaps of (h, id) by h: the root is the worst survivor, so
         // a smaller incoming hash evicts it; equal hashes keep the
         // earlier arrival (scan order — deterministic for a fixed input).
@@ -275,18 +277,9 @@ object ProductQuant {
           }
         }
         heaps.iterator.zipWithIndex.flatMap { case (hp, mi) =>
-          hp.iterator.map { case (h, id) =>
-            org.apache.spark.sql.Row(mi, id, h)
-          }
+          hp.iterator.map { case (h, id) => Row(mi, id, h) }
         }
-      }
-      import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
-      val cand = corpus.sparkSession.createDataFrame(
-        partial,
-        StructType(Seq(
-          StructField("mi", IntegerType, nullable = false),
-          StructField("id", idType),
-          StructField("__h", LongType, nullable = false))))
+      }(Encoders.row(candSchema))
       val wSeed = Window.partitionBy("mi").orderBy("__h")
       cand.withColumn("__rn", row_number().over(wSeed))
         .filter(col("__rn") <= ks).drop("__rn")

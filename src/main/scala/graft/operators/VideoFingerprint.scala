@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -48,18 +48,17 @@ object VideoFingerprint {
   ): DataFrame = {
     require(frameBytes > 0, s"frameBytes must be positive, got $frameBytes")
     require(stride > 0, s"stride must be positive, got $stride")
-    val spark = media.sparkSession
     val frames = Multimodal.sampleFrames(
       media.select(col(idCol).cast("long").as("media_id"),
         col(payloadCol).cast("binary").as("payload")),
       frameBytes, stride)
-    val rdd = frames.select("media_id", "frame_bytes")
-      .rdd.mapPartitions(_.flatMap { r =>
+    frames.select("media_id", "frame_bytes")
+      .mapPartitions(_.flatMap { r =>
         if (r.isNullAt(0) || r.isNullAt(1)) Iterator.empty
         else PerceptualHash.dhash(r.getAs[Array[Byte]](1))
           .map(h => Row(r.getLong(0), h)).iterator
-      })
-    spark.createDataFrame(rdd, sigSchema).dropDuplicates("media_id", "vfp")
+      })(Encoders.row(sigSchema))
+      .dropDuplicates("media_id", "vfp")
   }
 
   /** The DISTINCT sorted per-frame signature set of ONE clip payload —

@@ -1,6 +1,8 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.SubqueryExpression
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, LogicalPlan, Project}
 import org.apache.spark.sql.functions.col
 
 /** Floor a frame's parallelism at the session's default parallelism —
@@ -11,14 +13,12 @@ import org.apache.spark.sql.functions.col
   * corpus-scale scan already has orders of magnitude more splits than
   * cores and must NOT pay an extra exchange.
   *
-  * PRECONDITION — scan-level inputs only, and it is now enforced: the
-  * partition-count read goes through `df.rdd`, which on an
-  * exchange-bearing plan under AQE would eagerly execute the upstream
-  * shuffle stages as real jobs and then re-execute that lineage in the
-  * caller (double execution). The guard below therefore leaves any plan
-  * containing an Exchange untouched instead of probing it — every
-  * intended call site is a scan+filter+project subtree, where `.rdd`
-  * is plan-assembly only (no job). The repartition, when it fires,
+  * Scan-level inputs only: the guard reads the frame's analyzed plan,
+  * which exists once the frame is built, and floors only a plan whose
+  * every node is a leaf relation, a `Project` or a `Filter`, with no
+  * subquery. For such a plan `.rdd.getNumPartitions` builds an RDD and
+  * runs no job. Any other plan (an aggregate, a join, an exchange) comes
+  * back unchanged and unplanned. The repartition, when it fires,
   * hashes on `key` — a plain hash exchange, no round-robin pre-sort,
   * deterministic row placement.
   *
@@ -35,11 +35,14 @@ object ParallelFloor {
 
   def apply(df: DataFrame, key: Column): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
-    val hasExchange = df.queryExecution.sparkPlan.collectFirst {
-      case e: org.apache.spark.sql.execution.exchange.Exchange => e
-    }.isDefined
-    if (hasExchange) df
+    if (!scanLevel(df.queryExecution.analyzed)) df
     else if (df.rdd.getNumPartitions >= target) df
     else df.repartition(target, key)
+  }
+
+  private def scanLevel(plan: LogicalPlan): Boolean = !plan.exists {
+    case n @ (_: LeafNode | _: Project | _: Filter) =>
+      n.expressions.exists(SubqueryExpression.hasSubquery)
+    case _ => true
   }
 }

@@ -197,11 +197,8 @@ object PredicateFrames {
         val meas = spark.read.parquet(s"$path/dynamic_measurements_df.parquet")
         val out = fromEsgpt(
           subjects, events, meas, esgptValueColumns(spark, path, predicates), predicates)
-        val staging = graft.GraftConf.EsgptStaging(spark).getOrElse {
-          val d = java.nio.file.Files.createTempDirectory("graft_esgpt_").toFile
-          org.apache.spark.sql.graft.ScratchDirs.deleteAtShutdown(d)
-          d.toString
-        }
+        val staging = graft.GraftConf.EsgptStaging(spark).getOrElse(
+          org.apache.spark.sql.graft.ScratchDirs.create("graft_esgpt_"))
         // Unique dir per CALL: a shared dir keyed on inputs alone would be
         // rewritten by a later load (other predicates, refreshed dataset)
         // underneath an earlier call's still-live lazy frame.

@@ -484,7 +484,7 @@ object PlanAudit {
     // serving floor.
     // Persisted index (the serving shape): attrs are stored parquet
     // columns, so the predicate audits as a Filter above the codes scan.
-    val fDir = java.nio.file.Files.createTempDirectory("audit-ivfpq-f").toString
+    val fDir = org.apache.spark.sql.graft.ScratchDirs.create("audit-ivfpq-f")
     graft.operators.ProductQuant.ivfPqIndex(
       embT.withColumn("cat", (col("vec_id") % 5).cast("int")),
       nlist = 4, m = 8, ks = 8, refineIters = 1, attrCols = Seq("cat")).save(fDir)
@@ -627,7 +627,7 @@ object PlanAudit {
     // FileSourceScan, or a 100 TB index would be read wholesale per probe.
     val bmDocs = docsT.withColumn(
       "text", concat_ws(" ", col("source"), col("lang")))
-    val bmIdxDir = java.nio.file.Files.createTempDirectory("pa_bm25").toString + "/idx"
+    val bmIdxDir = org.apache.spark.sql.graft.ScratchDirs.create("pa_bm25") + "/idx"
     graft.operators.Retrieval.appendIndex(
       bmDocs.filter(col("doc_id") % 2 === 0), bmIdxDir, "0", buckets = 16)
     graft.operators.Retrieval.appendIndex(

@@ -92,7 +92,7 @@ object RecallProbe {
     // frame (the fit-once/serve-many loop; bit-parity with the one-shot
     // path is asserted in ExtensionsSpec, so this measures the same
     // operating point through the serving API).
-    val idxDir = java.nio.file.Files.createTempDirectory("recall-ivfpq-idx").toString
+    val idxDir = org.apache.spark.sql.graft.ScratchDirs.create("recall-ivfpq-idx")
     ProductQuant.ivfPqIndex(cFrame, nlist = 16, m = 16, ks = 32).save(idxDir)
     val ivfPqIdxRecall = recall(
       pairs(ProductQuant.ivfPqTopK(

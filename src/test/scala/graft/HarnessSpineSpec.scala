@@ -12,7 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * Streaming state machines stay on one core each: a new near-dup stream
   * goes through `StreamingPredicates.bandedPairStream`. Session settings
   * stay in one registry, [[GraftConf]], and lineage cuts in one place,
-  * [[graft.plans.Materialize]].
+  * [[graft.plans.Materialize]]. Per-partition passes stay in the plan
+  * (`Dataset.mapPartitions`), and scratch dirs are deleted by Spark's
+  * shutdown hook through `ScratchDirs`.
   */
 class HarnessSpineSpec extends AnyFunSuite {
 
@@ -49,5 +51,17 @@ class HarnessSpineSpec extends AnyFunSuite {
   test("localCheckpoint( and .checkpoint( appear only in Materialize") {
     val cuts = count("""localCheckpoint\(|\.checkpoint\(""")
     assert(cuts.keySet.subsetOf(Set("Materialize.scala")), s"lineage cuts outside Materialize: $cuts")
+  }
+
+  test(".rdd appears only in Materialize, QualityClassifier and ParallelFloor") {
+    // The cut's handle, the classifier fit's treeAggregate, and the
+    // partition count of a scan-level input.
+    val rdds = count("""\.rdd\b""")
+    assert(rdds.keySet.subsetOf(Set("Materialize.scala", "QualityClassifier.scala", "ParallelFloor.scala")),
+      s".rdd outside the three allowed files: $rdds")
+  }
+
+  test("addShutdownHook appears nowhere") {
+    assert(count("addShutdownHook").isEmpty)
   }
 }
