@@ -40,8 +40,8 @@ object Bench {
 
     // Best of 2 runs per query, ESCALATING to best of 5 under contention:
     // the minimum is the standard noise-robust estimator and every run is
-    // a full end-to-end execution (no cross-run caches — Query releases
-    // its own), but contended runs can all be slow (BENCH_r07 recorded
+    // a full end-to-end execution (no cross-run caches — Query caches
+    // nothing), but contended runs can all be slow (BENCH_r07 recorded
     // 6-12x phantom regressions at loadavg 10+, and BENCH_r09 shipped a
     // 66.9 s ivfpq outlier next to a 10.5 s minimum). So sampling
     // continues — up to best of 5 — while the samples still contain an

@@ -28,6 +28,10 @@ object GraftConf {
     def apply(spark: SparkSession): T = spark.conf.getOption(key).fold(default)(parse(key, _))
   }
 
+  /** Read only by [[graft.plans.Materialize]], whose cuts belong to the
+    * dedup, curation, retrieval and fit operators. [[graft.Query]] makes no
+    * cut, so an ACES run is the same plan under every value.
+    */
   val Checkpoint = new Entry[String]("spark.graft.checkpoint", "local",
     "lineage cuts: `local` (localCheckpoint), `reliable` (checkpoint to `checkpoint.dir`) or `off`",
     { (key, v) =>

@@ -6,7 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.config.TaskConfig
 import graft.operators.Constraints
-import graft.plans.{Materialize, WindowTree}
+import graft.plans.WindowTree
 
 /** Task-query orchestration: static / null-key filter → window tree
   * ([[WindowTree]]) → label / index-timestamp projection.
@@ -14,22 +14,17 @@ import graft.plans.{Materialize, WindowTree}
   */
 object Query {
 
-  /** Run a task query over a canonical predicates frame.
+  /** A task query over a canonical predicates frame, as a plan.
     *
-    * Under `spark.graft.checkpoint=local|reliable` (the default is local)
-    * the result is materialized before this returns; nothing else is
-    * persisted, and a failing query leaves nothing persisted. Under `off`
-    * the result is a lazy plan: every action re-runs the whole query —
-    * cache it yourself if you act on it more than once. Either way the
-    * window tree is one sorted pass per subject ([[WindowTree]]), so the
-    * input is read once.
+    * Nothing runs and nothing is persisted here: the result is a lazy plan
+    * (the window tree is one sorted pass per subject, [[WindowTree]], so
+    * the input is read once per action). A caller that acts on it more
+    * than once caches it, or writes it and reads the copy back. (The
+    * reference returns a computed frame only because Polars is eager,
+    * query.py:142-151.)
     */
-  def apply(cfg: TaskConfig, predicatesDf: DataFrame): DataFrame = {
-    val realized = WindowTree(cfg.windowTree, cfg.trigger.predicate, canonicalRows(cfg, predicatesDf))
-    // Mirrors the reference's eager execution (query() returns a computed
-    // frame, query.py:142-151).
-    Materialize(project(cfg, realized))
-  }
+  def apply(cfg: TaskConfig, predicatesDf: DataFrame): DataFrame =
+    project(cfg, WindowTree(cfg.windowTree, cfg.trigger.predicate, canonicalRows(cfg, predicatesDf)))
 
   /** Static-demographics filter, then rows with a subject and a timestamp
     * (reference: query.py:121-127).

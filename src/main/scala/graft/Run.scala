@@ -202,12 +202,15 @@ object Run {
     }
 
     def runOne(path: String, out: String, shard: Option[String] = None): Long = {
-      val result = Query(cfg, PredicateFrames.finalize(cfg, loadPlain(path)))
-      opts.get("window-stats").foreach { dir =>
-        // Per-shard runs each get their own stats subdirectory; a shared
-        // mode("overwrite") target would keep only the last shard's stats.
+      val query = Query(cfg, PredicateFrames.finalize(cfg, loadPlain(path)))
+      // With stats, the query runs once: into the stats parquet, which the
+      // labels are then read from. Per-shard runs each get their own stats
+      // subdirectory; a shared mode("overwrite") target would keep only the
+      // last shard's stats.
+      val result = opts.get("window-stats").fold(query) { dir =>
         val statsDir = shard.fold(dir)(s => s"$dir/$s")
-        result.write.mode("overwrite").parquet(statsDir)
+        query.write.mode("overwrite").parquet(statsDir)
+        spark.read.parquet(statsDir)
       }
       val coerced = if (standard == "meds") Query.toMedsLabels(result) else result
       coerced.write.mode("overwrite").parquet(out)

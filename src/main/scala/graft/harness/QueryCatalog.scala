@@ -5831,73 +5831,64 @@ object QueryCatalog {
     }, None, bench = true, warmup = true)
   )
 
-  /** The flagship cohort query (same shape as the reference's in-hospital
-    * mortality task) on the events table.
+  /** The flagship cohort task (same shape as the reference's in-hospital
+    * mortality task) over the events table's codes.
     */
-  def flagship(s: SparkSession, dir: String): DataFrame = {
-    val yaml =
-      """predicates:
-        |  click: { code: click }
-        |  purchase: { code: purchase }
-        |  error: { code: error }
-        |  signup: { code: signup }
-        |  converted: { expr: "or(purchase, signup)" }
-        |trigger: click
-        |windows:
-        |  input:
-        |    start: NULL
-        |    end: trigger + 24h
-        |    start_inclusive: True
-        |    end_inclusive: True
-        |    has: { _ANY_EVENT: "(2, None)" }
-        |    index_timestamp: end
-        |  gap:
-        |    start: trigger
-        |    end: start + 48h
-        |    start_inclusive: False
-        |    end_inclusive: True
-        |    has: { error: "(None, 0)" }
-        |  target:
-        |    start: gap.end
-        |    end: start -> converted
-        |    start_inclusive: False
-        |    end_inclusive: True
-        |    label: purchase
-        |""".stripMargin
-    val cfg = graft.config.TaskConfig.fromYaml(yaml)
-    val ev = Tables.events(s, dir).select(
-      col("user_id").as("subject_id"),
-      col("ts").as("timestamp"),
-      col("event_type").as("code"),
-      col("value").cast("float").as("numeric_value"))
-    val plain = graft.sources.PredicateFrames.fromMeds(ev, cfg.plainPredicates.toSeq)
-    val frame = graft.sources.PredicateFrames.finalize(cfg, plain)
-    graft.Query(cfg, frame)
-  }
+  private[graft] val flagshipYaml =
+    """predicates:
+      |  click: { code: click }
+      |  purchase: { code: purchase }
+      |  error: { code: error }
+      |  signup: { code: signup }
+      |  converted: { expr: "or(purchase, signup)" }
+      |trigger: click
+      |windows:
+      |  input:
+      |    start: NULL
+      |    end: trigger + 24h
+      |    start_inclusive: True
+      |    end_inclusive: True
+      |    has: { _ANY_EVENT: "(2, None)" }
+      |    index_timestamp: end
+      |  gap:
+      |    start: trigger
+      |    end: start + 48h
+      |    start_inclusive: False
+      |    end_inclusive: True
+      |    has: { error: "(None, 0)" }
+      |  target:
+      |    start: gap.end
+      |    end: start -> converted
+      |    start_inclusive: False
+      |    end_inclusive: True
+      |    label: purchase
+      |""".stripMargin
 
   /** Second cohort task: backward event bound (`end <- click`) + temporal
     * label window — exercises bound_to_row and index-from-bound-timestamp.
     */
-  def readmission(s: SparkSession, dir: String): DataFrame = {
-    val yaml =
-      """predicates:
-        |  click: { code: click }
-        |  purchase: { code: purchase }
-        |trigger: purchase
-        |windows:
-        |  input:
-        |    start: end <- click
-        |    end: trigger
-        |    start_inclusive: True
-        |    end_inclusive: True
-        |    index_timestamp: start
-        |  target:
-        |    start: trigger
-        |    end: start + 30 days
-        |    start_inclusive: False
-        |    end_inclusive: True
-        |    label: click
-        |""".stripMargin
+  private val readmissionYaml =
+    """predicates:
+      |  click: { code: click }
+      |  purchase: { code: purchase }
+      |trigger: purchase
+      |windows:
+      |  input:
+      |    start: end <- click
+      |    end: trigger
+      |    start_inclusive: True
+      |    end_inclusive: True
+      |    index_timestamp: start
+      |  target:
+      |    start: trigger
+      |    end: start + 30 days
+      |    start_inclusive: False
+      |    end_inclusive: True
+      |    label: click
+      |""".stripMargin
+
+  /** The task in `yaml` over the events table read as MEDS rows. */
+  private def cohort(yaml: String, s: SparkSession, dir: String): DataFrame = {
     val cfg = graft.config.TaskConfig.fromYaml(yaml)
     val ev = Tables.events(s, dir).select(
       col("user_id").as("subject_id"),
@@ -5905,9 +5896,12 @@ object QueryCatalog {
       col("event_type").as("code"),
       col("value").cast("float").as("numeric_value"))
     val plain = graft.sources.PredicateFrames.fromMeds(ev, cfg.plainPredicates.toSeq)
-    val frame = graft.sources.PredicateFrames.finalize(cfg, plain)
-    graft.Query(cfg, frame)
+    graft.Query(cfg, graft.sources.PredicateFrames.finalize(cfg, plain))
   }
+
+  def flagship(s: SparkSession, dir: String): DataFrame = cohort(flagshipYaml, s, dir)
+
+  def readmission(s: SparkSession, dir: String): DataFrame = cohort(readmissionYaml, s, dir)
 
   /** Driver-gate surface for the streaming family: each entry replays a
     * bounded, DETERMINISTIC shard sequence from the sf-dir tables

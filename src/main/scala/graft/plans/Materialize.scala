@@ -5,9 +5,10 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Lineage-cut points: a frame that several later plans read (an
-  * iterative dedup round, a fitted index, a query result) is computed once,
+  * iterative dedup round, a fitted index, a curation shard) is computed once,
   * where it is cut, and read back from storage, instead of every consumer
-  * re-running and re-analysing its whole lineage.
+  * re-running and re-analysing its whole lineage. The ACES path
+  * ([[graft.Query]]) makes no cut: its result is a plan its caller runs.
   *
   * Mode is the frame's session's [[graft.GraftConf.Checkpoint]]:
   *

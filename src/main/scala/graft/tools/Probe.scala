@@ -22,7 +22,7 @@ import graft.harness.QueryCatalog
   *                 the min, so warm-up decay stays visible
   *   --conf k=v    session conf set at build time (repeatable) — A/B one
   *                 setting across two invocations, e.g.
-  *                 `--conf spark.graft.checkpoint=off` on aces_flagship
+  *                 `--conf spark.graft.checkpoint=off` on dedup_minhash
   *   --stages      per-stage wall, task time, GC and shuffle bytes of the
   *                 last run (`--runs 3 --stages` = two warm runs, then the
   *                 instrumented one)

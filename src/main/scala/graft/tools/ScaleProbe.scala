@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Sessions
 import graft.config.TaskConfig
+import graft.harness.QueryCatalog
 import graft.sources.{PredicateFrames, Tables}
 
 /** Throughput scaling probe: replicates the sf0.1 events table N× (users
@@ -13,9 +14,7 @@ import graft.sources.{PredicateFrames, Tables}
   * 36 cores, BASELINE.md). At small SF the engine is stage-overhead-bound;
   * this shows what amortizes at scale. Temporary inputs go to /tmp.
   *
-  * Args: [replication] [--no-checkpoint] [--stages] [--skew] [--runs N]
-  *       [--bucketed]
-  *   --no-checkpoint  spark.graft.checkpoint=off: Query returns a lazy plan
+  * Args: [replication] [--stages] [--skew] [--runs N] [--bucketed]
   *   --stages         per-stage breakdown of the timed runs (Probe.StageLog)
   *   --skew           inject a pathological subject owning ~10% of events
   *   --runs N         timed end-to-end runs (default 3); reports median
@@ -27,7 +26,6 @@ import graft.sources.{PredicateFrames, Tables}
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val replication = args.find(!_.startsWith("--")).map(_.toInt).getOrElse(32)
-    val noCheckpoint = args.contains("--no-checkpoint")
     val printStages = args.contains("--stages")
     val skew = args.contains("--skew")
     val nRuns = args.sliding(2).collectFirst {
@@ -67,8 +65,7 @@ object ScaleProbe {
       out.repartition(64).write.mode("overwrite").parquet(scaled)
     }
 
-    val cfg = TaskConfig.fromYaml(flagshipYaml)
-    spark.conf.set(graft.GraftConf.Checkpoint.key, if (noCheckpoint) "off" else "local")
+    val cfg = TaskConfig.fromYaml(QueryCatalog.flagshipYaml)
 
     val stageLog = new Probe.StageLog
     if (printStages) spark.sparkContext.addSparkListener(stageLog)
@@ -113,47 +110,16 @@ object ScaleProbe {
     heapPools.foreach(_.resetPeakUsage())
     stageLog.recording = printStages
     // Median of N: this box is shared and same-config runs vary ±50%; every
-    // run is a full end-to-end execution (Query releases its own caches).
+    // run is a full end-to-end execution (Query caches nothing).
     val timed = (1 to nRuns).map(_ => run())
     val rows = timed.head._1
     val sorted = timed.map(_._2).sorted
     val secs = sorted(sorted.length / 2)
     val peakHeapMb = heapPools.map(p => Option(p.getPeakUsage).map(_.getUsed).getOrElse(0L)).sum >> 20
-    println(f"[scale-probe] replication=${replication}x skew=$skew checkpoint=${!noCheckpoint} " +
-      f"bucketed=$bucketed " +
+    println(f"[scale-probe] replication=${replication}x skew=$skew bucketed=$bucketed " +
       f"rows=$rows wall=${secs}%.1f s (median of $nRuns: ${sorted.map(s => f"$s%.1f").mkString("/")}) " +
       f"throughput=${rows / secs / 1e6}%.3f M rows/s peakHeap=${peakHeapMb} MB")
     if (printStages) stageLog.report("[scale-probe]")
     spark.stop()
   }
-
-  private val flagshipYaml =
-    """predicates:
-      |  click: { code: click }
-      |  purchase: { code: purchase }
-      |  error: { code: error }
-      |  signup: { code: signup }
-      |  converted: { expr: "or(purchase, signup)" }
-      |trigger: click
-      |windows:
-      |  input:
-      |    start: NULL
-      |    end: trigger + 24h
-      |    start_inclusive: True
-      |    end_inclusive: True
-      |    has: { _ANY_EVENT: "(2, None)" }
-      |    index_timestamp: end
-      |  gap:
-      |    start: trigger
-      |    end: start + 48h
-      |    start_inclusive: False
-      |    end_inclusive: True
-      |    has: { error: "(None, 0)" }
-      |  target:
-      |    start: gap.end
-      |    end: start -> converted
-      |    start_inclusive: False
-      |    end_inclusive: True
-      |    label: purchase
-      |""".stripMargin
 }

@@ -136,7 +136,6 @@ class EndToEndSpec extends SparkSpec {
       spark, csvPath.toString, plainNames, Some("M/d/yyyy H:mm"))
     val predsDf = PredicateFrames.finalize(cfg, plainDf)
 
-    spark.conf.set("spark.graft.checkpoint", "off")
     val result = Query(cfg, predsDf).cache()
 
     assert(result.count() == 1)
@@ -182,31 +181,6 @@ class EndToEndSpec extends SparkSpec {
     assert(result.columns.toSeq == Seq(
       "subject_id", "index_timestamp", "label", "trigger",
       "input.end_summary", "input.start_summary", "gap.end_summary", "target.end_summary"))
-
-    spark.conf.unset("spark.graft.checkpoint")
-  }
-
-  test("flagship identical under local and reliable checkpoint modes") {
-    val cfg = TaskConfig.fromYaml(taskYaml)
-    val csvPath = Files.createTempFile("graft_e2e3", ".csv")
-    Files.writeString(csvPath, predicatesCsv)
-    val plainDf = PredicateFrames.directLoad(
-      spark, csvPath.toString, cfg.plainPredicates.keys.toSeq, Some("M/d/yyyy H:mm"))
-    val predsDf = PredicateFrames.finalize(cfg, plainDf).cache()
-
-    spark.conf.set("spark.graft.checkpoint", "local")
-    val local = snap(Query(cfg, predsDf))
-    val dir = Files.createTempDirectory("graft-e2e-ckpt")
-    spark.conf.set("spark.graft.checkpoint", "reliable")
-    spark.conf.set("spark.graft.checkpoint.dir", dir.toString)
-    val reliable =
-      try snap(Query(cfg, predsDf))
-      finally {
-        spark.conf.unset("spark.graft.checkpoint")
-        spark.conf.unset("spark.graft.checkpoint.dir")
-        deleteTree(dir)
-      }
-    assert(local.nonEmpty && local == reliable)
   }
 
   test("query is idempotent (tests/test_extract_subtree_idempotency.py)") {
@@ -217,10 +191,8 @@ class EndToEndSpec extends SparkSpec {
       spark, csvPath.toString, cfg.plainPredicates.keys.toSeq, Some("M/d/yyyy H:mm"))
     val predsDf = PredicateFrames.finalize(cfg, plainDf).cache()
 
-    spark.conf.set("spark.graft.checkpoint", "off")
     val r1 = Query(cfg, predsDf).collect()
     val r2 = Query(cfg, predsDf).collect()
     assert(r1.toSeq == r2.toSeq)
-    spark.conf.unset("spark.graft.checkpoint")
   }
 }

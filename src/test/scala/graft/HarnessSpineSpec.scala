@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * Streaming state machines stay on one core each: a new near-dup stream
   * goes through `StreamingPredicates.bandedPairStream`. Session settings
   * stay in one registry, [[GraftConf]], and lineage cuts in one place,
-  * [[graft.plans.Materialize]]. Per-partition passes stay in the plan
+  * [[graft.plans.Materialize]], which the ACES path ([[Query]],
+  * `plans/WindowTree`) does not call. Per-partition passes stay in the plan
   * (`Dataset.mapPartitions`), and scratch dirs are deleted by Spark's
   * shutdown hook through `ScratchDirs`.
   */
@@ -59,6 +60,14 @@ class HarnessSpineSpec extends AnyFunSuite {
     val rdds = count("""\.rdd\b""")
     assert(rdds.keySet.subsetOf(Set("Materialize.scala", "QualityClassifier.scala", "ParallelFloor.scala")),
       s".rdd outside the three allowed files: $rdds")
+  }
+
+  test("Query and WindowTree mention neither Materialize nor GraftConf") {
+    // The ACES path returns a plan: no lineage cut, no session setting.
+    val files = Set("Query.scala", "WindowTree.scala")
+    assert(files.subsetOf(sources.map(_._1).toSet))
+    val mentions = count("Materialize|GraftConf").filter { case (f, _) => files(f) }
+    assert(mentions.isEmpty, s"mentions: $mentions")
   }
 
   test("addShutdownHook appears nowhere") {

@@ -93,13 +93,17 @@ class RunSpec extends SparkSpec {
         |    index_timestamp: end
         |""".stripMargin)
 
-    val outDir = dir.resolve("out").toString
-    Run.main(Array(
+    def run(out: String, extra: String*): Unit = Run.main(Array(
       "--config", yaml.toString,
       "--data", dir.resolve("data").toString,
       "--standard", "meds",
       "--shard-mode", "per-shard",
-      "--output", outDir))
+      "--output", out) ++ extra)
+    val outDir = dir.resolve("out").toString
+    run(outDir)
+    val statsDir = dir.resolve("stats").toString
+    val statsOut = dir.resolve("out_stats").toString
+    run(statsOut, "--window-stats", statsDir)
 
     assert(Run.expandShards(dir.resolve("data").toString).map(_._1) ==
       Seq("train/0", "train/1"))
@@ -109,5 +113,19 @@ class RunSpec extends SparkSpec {
     assert(s1.select("subject_id").distinct().collect().map(_.getLong(0)).toSet == Set(2L))
     assert(s0.filter(col("boolean_value")).count() == 1) // subj 1 purchased in window
     assert(s1.filter(col("boolean_value")).count() == 0)
+
+    // --window-stats: each shard's stats are that shard's Query rows and
+    // columns, and its labels are those of the run without stats.
+    val cfg = graft.config.TaskConfig.fromYaml(Files.readString(yaml))
+    Seq("train/0", "train/1").foreach { shard =>
+      val events = spark.read.parquet(dir.resolve(s"data/$shard.parquet").toString)
+      val query = Query(cfg, graft.sources.PredicateFrames.finalize(cfg,
+        graft.sources.PredicateFrames.fromMeds(events, cfg.plainPredicates.toSeq)))
+      val stats = spark.read.parquet(s"$statsDir/$shard")
+      assert(stats.columns.toSeq == query.columns.toSeq, shard)
+      assert(snap(stats).nonEmpty && snap(stats) == snap(query), shard)
+      assert(snap(spark.read.parquet(s"$statsOut/$shard.parquet")) ==
+        snap(spark.read.parquet(s"$outDir/$shard.parquet")), shard)
+    }
   }
 }

@@ -226,12 +226,8 @@ class StreamingSpec extends SparkSpec {
       .withColumn("time", to_timestamp(col("time")))
     val preds = graft.sources.PredicateFrames.finalize(
       cfg, graft.sources.PredicateFrames.fromMeds(medsDf, cfg.plainPredicates.toSeq))
-    spark.conf.set("spark.graft.checkpoint", "off")
-    val (batchRows, batchLabels) =
-      try {
-        val batchOut = Query(cfg, preds)
-        (cohortCounts(batchOut), labelSurface(batchOut))
-      } finally spark.conf.unset("spark.graft.checkpoint")
+    val batchOut = Query(cfg, preds)
+    val (batchRows, batchLabels) = (cohortCounts(batchOut), labelSurface(batchOut))
 
     // Streaming side: same data through cohortWindows over the task's own
     // tree, flush events to push the watermark past every deadline + a

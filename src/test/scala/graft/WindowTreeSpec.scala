@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.rng.Seed
@@ -14,47 +14,28 @@ import graft.sources.PredicateFrames
 /** The per-subject window-tree kernel ([[WindowTree]], behind [[Query]])
   * against the relational oracle ([[ExtractSubtree]]: one window pass and
   * anchor join per tree edge) on generated task configs, trees and
-  * frames ([[WindowTreeGen]]), under `spark.graft.checkpoint=local`,
-  * `reliable` and `off`.
+  * frames ([[WindowTreeGen]]).
   */
 class WindowTreeSpec extends SparkSpec {
 
   // ---- comparison ---------------------------------------------------------
 
-  private lazy val checkpointDir = java.nio.file.Files.createTempDirectory("graft-windowtree-ckpt")
-
-  /** One session per checkpoint mode (`Materialize` reads the mode from a
-    * frame's own session), so parallel property workers never race on a
-    * shared conf. `reliable` checkpoints under a temp dir of this spec.
-    */
-  private lazy val sessions: Seq[(String, SparkSession)] = Seq("local", "reliable", "off").map { mode =>
-    val s = spark.newSession()
-    s.conf.set("spark.graft.checkpoint", mode)
-    s.conf.set("spark.graft.checkpoint.dir", checkpointDir.toString)
-    mode -> s
-  }
-
-  override def afterAll(): Unit = try deleteTree(checkpointDir) finally super.afterAll()
-
   private val realized = new java.util.concurrent.atomic.AtomicInteger
 
-  /** Every kernel result equals the oracle's in schema and rows. */
-  private def agree(kernel: Seq[(String, DataFrame)], oracle: DataFrame): Prop = {
+  /** The kernel's result equals the oracle's in schema and rows. */
+  private def agree(got: DataFrame, oracle: DataFrame): Prop = {
     val want = snap(oracle)
     if (want.nonEmpty) realized.incrementAndGet()
-    Prop.all(kernel.map { case (mode, got) =>
-      val g = snap(got)
-      Prop(got.schema.simpleString == oracle.schema.simpleString && g == want) :|
-        s"checkpoint=$mode: ${got.schema.simpleString}\nkernel:\n${g.mkString("\n")}\n" +
-        s"oracle: ${oracle.schema.simpleString}\n${want.mkString("\n")}"
-    }: _*)
+    val g = snap(got)
+    Prop(got.schema.simpleString == oracle.schema.simpleString && g == want) :|
+      s"kernel: ${got.schema.simpleString}\n${g.mkString("\n")}\n" +
+      s"oracle: ${oracle.schema.simpleString}\n${want.mkString("\n")}"
   }
 
   private def queryAgrees(yaml: String, rows: Seq[Ev]): Prop = {
     val cfg = TaskConfig.fromYaml(yaml)
-    val preds = sessions.map { case (mode, s) => mode -> PredicateFrames.finalize(cfg, toDf(s, rows)) }
-    agree(preds.map { case (mode, df) => mode -> Query(cfg, df) }, ExtractSubtree.query(cfg, preds.head._2)) :|
-      yaml
+    val preds = PredicateFrames.finalize(cfg, toDf(spark, rows))
+    agree(Query(cfg, preds), ExtractSubtree.query(cfg, preds)) :| yaml
   }
 
   private def treeAgrees(tree: WindowNode, rows: Seq[Ev]): Prop = {
@@ -63,7 +44,7 @@ class WindowTreeSpec extends SparkSpec {
       .select(col("subject_id"), col("timestamp").as("subtree_anchor_timestamp"))
     val got = WindowTree(tree, "pA", df)
     val want = ExtractSubtree(tree, anchors, df).withColumnRenamed("subtree_anchor_timestamp", "trigger")
-    agree(Seq("any" -> got), want.select(got.columns.map(c => col(s"`$c`")).toSeq: _*)) :|
+    agree(got, want.select(got.columns.map(c => col(s"`$c`")).toSeq: _*)) :|
       tree.toString
   }
 
@@ -78,7 +59,7 @@ class WindowTreeSpec extends SparkSpec {
     assert(realized.get >= cases / 4, s"only ${realized.get} of $cases cases realized a row")
   }
 
-  test("Query under checkpoint=local and off matches the relational oracle on generated tasks") {
+  test("Query matches the relational oracle on generated tasks") {
     check(200)(Prop.forAllNoShrink(yamlGen, framesGen)(queryAgrees))
   }
 
